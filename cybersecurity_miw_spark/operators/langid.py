@@ -334,7 +334,7 @@ def normalize_expr(low: Column) -> Column:
 # detect_language assembles its projections from these instead of the
 # Column forms: the gate alone is ~11 regexp_counts referenced through
 # ~40 binary ops, and building it Column-by-Column costs ~0.12 s of
-# py4j round-trips per call (the lsh_bands/with_signature construction
+# py4j round-trips per call (the lsh_bands name-form construction
 # lesson — OPTIMIZATION_r18 finding 6). One parsed string is ~1 ms and
 # yields the same expression tree. The character classes are LITERAL
 # unicode endpoints (no backslashes, no quotes — see _cls), so

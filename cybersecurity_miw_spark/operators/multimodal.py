@@ -183,7 +183,7 @@ def with_phash(
         F.octet_length(F.col(payload_col)).cast("int").alias("_n"),
     )
     # expr strings parse JVM-side in one round trip (the
-    # with_signature lesson); conv(hex(byte)) is the binary-safe
+    # lsh_bands lesson); conv(hex(byte)) is the binary-safe
     # byte-value read (documents-as-media text is ASCII, so the
     # oracle's ord(substr(text, ...)) rebuilds identical values)
     smp = F.expr(

@@ -1133,7 +1133,7 @@ def _ivf_batch_scored(
         # and its DuckDB-exact fold arithmetic.
         probes = _probe_cells_arrow(q, centroids, n_probes)
     else:
-        # expr-string literal (the with_signature lesson): n_cells ×
+        # expr-string literal (the lsh_bands lesson): n_cells ×
         # dim F.lit Columns cost seconds of py4j at 512×64; one SQL
         # string parses JVM-side and constant-folds identically
         cents2d = F.expr(
@@ -2416,7 +2416,7 @@ def measure_mean_assigned_d2(
     a constant-folded literal 2-D array (the residual-LUT lesson:
     literals fold, only per-row expressions count against janino)."""
     assigned = ivf_assign(df, centroids, vec_col)
-    # expr-string construction (the with_signature lesson): building
+    # expr-string construction (the lsh_bands lesson): building
     # n_cells × dim Column literals costs seconds of py4j at 512×64;
     # one SQL string parses JVM-side in milliseconds and the literal
     # array constant-folds identically

@@ -14,6 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# spark.sql.codegen.cache.maxEntries: generated classes kept compiled
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "cybersecurity-miw-spark",
@@ -55,6 +58,14 @@ def get_spark(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",
         )
+        # generated-class cache sized to hold a whole dedup job (static
+        # conf; Spark's default is 100): a corpus near-dedup job (LSH ->
+        # Jaccard -> connected components, 3,000 docs) generates
+        # 114-124 distinct classes, so at 100 the LRU evicted and
+        # recompiled 90-97 of them on EVERY warm job (Spark
+        # CodegenMetrics); at 1000, 0-8. A log summary job (44 classes)
+        # recompiles 4 per job at either size
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()
 
@@ -103,4 +114,6 @@ def cluster_profile(
         # (see get_spark): without it a persisted frame pins the raw
         # shuffle partition count for every consumer
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        # one long job's generated classes stay compiled (see get_spark)
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
     }

@@ -336,6 +336,15 @@ def test_gzip_logs_read_transparently(spark, tmp_path):
     assert rows_plain == rows_gz and len(rows_plain) > 0
 
 
+def test_session_codegen_cache_holds_a_dedup_job(spark):
+    """One warm near-dedup job compiles ~120 classes: Spark's default
+    cache of 100 would evict and recompile part of them every job."""
+    from cybersecurity_miw_spark.session import cluster_profile
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    assert cluster_profile()["spark.sql.codegen.cache.maxEntries"] == "1000"
+
+
 def test_cluster_profile_scales_with_size(spark):
     from cybersecurity_miw_spark.session import cluster_profile
 

@@ -1040,6 +1040,32 @@ def test_near_dedup_clusters_guard_same_survivors(spark):
     assert guarded == unguarded == {5, 100, 101, 102}
 
 
+class _Stop(Exception):
+    pass
+
+
+@pytest.mark.parametrize(
+    "cap,inner", [(None, "minhash_lsh_candidates"), (5000, "pairs_from_bands")]
+)
+def test_near_dedup_clusters_passes_its_own_fence(spark, monkeypatch, cap, inner):
+    """near_dedup_clusters never inherits the package default fence
+    (DEFAULT_MAX_BUCKET_WIDTH=4096): unfenced means unfenced, and a
+    caller cap above 4096 is applied once by its own width filter,
+    not re-fenced at 4096 by the pair expansion. Checked on the width
+    the internal call receives, before any Spark job runs."""
+    seen = []
+
+    def record(*args, max_bucket_width="inherited", **kwargs):
+        seen.append(max_bucket_width)
+        raise _Stop
+
+    monkeypatch.setattr(dedup, inner, record)
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    with pytest.raises(_Stop):
+        dedup.near_dedup_clusters(docs, max_bucket_width=cap)
+    assert seen == [None]
+
+
 def test_incremental_store_guard_and_fenced_hits(spark):
     """A mega-template in HISTORY fans out W pairs per matching batch
     doc per trigger; with max_store_bucket_width the fenced bucket

@@ -480,6 +480,15 @@ def test_frame_ann_single_decode_subtree(spark):
     assert plan.count("MapInPandas") == 1
 
 
+def test_minhash_signatures_one_arrow_kernel(spark):
+    """The permutation minima run as ONE Arrow map (the numpy kernel
+    of dedup.with_signature) above the widening repartition — no
+    second Python boundary; the exchange ceiling above still holds
+    the plan to its one widening exchange."""
+    plan = _plan(spark, "minhash_signatures")
+    assert plan.count("MapInArrow") == 1
+
+
 def test_tpch_customer_join_demotes_without_hint(spark):
     """VERDICT r7 #2, proven both ways: with the broadcast threshold
     forced off, the formerly-hinted customer joins in q5/q7/q8/q10/q18

@@ -35,7 +35,7 @@ FALLBACK = {
     "session_summary_30min": "30-minute-gap sessionization: per-session event count and span via one windowed pass.",
     "topn_events_per_user": "Top-N highest-value events per user; rank window on one hash exchange.",
     "dedup_exact_groups": "Exact duplicate groups by md5 text fingerprint (uniform groupBy key).",
-    "minhash_signatures": "MinHash signatures over word 3-shingles; staged expression arrays, zero Python.",
+    "minhash_signatures": "MinHash signatures over word 3-shingles; staged Spark hash arrays, permutation minima in one numpy Arrow kernel.",
     "minhash_lsh_candidates": "LSH banded candidate pairs: self-join on (band, band-hash), never all-pairs.",
     "near_dup_jaccard_confirm": "LSH candidates confirmed by exact shingle Jaccard >= threshold.",
     "simhash_band_candidates": "SimHash Hamming-band candidate pairs (md5-keyed bands).",

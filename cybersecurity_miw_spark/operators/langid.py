@@ -80,6 +80,15 @@ MARGIN_MICRO = 4_595_000  # ln(99) µnat — the C4 P≥0.99 gate
 TOP_K_GRAMS = 200
 UND = "und"
 
+# the column names detect_language's pipeline creates (the indexed
+# _mw_<i>/_nm_<i> aggregates are matched by pattern): a carry column
+# of the same name would be shadowed or duplicated
+_PIPELINE_COLS = frozenset({
+    "_lo", "_p", "_n", "_gate", "_ch", "_g", "gram", "ws",
+    "_a", "_bl", "_bs", "_bnm", "_ss",
+    "lang", "lang_score_micro", "lang_margin_micro",
+})
+
 
 def _ranges(*ranges: tuple[int, int]) -> str:
     return "".join(f"{chr(a)}-{chr(b)}" for a, b in ranges)
@@ -471,6 +480,22 @@ def detect_language(
     the partial aggregate means the exploded gram rows never cross an
     exchange at any scale). See the module docstring for the decision
     rules and their published citations."""
+    carry = carry or {}
+    for name in carry:
+        if not re.fullmatch(r"[A-Za-z0-9_]+", name):
+            raise ValueError(f"unsupported carry column name {name!r}")
+        # Spark resolves column names case-insensitively
+        low = name.lower()
+        if (
+            low in _PIPELINE_COLS
+            or low == id_col.lower()
+            or re.fullmatch(r"_(mw|nm)_[0-9]+", low)
+        ):
+            raise ValueError(
+                f"carry column name {name!r} collides with a column "
+                "detect_language uses itself (its internal columns, "
+                f"its outputs or id_col {id_col!r})"
+            )
     spark = df.sparkSession
     profiles = profiles if profiles is not None else load_lang_profiles()
     if len(profiles) < 2:
@@ -495,10 +520,6 @@ def detect_language(
     # Column-built chain cost ~0.5 s of py4j round-trips per call
     # (finding 6) for the identical trees.
     idq = f"`{id_col}`"
-    carry = carry or {}
-    for name in carry:
-        if not re.fullmatch(r"[A-Za-z0-9_]+", name):
-            raise ValueError(f"unsupported carry column name {name!r}")
     cq = [f"`{n}`" for n in carry]  # carried through every projection
     staged = df.select(
         F.col(id_col),

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from cybersecurity_miw_spark.streaming.loop import micro_batch_loop
 from cybersecurity_miw_spark.streaming.windowed import parse_event_lines
 
 
@@ -79,9 +80,6 @@ def streaming_with_expectations(
     per-expectation violation count under ``'viol_<name>'`` (a row
     violating two expectations counts once in n_quarantined and once
     per name)."""
-    lines = spark.readStream.format("text").load(input_dir)
-    ev = parse_event_lines(lines)
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Observation
 
@@ -119,11 +117,9 @@ def streaming_with_expectations(
         bad = tagged.where(F.size("_violations") > 0)
         bad.write.mode("append").parquet(quarantine_dir)
 
-    writer = (
-        ev.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, write_batch,
+        parse=parse_event_lines,
+        not_null=(),
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

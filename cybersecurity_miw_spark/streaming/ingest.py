@@ -26,6 +26,12 @@ it by running the same files through the batch path.
 :func:`streaming_near_dup_flags` is the near-dup sibling: batch LSH
 bands joined against the persisted band store, candidate pairs
 appended to a flags sink, the batch's bands appended to the store.
+
+Every loop here is a per-trigger body plugged into
+:func:`~cybersecurity_miw_spark.streaming.loop.micro_batch_loop`, which
+owns the file reader, the per-trigger cache scope and the checkpointed
+writer; loops of one family share one body and pass in only the
+family's operator functions.
 """
 
 from __future__ import annotations
@@ -34,64 +40,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from cybersecurity_miw_spark.cache import release_mark, release_since
 from cybersecurity_miw_spark.operators.dedup import (
     dedup_against_store,
     fingerprint_store,
 )
 from cybersecurity_miw_spark.operators.textstats import fingerprint
+from cybersecurity_miw_spark.streaming.loop import (  # noqa: F401 (re-export)
+    StaleStoreError,
+    _raise_if_stale,
+    _read_store_if_present,
+    _stale_gate,
+    micro_batch_loop,
+)
 
 DOC_LINE_SCHEMA = "doc_id long, text string"
-
-
-def _read_store_if_present(sess: SparkSession, store_dir: str):
-    """Read a persisted store parquet, or None when the store does not
-    exist YET (first trigger). Existence is probed explicitly through
-    the Hadoop FileSystem API (fsutil.exists) rather than by catching
-    the read error: a transient FS/object-store failure on a LATER
-    batch must fail the trigger — the checkpoint then replays the
-    batch — not be silently classified as "no store yet", which would
-    skip the history anti-join and re-admit already-seen rows
-    (ADVICE r16)."""
-    from cybersecurity_miw_spark import fsutil
-
-    if not fsutil.exists(sess, store_dir):
-        return None
-    return sess.read.parquet(store_dir)
-
-
-class StaleStoreError(RuntimeError):
-    """A streaming store monitor graded a trigger stale and the loop
-    was started with ``on_stale="raise"``. The query fails BEFORE the
-    trigger's checkpoint commits, so after the documented offline
-    remediation (one-call ``rebuild_*`` in the single-writer window,
-    docs/MONITORING.md) a restart replays the tripped batch — nothing
-    is lost, per the family's at-least-once contract."""
-
-
-def _stale_gate(metrics: list | None, on_stale: str) -> list | None:
-    """Validate ``on_stale`` and return the effective metrics list:
-    ``on_stale="raise"`` needs the monitor ACTIVE even when the caller
-    passed no list, so it gets a private one. Auto-rebuild mid-stream
-    is deliberately not an option — frozen orders/quantizers are
-    load-bearing, so failing fast is the only honest in-stream action
-    (VERDICT r14 #3)."""
-    if on_stale not in ("report", "raise"):
-        raise ValueError(
-            f"on_stale must be 'report' or 'raise', got {on_stale!r}"
-        )
-    if metrics is None and on_stale == "raise":
-        return []
-    return metrics
-
-
-def _raise_if_stale(report: dict, on_stale: str, loop: str) -> None:
-    if on_stale == "raise" and report.get("stale"):
-        raise StaleStoreError(
-            f"{loop}: store monitor graded this trigger stale "
-            f"({report}); rebuild the store offline "
-            "(docs/MONITORING.md) and restart the stream"
-        )
 
 
 def _enforce_stale(
@@ -113,6 +75,140 @@ def parse_doc_lines(lines: DataFrame) -> DataFrame:
             F.col("value"), DOC_LINE_SCHEMA, {"sep": "\t"}
         ).alias("d")
     ).select("d.*")
+
+
+def _fingerprint_dedup(df: DataFrame, store: DataFrame | None) -> DataFrame:
+    """Exact text dedup of a batch: rows whose text fingerprint is not
+    in ``store`` and that are their fingerprint's min-id representative
+    (dedup_against_store); before the store exists, the batch-internal
+    min-id rule alone."""
+    if store is not None:
+        return dedup_against_store(df, store)
+    keep = (
+        df.select("doc_id", fingerprint(F.col("text")).alias("_fp"))
+        .groupBy("_fp")
+        .agg(F.min("doc_id").alias("doc_id"))
+    )
+    return df.join(keep.select("doc_id"), on="doc_id", how="left_semi")
+
+
+def _url_dedup(df: DataFrame, store: DataFrame | None) -> DataFrame:
+    """:func:`_fingerprint_dedup` keyed on the canonical URL
+    (urlcurate.url_dedup_against_store / url_exact_dedup)."""
+    from cybersecurity_miw_spark.operators import urlcurate
+
+    if store is not None:
+        return urlcurate.url_dedup_against_store(df, store)
+    return urlcurate.url_exact_dedup(df)
+
+
+def _exact_dedup_loop(
+    spark: SparkSession,
+    input_dir: str,
+    checkpoint_dir: str,
+    corpus_dir: str,
+    store_dir: str,
+    available_now: bool,
+    metrics: list | None,
+    max_files_per_trigger: int | None,
+    *,
+    parse,
+    dedup,
+    store_rows,
+) -> StreamingQuery:
+    """The exact-dedup ingest loop shared by the text- and URL-keyed
+    variants: ``dedup(batch, store)`` picks each batch's accepted docs,
+    which append to ``corpus_dir`` while ``store_rows(accepted)``
+    extends the persisted store."""
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        # materialize the batch once: the store dedup reads it twice
+        # (tag + semi-join), and the metrics count is free
+        batch_df = batch_df.localCheckpoint(eager=True)
+        store = _read_store_if_present(batch_df.sparkSession, store_dir)
+        # materialize once: both appends read the same accepted set
+        accepted = dedup(batch_df, store).localCheckpoint(eager=True)
+        if metrics is not None:
+            n_batch = batch_df.count()  # cached checkpoint
+            n_acc = accepted.count()
+            metrics.append({
+                "batch_id": batch_id,
+                "n_batch": n_batch,
+                "n_accepted": n_acc,
+                "n_rejected": n_batch - n_acc,
+            })
+        accepted.write.mode("append").parquet(corpus_dir)
+        store_rows(accepted).write.mode("append").parquet(store_dir)
+
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body, parse=parse,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
+    )
+
+
+def _check_family(
+    spark: SparkSession,
+    store_dir: str,
+    params_file: str,
+    kind: str,
+    what: str,
+    family: dict,
+) -> str:
+    """Fail fast, BEFORE the stream starts, when the store's params
+    sidecar records a different hash family than this stream supplies
+    (mixed families never match: candidates would quietly drop to
+    zero). Returns the sidecar path."""
+    import json
+
+    from cybersecurity_miw_spark import fsutil
+
+    params_path = f"{store_dir}/{params_file}"
+    if fsutil.exists(spark, params_path):
+        stored = json.loads(fsutil.read_text(spark, params_path))
+        recorded = {k: v for k, v in stored.items() if k in family}
+        if recorded != family:
+            supplied = ", ".join(f"{k}={v}" for k, v in family.items())
+            raise ValueError(
+                f"{kind} store at {store_dir} was built with "
+                f"{recorded}; this stream supplies {supplied} — mixed "
+                f"{what} families never match. Rebuild the store or "
+                "pass the stored parameters."
+            )
+    return params_path
+
+
+def _monitor_store(
+    metrics: list,
+    n_cand: int,
+    n_docs: int,
+    baseline: float | None,
+    record_baseline,
+    staleness_factor: float | None,
+    on_stale: str,
+    loop: str,
+) -> None:
+    """The band-store ingest monitor of one store-joined trigger: on
+    the first trigger WITH candidates, record the baseline later
+    triggers compare against through the family's own sidecar writer
+    ``record_baseline`` (a zero baseline would make every later ratio
+    undefined); then append the ``setsim.staleness_report`` and apply
+    the ``on_stale`` policy."""
+    from cybersecurity_miw_spark.operators import setsim
+
+    if baseline is None and n_docs > 0 and n_cand > 0:
+        baseline = n_cand / n_docs
+        record_baseline(baseline)
+    report = setsim.staleness_report(
+        n_cand,
+        n_docs,
+        baseline,
+        staleness_factor
+        if staleness_factor is not None
+        else setsim.STALENESS_DEFAULT_FACTOR,
+    )
+    metrics.append(report)
+    _raise_if_stale(report, on_stale, loop)
 
 
 def streaming_dedup_ingest(
@@ -152,75 +248,13 @@ def streaming_dedup_ingest(
     the batch is localCheckpoint'ed once — which the join wants
     anyway, it halves the batch-file scans — and the counts read the
     cached checkpoint.)"""
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        # backpressure: bound each micro-batch's file count so one
-        # huge landing burst cannot make a single trigger (and its
-        # store anti-join build side) arbitrarily large; availableNow
-        # still drains everything, just in capped batches
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        # scope the per-trigger cache release to intermediates pinned
-        # WITHIN this batch: releasing the whole registry would also
-        # unpersist frames pinned by concurrent work in the same
-        # session (ADVICE r8)
-        cache_mark = release_mark()
-        # try/finally: an exception mid-batch must still close the
-        # scope, or the orphan open scope accumulates references to
-        # every future pin on this foreachBatch thread (ADVICE r10)
-        try:
-            # materialize the batch once: dedup_against_store reads it
-            # twice (tag + semi-join), and the metrics count is free
-            batch_df = batch_df.localCheckpoint(eager=True)
-            store = _read_store_if_present(sess, store_dir)
-            if store is not None:
-                accepted = dedup_against_store(batch_df, store)
-            else:
-                # batch-internal dedup only: min id per fingerprint
-                keep = (
-                    batch_df.select(
-                        "doc_id", fingerprint(F.col("text")).alias("_fp")
-                    )
-                    .groupBy("_fp")
-                    .agg(F.min("doc_id").alias("doc_id"))
-                )
-                accepted = batch_df.join(
-                    keep.select("doc_id"), on="doc_id", how="left_semi"
-                )
-            # materialize once: both appends read the same accepted set
-            accepted = accepted.localCheckpoint(eager=True)
-            if metrics is not None:
-                n_batch = batch_df.count()  # cached checkpoint
-                n_acc = accepted.count()
-                metrics.append({
-                    "batch_id": batch_id,
-                    "n_batch": n_batch,
-                    "n_accepted": n_acc,
-                    "n_rejected": n_batch - n_acc,
-                })
-            accepted.write.mode("append").parquet(corpus_dir)
-            fingerprint_store(accepted).write.mode("append").parquet(
-                store_dir
-            )
-        finally:
-            # a continuous query runs this loop forever: drop any
-            # persisted intermediates the dedup operators pinned THIS
-            # trigger, or the executor cache grows by one DataFrame
-            # per batch, unbounded
-            release_since(cache_mark)
-
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    return _exact_dedup_loop(
+        spark, input_dir, checkpoint_dir, corpus_dir, store_dir,
+        available_now, metrics, max_files_per_trigger,
+        parse=parse_doc_lines,
+        dedup=_fingerprint_dedup,
+        store_rows=fingerprint_store,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_near_dup_flags(
@@ -322,34 +356,8 @@ def streaming_near_dup_flags(
     params_path = f"{band_store_dir}/{BAND_STORE_PARAMS_FILE}"
     metrics = _stale_gate(metrics, on_stale)
 
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        # backpressure: bound each micro-batch's file count so one
-        # huge landing burst cannot make a single trigger (and its
-        # store anti-join build side) arbitrarily large; availableNow
-        # still drains everything, just in capped batches
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        cache_mark = release_mark()
-        # try/finally: an exception mid-batch must still close the
-        # scope, or the orphan open scope accumulates references to
-        # every future pin on this foreachBatch thread (ADVICE r10)
-        try:
-            _near_dup_batch(sess, batch_df)
-        finally:
-            # release per trigger so a continuous (non-availableNow)
-            # query holds no unbounded cache — scoped to THIS
-            # trigger's pins (ADVICE r8). Since r18 the within-batch
-            # candidate path (pairs_from_bands) pins nothing; what
-            # this covers is jaccard confirm's staged() pairs frame
-            # (and any future pin made on this foreachBatch thread).
-            release_since(cache_mark)
-
-    def _near_dup_batch(sess, batch_df: DataFrame) -> None:
         bands_new = lsh_band_store(
             batch_df, num_hashes=num_hashes, bands=bands, shingle_k=shingle_k
         ).localCheckpoint(eager=True)
@@ -408,8 +416,6 @@ def streaming_near_dup_flags(
             flags = within
         flags.write.mode("append").parquet(flags_dir)
         if obs is not None:
-            from cybersecurity_miw_spark.operators import setsim
-
             # batch doc count = band rows // bands. lsh_bands emits
             # EXACTLY `bands` struct rows per doc — empty/sub-shingle
             # texts still get the constant md5('') band hashes — so
@@ -422,40 +428,26 @@ def streaming_near_dup_flags(
             stored = check_band_store_params(
                 sess, band_store_dir, num_hashes, bands, shingle_k
             ) or {}
-            baseline = stored.get("baseline_cand_per_doc")
-            if baseline is None and n_docs > 0 and n_cand > 0:
-                # first store-joined trigger WITH candidates: record
-                # the baseline later triggers compare against (a zero
-                # baseline would make every later ratio undefined)
-                baseline = n_cand / n_docs
-                write_band_store_params(
+            _monitor_store(
+                metrics, n_cand, n_docs,
+                stored.get("baseline_cand_per_doc"),
+                lambda b: write_band_store_params(
                     sess, band_store_dir, num_hashes, bands, shingle_k,
-                    baseline_cand_per_doc=baseline,
-                )
-            report = setsim.staleness_report(
-                n_cand,
-                n_docs,
-                baseline,
-                staleness_factor
-                if staleness_factor is not None
-                else setsim.STALENESS_DEFAULT_FACTOR,
+                    baseline_cand_per_doc=b,
+                ),
+                staleness_factor, on_stale, "streaming_near_dup_flags",
             )
-            metrics.append(report)
-            _raise_if_stale(report, on_stale, "streaming_near_dup_flags")
         bands_new.write.mode("append").parquet(band_store_dir)
         if not fsutil.exists(sess, params_path):
             write_band_store_params(
                 sess, band_store_dir, num_hashes, bands, shingle_k
             )
 
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body, parse=parse_doc_lines,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_semantic_flags(
@@ -522,116 +514,73 @@ def streaming_semantic_flags(
         cosine_near_dup_lsh,
         embedding_bucket_store,
         incremental_semantic_pairs,
+        read_semantic_store_baseline,
         write_semantic_store_params,
     )
     from cybersecurity_miw_spark.operators.textstats import hashed_embedding
     from cybersecurity_miw_spark import fsutil
 
     metrics = _stale_gate(metrics, on_stale)
-    # fail fast on a plane-family mismatch BEFORE any batch runs
-    params_path = f"{vec_store_dir}/{SEMANTIC_STORE_PARAMS_FILE}"
-    if fsutil.exists(spark, params_path):
-        import json
-
-        stored = json.loads(fsutil.read_text(spark, params_path))
-        family = {
-            k: v for k, v in stored.items() if k in ("dim", "n_planes")
-        }
-        if family != {"dim": dim, "n_planes": n_planes}:
-            raise ValueError(
-                f"semantic store at {vec_store_dir} was built with "
-                f"{family}; this stream supplies dim={dim}, "
-                f"n_planes={n_planes} — mixed hyperplane families never "
-                "match. Rebuild the store or pass the stored parameters."
-            )
-
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        cache_mark = release_mark()
-        try:
-            vecs = (
-                hashed_embedding(batch_df, dim=dim)
-                .select(F.col("doc_id").alias("vec_id"), "embedding")
-                .localCheckpoint(eager=True)
-            )
-            bucketed = embedding_bucket_store(
-                vecs, dim, n_planes
-            ).localCheckpoint(eager=True)
-            within = cosine_near_dup_lsh(
-                vecs, threshold, dim, n_planes
-            ).select(
-                F.col("id_b").alias("new_id"),
-                F.col("id_a").alias("stored_id"),
-                "cos_sim",
-            )
-            store = _read_store_if_present(sess, vec_store_dir)
-            obs = None
-            if store is not None:
-                cross = incremental_semantic_pairs(
-                    vecs, store, threshold, dim, n_planes
-                )
-                if metrics is not None:
-                    from pyspark.sql import Observation
-
-                    obs = Observation()
-                    cross = cross.observe(
-                        obs, F.count(F.lit(1)).alias("n_store_pairs")
-                    )
-                flags = cross.unionByName(within).distinct()
-            else:
-                flags = within
-            flags.write.mode("append").parquet(flags_dir)
-            if obs is not None:
-                from cybersecurity_miw_spark.operators import setsim
-                from cybersecurity_miw_spark.operators.similarity import (
-                    read_semantic_store_baseline,
-                )
-
-                n_docs = vecs.count()  # cached checkpoint
-                n_pairs = obs.get["n_store_pairs"]
-                baseline = read_semantic_store_baseline(
-                    sess, vec_store_dir
-                )
-                if baseline is None and n_docs > 0 and n_pairs > 0:
-                    baseline = n_pairs / n_docs
-                    write_semantic_store_params(
-                        sess, vec_store_dir, dim, n_planes,
-                        baseline_cand_per_doc=baseline,
-                    )
-                report = setsim.staleness_report(
-                    n_pairs,
-                    n_docs,
-                    baseline,
-                    staleness_factor
-                    if staleness_factor is not None
-                    else setsim.STALENESS_DEFAULT_FACTOR,
-                )
-                metrics.append(report)
-                _raise_if_stale(
-                    report, on_stale, "streaming_semantic_flags"
-                )
-            bucketed.write.mode("append").parquet(vec_store_dir)
-            if not fsutil.exists(sess, params_path):
-                write_semantic_store_params(
-                    sess, vec_store_dir, dim, n_planes
-                )
-        finally:
-            release_since(cache_mark)
-
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    params_path = _check_family(
+        spark, vec_store_dir, SEMANTIC_STORE_PARAMS_FILE, "semantic",
+        "hyperplane", {"dim": dim, "n_planes": n_planes},
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        sess = batch_df.sparkSession
+        vecs = (
+            hashed_embedding(batch_df, dim=dim)
+            .select(F.col("doc_id").alias("vec_id"), "embedding")
+            .localCheckpoint(eager=True)
+        )
+        bucketed = embedding_bucket_store(
+            vecs, dim, n_planes
+        ).localCheckpoint(eager=True)
+        within = cosine_near_dup_lsh(
+            vecs, threshold, dim, n_planes
+        ).select(
+            F.col("id_b").alias("new_id"),
+            F.col("id_a").alias("stored_id"),
+            "cos_sim",
+        )
+        store = _read_store_if_present(sess, vec_store_dir)
+        obs = None
+        if store is not None:
+            cross = incremental_semantic_pairs(
+                vecs, store, threshold, dim, n_planes
+            )
+            if metrics is not None:
+                from pyspark.sql import Observation
+
+                obs = Observation()
+                cross = cross.observe(
+                    obs, F.count(F.lit(1)).alias("n_store_pairs")
+                )
+            flags = cross.unionByName(within).distinct()
+        else:
+            flags = within
+        flags.write.mode("append").parquet(flags_dir)
+        if obs is not None:
+            n_docs = vecs.count()  # cached checkpoint
+            n_pairs = obs.get["n_store_pairs"]
+            _monitor_store(
+                metrics, n_pairs, n_docs,
+                read_semantic_store_baseline(sess, vec_store_dir),
+                lambda b: write_semantic_store_params(
+                    sess, vec_store_dir, dim, n_planes,
+                    baseline_cand_per_doc=b,
+                ),
+                staleness_factor, on_stale, "streaming_semantic_flags",
+            )
+        bucketed.write.mode("append").parquet(vec_store_dir)
+        if not fsutil.exists(sess, params_path):
+            write_semantic_store_params(sess, vec_store_dir, dim, n_planes)
+
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body, parse=parse_doc_lines,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
+    )
 
 
 def streaming_containment_flags(
@@ -705,42 +654,27 @@ def streaming_containment_flags(
         else STALENESS_DEFAULT_FACTOR
     )
 
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_doc_lines(lines).where(F.col("doc_id").isNotNull())
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        start = len(metrics) if metrics is not None else 0
+        pairs = incremental_containment_pairs(
+            batch_df,
+            containers,
+            store,
+            freq,
+            threshold=threshold,
+            shingle_k=shingle_k,
+            metrics=metrics,
+            baseline_cand_per_doc=baseline,
+            staleness_factor=factor,
+        )
+        _enforce_stale(metrics, start, on_stale, "streaming_containment_flags")
+        pairs.write.mode("append").parquet(flags_dir)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cache_mark = release_mark()
-        try:
-            start = len(metrics) if metrics is not None else 0
-            pairs = incremental_containment_pairs(
-                batch_df,
-                containers,
-                store,
-                freq,
-                threshold=threshold,
-                shingle_k=shingle_k,
-                metrics=metrics,
-                baseline_cand_per_doc=baseline,
-                staleness_factor=factor,
-            )
-            _enforce_stale(
-                metrics, start, on_stale, "streaming_containment_flags"
-            )
-            pairs.write.mode("append").parquet(flags_dir)
-        finally:
-            release_since(cache_mark)
-
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body, parse=parse_doc_lines,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_setsim_flags(
@@ -824,82 +758,162 @@ def streaming_setsim_flags(
         else STALENESS_DEFAULT_FACTOR
     )
 
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        cache_mark = release_mark()
-        try:
-            batch_df = batch_df.localCheckpoint(eager=True)
-            within = ppjoin_pairs(
-                batch_df, threshold=threshold, shingle_k=shingle_k
-            ).select(
-                F.col("id_b").alias("new_id"),
-                F.col("id_a").alias("stored_id"),
-                "jaccard",
+        batch_df = batch_df.localCheckpoint(eager=True)
+        within = ppjoin_pairs(
+            batch_df, threshold=threshold, shingle_k=shingle_k
+        ).select(
+            F.col("id_b").alias("new_id"),
+            F.col("id_a").alias("stored_id"),
+            "jaccard",
+        )
+        has_store = fsutil.exists(sess, params_path)
+        if has_store:
+            store = load_prefix_store(sess, store_dir, threshold, shingle_k)
+            freq = sess.read.parquet(freq_dir)
+            hist = sess.read.parquet(history_dir)
+            start = len(metrics) if metrics is not None else 0
+            cross = incremental_ppjoin_pairs(
+                batch_df, hist, store, freq,
+                threshold=threshold, shingle_k=shingle_k,
+                metrics=metrics,
+                baseline_cand_per_doc=read_prefix_store_baseline(
+                    sess, store_dir
+                ),
+                staleness_factor=factor,
             )
-            has_store = fsutil.exists(sess, params_path)
-            if has_store:
-                store = load_prefix_store(
-                    sess, store_dir, threshold, shingle_k
-                )
-                freq = sess.read.parquet(freq_dir)
-                hist = sess.read.parquet(history_dir)
-                start = len(metrics) if metrics is not None else 0
-                cross = incremental_ppjoin_pairs(
-                    batch_df, hist, store, freq,
-                    threshold=threshold, shingle_k=shingle_k,
-                    metrics=metrics,
-                    baseline_cand_per_doc=read_prefix_store_baseline(
-                        sess, store_dir
-                    ),
-                    staleness_factor=factor,
-                )
-                _enforce_stale(
-                    metrics, start, on_stale, "streaming_setsim_flags"
-                )
-                flags = cross.unionByName(within)
-            else:
-                # first trigger: freeze the order on this batch
-                freq = token_freq_table(
-                    batch_df, shingle_k=shingle_k
-                ).localCheckpoint(eager=True)
-                freq.write.mode("overwrite").parquet(freq_dir)
-                flags = within
-            flags.write.mode("append").parquet(flags_dir)
-            # append AFTER the store join: this batch must not be its
-            # own history (the LSH loop's ordering discipline)
-            prefix_store(
-                batch_df, freq, threshold=threshold, shingle_k=shingle_k
-            ).write.mode("append").parquet(store_dir)
-            batch_df.write.mode("append").parquet(history_dir)
-            if not has_store:
-                base = measure_cand_per_doc(
-                    batch_df,
-                    sess.read.parquet(store_dir),
-                    freq,
-                    threshold=threshold,
-                    shingle_k=shingle_k,
-                )
-                write_prefix_store_params(
-                    sess, store_dir, threshold, shingle_k,
-                    baseline_cand_per_doc=base or None,
-                )
-        finally:
-            release_since(cache_mark)
+            _enforce_stale(metrics, start, on_stale, "streaming_setsim_flags")
+            flags = cross.unionByName(within)
+        else:
+            # first trigger: freeze the order on this batch
+            freq = token_freq_table(
+                batch_df, shingle_k=shingle_k
+            ).localCheckpoint(eager=True)
+            freq.write.mode("overwrite").parquet(freq_dir)
+            flags = within
+        flags.write.mode("append").parquet(flags_dir)
+        # append AFTER the store join: this batch must not be its
+        # own history (the LSH loop's ordering discipline)
+        prefix_store(
+            batch_df, freq, threshold=threshold, shingle_k=shingle_k
+        ).write.mode("append").parquet(store_dir)
+        batch_df.write.mode("append").parquet(history_dir)
+        if not has_store:
+            base = measure_cand_per_doc(
+                batch_df,
+                sess.read.parquet(store_dir),
+                freq,
+                threshold=threshold,
+                shingle_k=shingle_k,
+            )
+            write_prefix_store_params(
+                sess, store_dir, threshold, shingle_k,
+                baseline_cand_per_doc=base or None,
+            )
 
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body, parse=parse_doc_lines,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _hamming_band_flags(
+    spark: SparkSession,
+    input_dir: str,
+    checkpoint_dir: str,
+    flags_dir: str,
+    band_store_dir: str,
+    available_now: bool,
+    max_files_per_trigger: int | None,
+    metrics: list | None,
+    staleness_factor: float | None,
+    on_stale: str,
+    *,
+    kind: str,
+    what: str,
+    params_file: str,
+    family: dict,
+    opts: dict,
+    candidates,
+    store_candidates,
+    band_rows,
+    write_params,
+    loop: str,
+    **source,
+) -> StreamingQuery:
+    """The Hamming-band flags loop shared by the SimHash (text) and
+    perceptual-hash (media) store families. Each family supplies its
+    operators, all called with ``opts``: ``candidates(batch)`` (the
+    within-batch band self-join), ``store_candidates(batch, store)``
+    (the join against the persisted index) and ``band_rows(batch)``
+    (the rows the batch appends to it); ``write_params(sess, store_dir,
+    **family)`` writes its sidecar, and ``source`` selects the input
+    (forwarded to :func:`micro_batch_loop`)."""
+    import json
+
+    from cybersecurity_miw_spark import fsutil
+
+    metrics = _stale_gate(metrics, on_stale)
+    params_path = _check_family(
+        spark, band_store_dir, params_file, kind, what, family
+    )
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        sess = batch_df.sparkSession
+        batch_df = batch_df.localCheckpoint(eager=True)
+        within = candidates(batch_df, **opts).select(
+            F.col("id_b").alias("new_id"),
+            F.col("id_a").alias("stored_id"),
+        )
+        # detect the store by DATA presence (the minhash-loop probe),
+        # not the params sidecar: a store built externally without
+        # its sidecar must still be joined from the first trigger, or
+        # cross-run pairs are silently missed (ADVICE r14)
+        store = _read_store_if_present(sess, band_store_dir)
+        n_cand = None
+        if store is not None:
+            cross = store_candidates(batch_df, store, **opts)
+            if metrics is not None:
+                # candidates ARE the flags (no verify stage): one
+                # checkpoint serves both the count and the union
+                cross = cross.localCheckpoint(eager=True)
+                n_cand = cross.count()
+            flags = cross.unionByName(within).distinct()
+        else:
+            flags = within
+        flags.write.mode("append").parquet(flags_dir)
+        if n_cand is not None:
+            n_docs = batch_df.count()  # cached checkpoint
+            if not fsutil.exists(sess, params_path):
+                # externally-built store without a sidecar (the legacy
+                # case the family loaders accept): adopt this stream's
+                # startup-validated family before recording the
+                # baseline into it
+                write_params(sess, band_store_dir, **family)
+            stored = json.loads(fsutil.read_text(sess, params_path))
+            _monitor_store(
+                metrics, n_cand, n_docs,
+                stored.get("baseline_cand_per_doc"),
+                lambda b: fsutil.write_text(
+                    sess, params_path,
+                    json.dumps({**stored, "baseline_cand_per_doc": b}),
+                ),
+                staleness_factor, on_stale, loop,
+            )
+        band_rows(batch_df, **opts).write.mode("append").parquet(
+            band_store_dir
+        )
+        if not fsutil.exists(sess, params_path):
+            write_params(sess, band_store_dir, **family)
+
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
+        **source,
+    )
 
 
 def streaming_simhash_flags(
@@ -941,111 +955,25 @@ def streaming_simhash_flags(
     lose); self-pairs are guarded in
     :func:`~cybersecurity_miw_spark.operators.dedup.
     incremental_simhash_candidates`'s join."""
-    import json
+    from cybersecurity_miw_spark.operators import dedup
 
-    from cybersecurity_miw_spark.operators.dedup import (
-        SIMHASH_STORE_PARAMS_FILE,
-        incremental_simhash_candidates,
-        simhash_band_store,
-        simhash_dedup_candidates,
-        write_simhash_store_params,
+    family = {"band_bits": band_bits, "hash_fn": hash_fn}
+    return _hamming_band_flags(
+        spark, input_dir, checkpoint_dir, flags_dir, band_store_dir,
+        available_now, max_files_per_trigger, metrics, staleness_factor,
+        on_stale,
+        kind="simhash",
+        what="SimHash",
+        params_file=dedup.SIMHASH_STORE_PARAMS_FILE,
+        family=family,
+        opts=family,
+        candidates=dedup.simhash_dedup_candidates,
+        store_candidates=dedup.incremental_simhash_candidates,
+        band_rows=dedup.simhash_band_store,
+        write_params=dedup.write_simhash_store_params,
+        loop="streaming_simhash_flags",
+        parse=parse_doc_lines,
     )
-    from cybersecurity_miw_spark.operators import setsim
-    from cybersecurity_miw_spark import fsutil
-
-    metrics = _stale_gate(metrics, on_stale)
-    params_path = f"{band_store_dir}/{SIMHASH_STORE_PARAMS_FILE}"
-    if fsutil.exists(spark, params_path):
-        stored = json.loads(fsutil.read_text(spark, params_path))
-        family = {
-            k: v for k, v in stored.items()
-            if k in ("band_bits", "hash_fn")
-        }
-        if family != {"band_bits": band_bits, "hash_fn": hash_fn}:
-            raise ValueError(
-                f"simhash store at {band_store_dir} was built with "
-                f"{family}; this stream supplies band_bits={band_bits}, "
-                f"hash_fn={hash_fn} — mixed SimHash families never "
-                "match. Rebuild the store or pass the stored parameters."
-            )
-
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        cache_mark = release_mark()
-        try:
-            batch_df = batch_df.localCheckpoint(eager=True)
-            within = simhash_dedup_candidates(
-                batch_df, band_bits=band_bits, hash_fn=hash_fn
-            ).select(
-                F.col("id_b").alias("new_id"),
-                F.col("id_a").alias("stored_id"),
-            )
-            has_store = fsutil.exists(sess, params_path)
-            n_cand = None
-            if has_store:
-                store = sess.read.parquet(band_store_dir)
-                cross = incremental_simhash_candidates(
-                    batch_df, store, band_bits=band_bits, hash_fn=hash_fn
-                )
-                if metrics is not None:
-                    # candidates ARE the flags here (no verify stage),
-                    # so the checkpoint that makes the count cheap is
-                    # also reused by the union below — one
-                    # materialization serves both
-                    cross = cross.localCheckpoint(eager=True)
-                    n_cand = cross.count()
-                flags = cross.unionByName(within).distinct()
-            else:
-                flags = within
-            flags.write.mode("append").parquet(flags_dir)
-            if n_cand is not None:
-                n_docs = batch_df.count()  # cached checkpoint
-                stored = json.loads(
-                    fsutil.read_text(sess, params_path)
-                )
-                baseline = stored.get("baseline_cand_per_doc")
-                if baseline is None and n_docs > 0 and n_cand > 0:
-                    baseline = n_cand / n_docs
-                    stored["baseline_cand_per_doc"] = baseline
-                    fsutil.write_text(
-                        sess, params_path, json.dumps(stored)
-                    )
-                report = setsim.staleness_report(
-                    n_cand,
-                    n_docs,
-                    baseline,
-                    staleness_factor
-                    if staleness_factor is not None
-                    else setsim.STALENESS_DEFAULT_FACTOR,
-                )
-                metrics.append(report)
-                _raise_if_stale(
-                    report, on_stale, "streaming_simhash_flags"
-                )
-            simhash_band_store(
-                batch_df, band_bits=band_bits, hash_fn=hash_fn
-            ).write.mode("append").parquet(band_store_dir)
-            if not fsutil.exists(sess, params_path):
-                write_simhash_store_params(
-                    sess, band_store_dir, band_bits, hash_fn
-                )
-        finally:
-            release_since(cache_mark)
-
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_phash_flags(
@@ -1092,125 +1020,28 @@ def streaming_phash_flags(
     commit, so at-least-once recovery can duplicate flag/store rows
     (never lose); (x, x) self-pairs are guarded in
     ``incremental_phash_candidates``'s join."""
-    import json
+    from cybersecurity_miw_spark.operators import multimodal as mm
 
-    from cybersecurity_miw_spark.operators import setsim
-    from cybersecurity_miw_spark.operators.multimodal import (
-        PHASH_DEFAULT_BAND_BITS,
-        PHASH_DEFAULT_BITS,
-        PHASH_STORE_PARAMS_FILE,
-        incremental_phash_candidates,
-        phash_band_store,
-        phash_dedup_candidates,
-        write_phash_store_params,
+    bits = mm.PHASH_DEFAULT_BITS if bits is None else bits
+    band_bits = mm.PHASH_DEFAULT_BAND_BITS if band_bits is None else band_bits
+    family = {"bits": bits, "band_bits": band_bits}
+    return _hamming_band_flags(
+        spark, input_dir, checkpoint_dir, flags_dir, band_store_dir,
+        available_now, max_files_per_trigger, metrics, staleness_factor,
+        on_stale,
+        kind="phash",
+        what="perceptual-hash",
+        params_file=mm.PHASH_STORE_PARAMS_FILE,
+        family=family,
+        opts={**family, "payload_col": payload_col, "id_col": id_col},
+        candidates=mm.phash_dedup_candidates,
+        store_candidates=mm.incremental_phash_candidates,
+        band_rows=mm.phash_band_store,
+        write_params=mm.write_phash_store_params,
+        loop="streaming_phash_flags",
+        schema=f"{id_col} LONG, {payload_col} BINARY",
+        not_null=(id_col,),
     )
-    from cybersecurity_miw_spark import fsutil
-
-    bits = PHASH_DEFAULT_BITS if bits is None else bits
-    band_bits = PHASH_DEFAULT_BAND_BITS if band_bits is None else band_bits
-
-    metrics = _stale_gate(metrics, on_stale)
-    params_path = f"{band_store_dir}/{PHASH_STORE_PARAMS_FILE}"
-    if fsutil.exists(spark, params_path):
-        stored = json.loads(fsutil.read_text(spark, params_path))
-        family = {
-            k: v for k, v in stored.items() if k in ("bits", "band_bits")
-        }
-        if family != {"bits": bits, "band_bits": band_bits}:
-            raise ValueError(
-                f"phash store at {band_store_dir} was built with "
-                f"{family}; this stream supplies bits={bits}, "
-                f"band_bits={band_bits} — mixed perceptual-hash "
-                "families never match. Rebuild the store or pass the "
-                "stored parameters."
-            )
-
-    reader = spark.readStream.schema(
-        f"{id_col} LONG, {payload_col} BINARY"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    media = reader.parquet(input_dir).where(F.col(id_col).isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        cache_mark = release_mark()
-        try:
-            batch_df = batch_df.localCheckpoint(eager=True)
-            within = phash_dedup_candidates(
-                batch_df, bits, band_bits, payload_col, id_col
-            ).select(
-                F.col("id_b").alias("new_id"),
-                F.col("id_a").alias("stored_id"),
-            )
-            # detect the store by DATA presence (the minhash-loop
-            # probe), not the params sidecar: a store built externally
-            # via phash_band_store without write_phash_store_params
-            # must still be joined from the first trigger, or
-            # cross-run pairs are silently missed (ADVICE r14)
-            store = _read_store_if_present(sess, band_store_dir)
-            n_cand = None
-            if store is not None:
-                cross = incremental_phash_candidates(
-                    batch_df, store, bits, band_bits, payload_col, id_col
-                )
-                if metrics is not None:
-                    # candidates ARE the flags (no verify stage): one
-                    # checkpoint serves both the count and the union
-                    cross = cross.localCheckpoint(eager=True)
-                    n_cand = cross.count()
-                flags = cross.unionByName(within).distinct()
-            else:
-                flags = within
-            flags.write.mode("append").parquet(flags_dir)
-            if n_cand is not None:
-                n_assets = batch_df.count()  # cached checkpoint
-                if not fsutil.exists(sess, params_path):
-                    # externally-built store without a sidecar (the
-                    # legacy case check_band_store_params documents):
-                    # adopt this stream's startup-validated family
-                    # before recording the baseline into it
-                    write_phash_store_params(
-                        sess, band_store_dir, bits, band_bits
-                    )
-                stored = json.loads(fsutil.read_text(sess, params_path))
-                baseline = stored.get("baseline_cand_per_doc")
-                if baseline is None and n_assets > 0 and n_cand > 0:
-                    baseline = n_cand / n_assets
-                    stored["baseline_cand_per_doc"] = baseline
-                    fsutil.write_text(
-                        sess, params_path, json.dumps(stored)
-                    )
-                report = setsim.staleness_report(
-                    n_cand,
-                    n_assets,
-                    baseline,
-                    staleness_factor
-                    if staleness_factor is not None
-                    else setsim.STALENESS_DEFAULT_FACTOR,
-                )
-                metrics.append(report)
-                _raise_if_stale(
-                    report, on_stale, "streaming_phash_flags"
-                )
-            phash_band_store(
-                batch_df, bits, band_bits, payload_col, id_col
-            ).write.mode("append").parquet(band_store_dir)
-            if not fsutil.exists(sess, params_path):
-                write_phash_store_params(
-                    sess, band_store_dir, bits, band_bits
-                )
-        finally:
-            release_since(cache_mark)
-
-    writer = (
-        media.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_ivf_append(
@@ -1279,51 +1110,93 @@ def streaming_ivf_append(
             "centroids/codebooks."
         )
 
-    reader = spark.readStream.schema(
-        f"{id_col} LONG, {vec_col} ARRAY<DOUBLE>"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    vecs = reader.parquet(input_dir).where(
-        F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        start = len(metrics) if metrics is not None else 0
+        similarity.append_to_ivf_index(
+            batch_df.localCheckpoint(eager=True),
+            centroids,
+            codebooks,
+            index_dir,
+            vec_col=vec_col,
+            id_col=id_col,
+            scale=eff_scale,
+            residual=residual,
+            metrics=metrics,
+            staleness_factor=(
+                staleness_factor
+                if staleness_factor is not None
+                else similarity.DISTORTION_DEFAULT_FACTOR
+            ),
+        )
+        _enforce_stale(metrics, start, on_stale, "streaming_ivf_append")
+
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body,
+        schema=f"{id_col} LONG, {vec_col} ARRAY<DOUBLE>",
+        not_null=(id_col, vec_col),
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cache_mark = release_mark()
-        try:
-            if batch_df.isEmpty():
-                return
-            start = len(metrics) if metrics is not None else 0
-            similarity.append_to_ivf_index(
-                batch_df.localCheckpoint(eager=True),
-                centroids,
-                codebooks,
-                index_dir,
-                vec_col=vec_col,
-                id_col=id_col,
-                scale=eff_scale,
-                residual=residual,
-                metrics=metrics,
-                staleness_factor=(
-                    staleness_factor
-                    if staleness_factor is not None
-                    else similarity.DISTORTION_DEFAULT_FACTOR
-                ),
-            )
-            _enforce_stale(
-                metrics, start, on_stale, "streaming_ivf_append"
-            )
-        finally:
-            release_since(cache_mark)
 
-    writer = (
-        vecs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+def _frozen_model_scores(
+    spark: SparkSession,
+    input_dir: str,
+    checkpoint_dir: str,
+    scores_dir: str,
+    model_dir: str,
+    available_now: bool,
+    max_files_per_trigger: int | None,
+    metrics: list | None,
+    threshold_micro_nats: int | None,
+    on_stale: str,
+    *,
+    load,
+    drift_report,
+    score,
+    columns: tuple[str, ...],
+    default_threshold: int,
+    loop: str,
+) -> StreamingQuery:
+    """The frozen-model scoring loop shared by the DSIR, quality
+    classifier and n-gram LM feeds. Each model family supplies its
+    ``load(spark, model_dir)`` (the before-start check),
+    ``drift_report(batch, model_dir, threshold_micro_nats=...)``,
+    ``score(batch, model_dir)`` and the ``columns`` the scores sink
+    keeps."""
+    metrics = _stale_gate(metrics, on_stale)
+    # fail fast: model + sidecar must exist and parse before start
+    load(spark, model_dir)
+    thresh = (
+        threshold_micro_nats
+        if threshold_micro_nats is not None
+        else default_threshold
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = batch_df.localCheckpoint(eager=True)
+        if batch_df.rdd.isEmpty():
+            return
+        if metrics is not None:
+            report = drift_report(
+                batch_df, model_dir, threshold_micro_nats=thresh
+            )
+            metrics.append(report)
+            # a drifted batch must not reach the scores feed: raise
+            # BEFORE the append, so the restart replays it against the
+            # rebuilt model
+            _raise_if_stale(report, on_stale, loop)
+        score(batch_df, model_dir).select(*columns).write.mode(
+            "append"
+        ).parquet(scores_dir)
+
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body, parse=parse_doc_lines,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
+    )
 
 
 def streaming_dsir_scores(
@@ -1364,53 +1237,17 @@ def streaming_dsir_scores(
     rows after a crash, never lose them."""
     from cybersecurity_miw_spark.operators import dsir
 
-    metrics = _stale_gate(metrics, on_stale)
-    # fail fast: model + sidecar must exist and parse before start
-    dsir.load_dsir_model(spark, model_dir)
-    thresh = (
-        threshold_micro_nats
-        if threshold_micro_nats is not None
-        else dsir.DSIR_DRIFT_DEFAULT_MICRO_NATS
+    return _frozen_model_scores(
+        spark, input_dir, checkpoint_dir, scores_dir, model_dir,
+        available_now, max_files_per_trigger, metrics,
+        threshold_micro_nats, on_stale,
+        load=dsir.load_dsir_model,
+        drift_report=dsir.dsir_drift_report,
+        score=dsir.dsir_score_batch,
+        columns=("doc_id", "llr_micro_sum"),
+        default_threshold=dsir.DSIR_DRIFT_DEFAULT_MICRO_NATS,
+        loop="streaming_dsir_scores",
     )
-
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cache_mark = release_mark()
-        try:
-            batch_df = batch_df.localCheckpoint(eager=True)
-            if batch_df.rdd.isEmpty():
-                return
-            if metrics is not None:
-                report = dsir.dsir_drift_report(
-                    batch_df, model_dir,
-                    threshold_micro_nats=thresh,
-                )
-                metrics.append(report)
-                # a biased batch must not reach the scores feed:
-                # raise BEFORE the append, so the restart replays it
-                # against the rebuilt model
-                _raise_if_stale(
-                    report, on_stale, "streaming_dsir_scores"
-                )
-            dsir.dsir_score_batch(batch_df, model_dir).select(
-                "doc_id", "llr_micro_sum"
-            ).write.mode("append").parquet(scores_dir)
-        finally:
-            release_since(cache_mark)
-
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_clf_scores(
@@ -1449,53 +1286,17 @@ def streaming_clf_scores(
     score rows after a crash, never lose them."""
     from cybersecurity_miw_spark.operators import qualityclf
 
-    metrics = _stale_gate(metrics, on_stale)
-    # fail fast: model + sidecar must exist and parse before start
-    qualityclf.load_quality_model(spark, model_dir)
-    thresh = (
-        threshold_micro_nats
-        if threshold_micro_nats is not None
-        else qualityclf.CLF_DRIFT_DEFAULT_MICRO_NATS
+    return _frozen_model_scores(
+        spark, input_dir, checkpoint_dir, scores_dir, model_dir,
+        available_now, max_files_per_trigger, metrics,
+        threshold_micro_nats, on_stale,
+        load=qualityclf.load_quality_model,
+        drift_report=qualityclf.quality_clf_drift_report,
+        score=qualityclf.score_with_model,
+        columns=("doc_id", "clf_score_micro"),
+        default_threshold=qualityclf.CLF_DRIFT_DEFAULT_MICRO_NATS,
+        loop="streaming_clf_scores",
     )
-
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cache_mark = release_mark()
-        try:
-            batch_df = batch_df.localCheckpoint(eager=True)
-            if batch_df.rdd.isEmpty():
-                return
-            if metrics is not None:
-                report = qualityclf.quality_clf_drift_report(
-                    batch_df, model_dir,
-                    threshold_micro_nats=thresh,
-                )
-                metrics.append(report)
-                # a drifted batch must not reach the scores feed:
-                # raise BEFORE the append, so the restart replays it
-                # against the rebuilt model
-                _raise_if_stale(
-                    report, on_stale, "streaming_clf_scores"
-                )
-            qualityclf.score_with_model(batch_df, model_dir).select(
-                "doc_id", "clf_score_micro"
-            ).write.mode("append").parquet(scores_dir)
-        finally:
-            release_since(cache_mark)
-
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_lm_scores(
@@ -1534,53 +1335,17 @@ def streaming_lm_scores(
     after a crash, never lose them."""
     from cybersecurity_miw_spark.operators import ngramlm
 
-    metrics = _stale_gate(metrics, on_stale)
-    # fail fast: model + sidecar must exist and parse before start
-    ngramlm.load_lm_model(spark, model_dir)
-    thresh = (
-        threshold_micro_nats
-        if threshold_micro_nats is not None
-        else ngramlm.LM_DRIFT_DEFAULT_MICRO_NATS
+    return _frozen_model_scores(
+        spark, input_dir, checkpoint_dir, scores_dir, model_dir,
+        available_now, max_files_per_trigger, metrics,
+        threshold_micro_nats, on_stale,
+        load=ngramlm.load_lm_model,
+        drift_report=ngramlm.lm_drift_report,
+        score=ngramlm.score_with_lm_model,
+        columns=("doc_id", "n_lm_tokens", "lp_micro_sum", "nlp_micro_tok"),
+        default_threshold=ngramlm.LM_DRIFT_DEFAULT_MICRO_NATS,
+        loop="streaming_lm_scores",
     )
-
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cache_mark = release_mark()
-        try:
-            batch_df = batch_df.localCheckpoint(eager=True)
-            if batch_df.rdd.isEmpty():
-                return
-            if metrics is not None:
-                report = ngramlm.lm_drift_report(
-                    batch_df, model_dir,
-                    threshold_micro_nats=thresh,
-                )
-                metrics.append(report)
-                # a drifted batch must not reach the scores feed:
-                # raise BEFORE the append, so the restart replays it
-                # against the rebuilt model
-                _raise_if_stale(
-                    report, on_stale, "streaming_lm_scores"
-                )
-            ngramlm.score_with_lm_model(batch_df, model_dir).select(
-                "doc_id", "n_lm_tokens", "lp_micro_sum", "nlp_micro_tok"
-            ).write.mode("append").parquet(scores_dir)
-        finally:
-            release_since(cache_mark)
-
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 URL_LINE_SCHEMA = "doc_id LONG, url STRING, text STRING"
@@ -1630,49 +1395,13 @@ def streaming_url_dedup_ingest(
     job (``url_fingerprint_store`` over the corpus)."""
     from cybersecurity_miw_spark.operators import urlcurate
 
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_url_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        cache_mark = release_mark()
-        try:
-            batch_df = batch_df.localCheckpoint(eager=True)
-            store = _read_store_if_present(sess, store_dir)
-            if store is not None:
-                accepted = urlcurate.url_dedup_against_store(
-                    batch_df, store
-                )
-            else:
-                accepted = urlcurate.url_exact_dedup(batch_df)
-            accepted = accepted.localCheckpoint(eager=True)
-            if metrics is not None:
-                n_batch = batch_df.count()
-                n_acc = accepted.count()
-                metrics.append({
-                    "batch_id": batch_id,
-                    "n_batch": n_batch,
-                    "n_accepted": n_acc,
-                    "n_rejected": n_batch - n_acc,
-                })
-            accepted.write.mode("append").parquet(corpus_dir)
-            urlcurate.url_fingerprint_store(accepted).write.mode(
-                "append"
-            ).parquet(store_dir)
-        finally:
-            release_since(cache_mark)
-
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    return _exact_dedup_loop(
+        spark, input_dir, checkpoint_dir, corpus_dir, store_dir,
+        available_now, metrics, max_files_per_trigger,
+        parse=parse_url_doc_lines,
+        dedup=_url_dedup,
+        store_rows=urlcurate.url_fingerprint_store,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_crawl_curate_ingest(
@@ -1733,95 +1462,63 @@ def streaming_crawl_curate_ingest(
 
     lang_profiles = langid.load_lang_profiles() if lang_allow is not None else None
 
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_url_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        cache_mark = release_mark()
-        try:
-            batch_df = batch_df.localCheckpoint(eager=True)
-            n_batch = batch_df.count() if metrics is not None else None
+        batch_df = batch_df.localCheckpoint(eager=True)
+        n_batch = batch_df.count() if metrics is not None else None
 
-            # 1. URL stage (processed-URL store)
-            url_store = _read_store_if_present(sess, url_store_dir)
-            if url_store is not None:
-                url_new = urlcurate.url_dedup_against_store(
-                    batch_df, url_store
-                )
-            else:
-                url_new = urlcurate.url_exact_dedup(batch_df)
-            url_new = url_new.localCheckpoint(eager=True)
+        # 1. URL stage (processed-URL store)
+        url_new = _url_dedup(
+            batch_df, _read_store_if_present(sess, url_store_dir)
+        ).localCheckpoint(eager=True)
 
-            # 2. extraction (the landing 'text' column carries HTML)
-            pages = url_new.withColumnRenamed("text", "html")
-            extracted = htmlextract.extract_main_text(
-                pages,
-                html_col="html",
-                id_col="doc_id",
-                min_words=min_words,
-                max_link_frac=max_link_frac,
-            ).select("doc_id", "text")
-            curated = pages.select("doc_id", "url").join(
-                extracted, "doc_id"
-            )
+        # 2. extraction (the landing 'text' column carries HTML)
+        pages = url_new.withColumnRenamed("text", "html")
+        extracted = htmlextract.extract_main_text(
+            pages,
+            html_col="html",
+            id_col="doc_id",
+            min_words=min_words,
+            max_link_frac=max_link_frac,
+        ).select("doc_id", "text")
+        curated = pages.select("doc_id", "url").join(extracted, "doc_id")
 
-            # 3. language gate
+        # 3. language gate
+        if lang_allow is not None:
             langs = langid.detect_language(
                 curated, profiles=lang_profiles
-            ).select("doc_id", "lang") if lang_allow is not None else None
-            if langs is not None:
-                curated = curated.join(langs, "doc_id").filter(
-                    F.col("lang").isin(*[str(x) for x in lang_allow])
-                )
-            curated = curated.localCheckpoint(eager=True)
-
-            # 4. text-fingerprint stage
-            fp_store = _read_store_if_present(sess, fp_store_dir)
-            if fp_store is not None:
-                accepted = dedup_against_store(curated, fp_store)
-            else:
-                keep = (
-                    curated.select(
-                        "doc_id", fingerprint(F.col("text")).alias("_fp")
-                    )
-                    .groupBy("_fp")
-                    .agg(F.min("doc_id").alias("doc_id"))
-                )
-                accepted = curated.join(
-                    keep.select("doc_id"), "doc_id", "left_semi"
-                )
-            accepted = accepted.localCheckpoint(eager=True)
-
-            if metrics is not None:
-                metrics.append({
-                    "batch_id": batch_id,
-                    "n_batch": n_batch,
-                    "n_url_new": url_new.count(),
-                    "n_lang_kept": curated.count(),
-                    "n_accepted": accepted.count(),
-                })
-            accepted.write.mode("append").parquet(corpus_dir)
-            fingerprint_store(accepted).write.mode("append").parquet(
-                fp_store_dir
+            ).select("doc_id", "lang")
+            curated = curated.join(langs, "doc_id").filter(
+                F.col("lang").isin(*[str(x) for x in lang_allow])
             )
-            urlcurate.url_fingerprint_store(url_new).write.mode(
-                "append"
-            ).parquet(url_store_dir)
-        finally:
-            release_since(cache_mark)
+        curated = curated.localCheckpoint(eager=True)
 
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+        # 4. text-fingerprint stage
+        accepted = _fingerprint_dedup(
+            curated, _read_store_if_present(sess, fp_store_dir)
+        ).localCheckpoint(eager=True)
+
+        if metrics is not None:
+            metrics.append({
+                "batch_id": batch_id,
+                "n_batch": n_batch,
+                "n_url_new": url_new.count(),
+                "n_lang_kept": curated.count(),
+                "n_accepted": accepted.count(),
+            })
+        accepted.write.mode("append").parquet(corpus_dir)
+        fingerprint_store(accepted).write.mode("append").parquet(
+            fp_store_dir
+        )
+        urlcurate.url_fingerprint_store(url_new).write.mode(
+            "append"
+        ).parquet(url_store_dir)
+
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body, parse=parse_url_doc_lines,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_frontier_ingest(
@@ -1864,92 +1561,79 @@ def streaming_frontier_ingest(
     ({'batch_id', 'n_pages', 'n_edges', 'n_unseen', 'n_emitted'})."""
     from cybersecurity_miw_spark.operators import linkgraph, robots
 
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    lines = reader.load(input_dir)
-    docs = parse_url_doc_lines(lines).where(F.col("doc_id").isNotNull())
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def body(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        cache_mark = release_mark()
-        try:
-            # r19 (§5 / VERDICT r18 #8): the per-stage eager
-            # localCheckpoints exist ONLY so the metrics funnel's
-            # count() actions don't recompute the upstream stage —
-            # with metrics=None they were four extra jobs per trigger
-            # for a single-consumer chain whose one real action is the
-            # final append (measured 3.19 -> 2.11 s/batch at the
-            # 12-batch fixture after gating them). This loop reads
-            # url_store_dir / robots_dir and writes frontier_dir —
-            # disjoint paths, so the lazy plan has no read-your-write
-            # hazard (unlike the curate loop, whose pre-append
-            # checkpoint snapshots the store it appends to — keep
-            # that one).
-            want_metrics = metrics is not None
-            if want_metrics:
-                batch_df = batch_df.localCheckpoint(eager=True)
-            n_pages = batch_df.count() if want_metrics else None
-            pages = batch_df.withColumnRenamed("text", "html")
-            edges = linkgraph.outlink_edges(pages)
-            if want_metrics:
-                edges = edges.localCheckpoint(eager=True)
-            n_edges = edges.count() if want_metrics else None
+        # r19 (§5 / VERDICT r18 #8): the per-stage eager
+        # localCheckpoints exist ONLY so the metrics funnel's
+        # count() actions don't recompute the upstream stage —
+        # with metrics=None they were four extra jobs per trigger
+        # for a single-consumer chain whose one real action is the
+        # final append (measured 3.19 -> 2.11 s/batch at the
+        # 12-batch fixture after gating them). This loop reads
+        # url_store_dir / robots_dir and writes frontier_dir —
+        # disjoint paths, so the lazy plan has no read-your-write
+        # hazard (unlike the curate loop, whose pre-append
+        # checkpoint snapshots the store it appends to — keep
+        # that one).
+        want_metrics = metrics is not None
+        if want_metrics:
+            batch_df = batch_df.localCheckpoint(eager=True)
+        n_pages = batch_df.count() if want_metrics else None
+        pages = batch_df.withColumnRenamed("text", "html")
+        edges = linkgraph.outlink_edges(pages)
+        if want_metrics:
+            edges = edges.localCheckpoint(eager=True)
+        n_edges = edges.count() if want_metrics else None
 
-            deg = linkgraph.url_in_degree(edges)
-            store = _read_store_if_present(sess, url_store_dir)
-            if store is not None:
-                fresh = deg.join(
-                    store.select("url_fingerprint"),
-                    F.md5(deg["dst_url"]) == F.col("url_fingerprint"),
-                    "left_anti",
-                )
-            else:
-                fresh = deg
-            if want_metrics:
-                fresh = fresh.localCheckpoint(eager=True)
-            n_unseen = fresh.count() if want_metrics else None
-
-            if robots_dir is not None:
-                robots_docs = _read_store_if_present(sess, robots_dir)
-                if robots_docs is not None:
-                    rules = robots.parse_robots(robots_docs)
-                    fresh = robots.robots_allowed(
-                        fresh, rules, agent=agent, url_col="dst_url"
-                    ).filter(F.col("allowed")).drop(
-                        "allowed", "matched_rule", "matched_type"
-                    )
-
-            out = fresh.select(
-                F.lit(int(batch_id)).alias("batch_id"),
-                F.md5("dst_url").alias("url_fingerprint"),
-                F.col("dst_url").alias("url"),
-                F.col("n_links").cast("long"),
-                F.col("n_src_pages").cast("long"),
+        deg = linkgraph.url_in_degree(edges)
+        store = _read_store_if_present(sess, url_store_dir)
+        if store is not None:
+            fresh = deg.join(
+                store.select("url_fingerprint"),
+                F.md5(deg["dst_url"]) == F.col("url_fingerprint"),
+                "left_anti",
             )
-            if want_metrics:
-                out = out.localCheckpoint(eager=True)
-            n_emitted = out.count() if want_metrics else None
-            out.write.mode("append").parquet(frontier_dir)
-            if metrics is not None:
-                metrics.append({
-                    "batch_id": int(batch_id),
-                    "n_pages": n_pages,
-                    "n_edges": n_edges,
-                    "n_unseen": n_unseen,
-                    "n_emitted": n_emitted,
-                })
-        finally:
-            release_since(cache_mark)
+        else:
+            fresh = deg
+        if want_metrics:
+            fresh = fresh.localCheckpoint(eager=True)
+        n_unseen = fresh.count() if want_metrics else None
 
-    writer = (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+        if robots_dir is not None:
+            robots_docs = _read_store_if_present(sess, robots_dir)
+            if robots_docs is not None:
+                rules = robots.parse_robots(robots_docs)
+                fresh = robots.robots_allowed(
+                    fresh, rules, agent=agent, url_col="dst_url"
+                ).filter(F.col("allowed")).drop(
+                    "allowed", "matched_rule", "matched_type"
+                )
+
+        out = fresh.select(
+            F.lit(int(batch_id)).alias("batch_id"),
+            F.md5("dst_url").alias("url_fingerprint"),
+            F.col("dst_url").alias("url"),
+            F.col("n_links").cast("long"),
+            F.col("n_src_pages").cast("long"),
+        )
+        if want_metrics:
+            out = out.localCheckpoint(eager=True)
+        n_emitted = out.count() if want_metrics else None
+        out.write.mode("append").parquet(frontier_dir)
+        if metrics is not None:
+            metrics.append({
+                "batch_id": int(batch_id),
+                "n_pages": n_pages,
+                "n_edges": n_edges,
+                "n_unseen": n_unseen,
+                "n_emitted": n_emitted,
+            })
+
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body, parse=parse_url_doc_lines,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_frontier(

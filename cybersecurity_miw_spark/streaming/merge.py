@@ -28,6 +28,7 @@ from cybersecurity_miw_spark.operators.aggregate import aggregate
 from cybersecurity_miw_spark.plans.compiler import parse
 from cybersecurity_miw_spark.plans.logdef import LogDef
 from cybersecurity_miw_spark.sources.text import clean_lines
+from cybersecurity_miw_spark.streaming.loop import micro_batch_loop
 
 
 def stream_logs(
@@ -54,24 +55,20 @@ def stream_logs(
     union_count uses the single-shuffle expression strategy because
     multi-aggregation joins are awkward in update-mode streams.
     """
-    lines = clean_lines(
-        spark.readStream.format("text").load(input_dir), ldef
-    )
-    agg = aggregate(parse(lines, ldef), ldef, union_count_strategy)
-
     if write_batch is None:
 
         def write_batch(batch_df: DataFrame, batch_id: int) -> None:
             batch_df.write.mode("overwrite").parquet(output_dir)
 
-    writer = (
-        agg.writeStream.outputMode("complete")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, write_batch,
+        parse=lambda lines: aggregate(
+            parse(clean_lines(lines, ldef), ldef), ldef, union_count_strategy
+        ),
+        not_null=(),
+        available_now=available_now,
+        output_mode="complete",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merge_results_batch(

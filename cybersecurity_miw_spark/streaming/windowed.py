@@ -31,6 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from cybersecurity_miw_spark.streaming.loop import (
+    _read_store_if_present,
+    micro_batch_loop,
+)
+
 EVENT_LINE_SCHEMA = "event_id long, ts timestamp, user_id long, etype string, value double"
 
 
@@ -39,6 +44,27 @@ def parse_event_lines(lines: DataFrame) -> DataFrame:
     return lines.select(
         F.from_csv(F.col("value"), EVENT_LINE_SCHEMA).alias("e")
     ).select("e.*")
+
+
+def _events(spark: SparkSession, input_dir: str) -> DataFrame:
+    """The streaming event frame over the lines landing in
+    ``input_dir``."""
+    return parse_event_lines(spark.readStream.format("text").load(input_dir))
+
+
+def _parquet_sink(
+    df: DataFrame, output_dir: str, checkpoint_dir: str, available_now: bool
+) -> StreamingQuery:
+    """Start an append-mode, checkpointed parquet sink for ``df``."""
+    writer = (
+        df.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def windowed_counts(
@@ -56,8 +82,7 @@ def windowed_counts(
     watermark passes its end — the scale-correct shape (closed-window
     state is freed; output is immutable so the sink can be a plain
     parquet append at any volume)."""
-    lines = spark.readStream.format("text").load(input_dir)
-    ev = parse_event_lines(lines)
+    ev = _events(spark, input_dir)
     agg = (
         ev.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), F.col("etype"))
@@ -73,15 +98,7 @@ def windowed_counts(
             "value_sum",
         )
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(agg, output_dir, checkpoint_dir, available_now)
 
 
 def streaming_sessions(
@@ -104,8 +121,7 @@ def streaming_sessions(
     open session, not stream history. This is the shape a 100 TB/day
     clickstream sessionizer runs forever: no custom state code, the
     engine's session-window state store does the merging."""
-    lines = spark.readStream.format("text").load(input_dir)
-    ev = parse_event_lines(lines)
+    ev = _events(spark, input_dir)
     agg = (
         ev.withWatermark("ts", watermark)
         .groupBy(
@@ -123,15 +139,7 @@ def streaming_sessions(
             "value_sum",
         )
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(agg, output_dir, checkpoint_dir, available_now)
 
 
 def streaming_dedup(
@@ -155,20 +163,11 @@ def streaming_dedup(
     lifetime — the property that makes this run forever at 100 TB/day
     where an unwatermarked ``dropDuplicates`` would grow state without
     bound."""
-    lines = spark.readStream.format("text").load(input_dir)
-    ev = parse_event_lines(lines)
+    ev = _events(spark, input_dir)
     deduped = ev.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         list(keys)
     )
-    writer = (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(deduped, output_dir, checkpoint_dir, available_now)
 
 
 # ---- custom stateful operator: per-user running profile ----
@@ -227,16 +226,6 @@ def running_user_profile(
     per trigger is bounded by touched-bucket bytes, not sink size."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    lines = spark.readStream.format("text").load(input_dir)
-    ev = parse_event_lines(lines)
-    profiles = ev.groupBy("user_id").applyInPandasWithState(
-        _profile_fn,
-        outputStructType=_PROFILE_OUTPUT,
-        stateStructType=_PROFILE_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
     n_buckets = 16
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -244,12 +233,13 @@ def running_user_profile(
         batch = batch_df.withColumn(
             "bucket", F.pmod(F.xxhash64("user_id"), F.lit(n_buckets))
         )
-        try:
-            existing = sess.read.parquet(output_dir)
-            has_sink = True
-        except Exception:  # first batch: sink not created yet
-            has_sink = False
-        if has_sink:
+        # existence is probed, not inferred from a read error: a
+        # transient FS failure on a later trigger must fail the
+        # trigger, not pass for "no sink yet" — the bucket overwrite
+        # below would then drop every untouched user in the touched
+        # buckets
+        existing = _read_store_if_present(sess, output_dir)
+        if existing is not None:
             touched = [
                 r["bucket"] for r in batch.select("bucket").distinct().collect()
             ]
@@ -268,14 +258,21 @@ def running_user_profile(
             .parquet(output_dir)
         )
 
-    writer = (
-        profiles.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, write_batch,
+        parse=lambda lines: parse_event_lines(lines)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _profile_fn,
+            outputStructType=_PROFILE_OUTPUT,
+            stateStructType=_PROFILE_STATE,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
+        not_null=(),
+        available_now=available_now,
+        output_mode="update",
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def enriched_stream(
@@ -294,18 +291,9 @@ def enriched_stream(
     dimension join, with no state store involvement (the static side
     is re-read per batch, so a refreshed dim parquet is picked up on
     the next trigger)."""
-    lines = spark.readStream.format("text").load(input_dir)
-    ev = parse_event_lines(lines)
+    ev = _events(spark, input_dir)
     joined = ev.join(dim_df, on, "left")
-    writer = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(joined, output_dir, checkpoint_dir, available_now)
 
 
 def streaming_minute_rollup(
@@ -330,8 +318,7 @@ def streaming_minute_rollup(
     is dropped (memory bounded by open windows × key cardinality) and
     the sink is append-only parquet (no upserts needed — a bucket row
     is written exactly once, when the watermark passes its end)."""
-    lines = spark.readStream.format("text").load(input_dir)
-    ev = parse_event_lines(lines)
+    ev = _events(spark, input_dir)
     cents = F.round(F.col("value") * cents_scale, 0).cast("long")
     agg = (
         ev.withWatermark("ts", watermark)
@@ -352,15 +339,7 @@ def streaming_minute_rollup(
             "value_max_c",
         )
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(agg, output_dir, checkpoint_dir, available_now)
 
 
 def stream_stream_join(
@@ -390,9 +369,7 @@ def stream_stream_join(
     Alert lines land as ``alert_id,ISO-ts,user_id,severity`` text
     files; events are the standard event-line shape.
     """
-    ev = parse_event_lines(
-        spark.readStream.format("text").load(events_dir)
-    ).withWatermark("ts", watermark)
+    ev = _events(spark, events_dir).withWatermark("ts", watermark)
     al = (
         spark.readStream.format("text")
         .load(alerts_dir)
@@ -414,15 +391,7 @@ def stream_stream_join(
     ).select(
         "event_id", "user_id", "ts", "etype", "alert_id", "a_ts", "severity"
     )
-    writer = (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(joined, output_dir, checkpoint_dir, available_now)
 
 
 def streaming_minute_distinct_rollup(
@@ -441,8 +410,7 @@ def streaming_minute_distinct_rollup(
     summed across minutes), sketches do — hour/day views
     ``hll_union_agg`` the sink and estimate at the end, and the same
     sink can be unioned with batch-built sketches for backfill."""
-    lines = spark.readStream.format("text").load(input_dir)
-    ev = parse_event_lines(lines)
+    ev = _events(spark, input_dir)
     agg = (
         ev.withWatermark("ts", watermark)
         .groupBy(
@@ -454,12 +422,4 @@ def streaming_minute_distinct_rollup(
             F.col("w.start").alias("bucket"), "event_type", "user_sketch"
         )
     )
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(agg, output_dir, checkpoint_dir, available_now)

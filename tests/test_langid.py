@@ -270,3 +270,39 @@ def test_random_text_parity_spark_vs_python(spark, profiles):
             row["lang_score_micro"],
             row["lang_margin_micro"],
         ) == want, (i, repr(t))
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "_lo", "_p", "_n", "_gate", "_ch", "_g", "gram", "ws",
+        "lang", "lang_score_micro", "lang_margin_micro",
+        "_mw_0", "_nm_12", "doc_id", "_GATE", "Lang",
+    ],
+)
+def test_carry_name_colliding_with_pipeline_columns_rejected(
+    spark, profiles, name
+):
+    """A carry column named like one of detect_language's own columns
+    (internal, output, the indexed per-language aggregates, or id_col
+    — compared case-insensitively, as Spark resolves them) fails with
+    a clear ValueError instead of a shadowed or ambiguous column."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(1, "hello world")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=f"carry column name '{name}'"):
+        langid.detect_language(df, profiles=profiles, carry={name: F.lit(1)})
+
+
+def test_carry_name_used_by_lang_report_accepted(spark, profiles):
+    """The ``_t`` token-count carry lang_report passes is not one of
+    the pipeline's names and is carried through to the output."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(1, HELD_OUT["en"])], "doc_id long, text string"
+    )
+    row = langid.detect_language(
+        df, profiles=profiles, carry={"_t": F.lit(7)}
+    ).collect()[0]
+    assert (row["doc_id"], row["_t"], row["lang"]) == (1, 7, "en")

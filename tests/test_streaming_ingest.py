@@ -935,6 +935,58 @@ def test_phash_stream_joins_externally_built_store_without_sidecar(
     assert fsutil.exists(spark, f"{store}/{_mm.PHASH_STORE_PARAMS_FILE}")
 
 
+def test_simhash_stream_joins_externally_built_store_without_sidecar(
+    spark, tmp_path
+):
+    """The SimHash twin of the phash test above: a store built
+    externally via ``simhash_band_store`` WITHOUT
+    ``write_simhash_store_params`` (a legacy store
+    ``load_simhash_band_store`` accepts) must be joined from the FIRST
+    trigger — store presence is detected from the data, not the params
+    sidecar, so cross-run pairs are never silently missed. The loop
+    adopts the stream's family into a fresh sidecar and records the
+    monitor's baseline there."""
+    import json
+
+    from cybersecurity_miw_spark import fsutil
+    from cybersecurity_miw_spark.operators import dedup as _dedup
+    from cybersecurity_miw_spark.streaming.ingest import (
+        streaming_simhash_flags,
+    )
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    flags = str(tmp_path / "flags")
+    store = str(tmp_path / "store")
+    ckpt = str(tmp_path / "ckpt")
+    base = "the quick brown fox jumps over the lazy dog again and again"
+
+    # external build: band rows only, NO sidecar
+    hist = spark.createDataFrame([(1, base)], "doc_id LONG, text STRING")
+    _dedup.simhash_band_store(hist).write.mode("overwrite").parquet(store)
+    sidecar = f"{store}/{_dedup.SIMHASH_STORE_PARAMS_FILE}"
+    assert not fsutil.exists(spark, sidecar)
+
+    (indir / "a.tsv").write_text(f"2\t{base} extra\n")
+    metrics: list = []
+    streaming_simhash_flags(
+        spark, str(indir), ckpt, flags, store, metrics=metrics
+    ).awaitTermination(120)
+
+    got = {
+        (r["new_id"], r["stored_id"])
+        for r in spark.read.parquet(flags).collect()
+    }
+    assert (2, 1) in got  # first trigger already saw the store
+    # the monitored trigger recorded its baseline into a fresh sidecar
+    assert len(metrics) == 1 and metrics[0]["stale"] is False
+    params = json.loads(fsutil.read_text(spark, sidecar))
+    assert (params["band_bits"], params["hash_fn"]) == (16, "xxhash64")
+    assert params["baseline_cand_per_doc"] == 1.0
+    loaded = _dedup.load_simhash_band_store(spark, store)
+    assert {r["doc_id"] for r in loaded.collect()} == {1, 2}
+
+
 def test_phash_streaming_flags_equal_pooled_batch_candidates(spark, tmp_path):
     """Cross-restart equivalence golden: the UNION of streaming phash
     flags across two runs, read as unordered pairs, is exactly the

@@ -84,6 +84,74 @@ def test_running_user_profile_state_survives_restart(spark, tmp_path):
     assert second == {7: (3, 14.0, 10.0), 8: (1, 5.0, 5.0)}
 
 
+def test_running_user_profile_sink_read_failure_fails_trigger(
+    spark, tmp_path, monkeypatch
+):
+    """A sink read that fails for any reason other than "no sink yet"
+    (a transient filesystem error) must fail the trigger. Passing it
+    off as a missing sink would overwrite each touched bucket with the
+    batch's rows alone and drop every untouched user in it. A restart
+    without the fault replays the batch and merges it."""
+    import pytest
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+    from pyspark.sql import DataFrameReader
+    from pyspark.sql import functions as F
+
+    # two users that share a sink bucket (pmod(xxhash64(user_id), 16))
+    bucket = {
+        r["u"]: r["b"]
+        for r in spark.range(1, 64)
+        .select(
+            F.col("id").alias("u"),
+            F.pmod(F.xxhash64("id"), F.lit(16)).alias("b"),
+        )
+        .collect()
+    }
+    touched, untouched = next(
+        (a, b) for a in bucket for b in bucket if a < b and bucket[a] == bucket[b]
+    )
+
+    indir = tmp_path / "in"
+    outdir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    indir.mkdir()
+
+    def sink():
+        return {
+            r["user_id"]: (r["n_events"], r["value_sum"], r["value_max"])
+            for r in spark.read.parquet(outdir).collect()
+        }
+
+    (indir / "a.log").write_text(
+        f"1,2026-01-01T10:00:00,{touched},click,1.0\n"
+        f"2,2026-01-01T10:01:00,{untouched},view,5.0\n"
+    )
+    _await(running_user_profile(spark, str(indir), ckpt, outdir))
+    first = {touched: (1, 1.0, 1.0), untouched: (1, 5.0, 5.0)}
+    assert sink() == first
+
+    (indir / "b.log").write_text(
+        f"3,2026-01-01T11:00:00,{touched},click,10.0\n"
+    )
+    real_parquet = DataFrameReader.parquet
+
+    def flaky_parquet(self, *paths, **options):
+        if paths and str(paths[0]).rstrip("/") == outdir:
+            raise OSError("simulated transient filesystem failure")
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", flaky_parquet)
+    q = running_user_profile(spark, str(indir), ckpt, outdir)
+    with pytest.raises(StreamingQueryException) as exc:
+        q.awaitTermination(120)
+    assert "simulated transient filesystem failure" in str(exc.value)
+    monkeypatch.undo()
+    assert sink() == first  # the failed trigger overwrote nothing
+
+    _await(running_user_profile(spark, str(indir), ckpt, outdir))
+    assert sink() == {touched: (2, 11.0, 10.0), untouched: (1, 5.0, 5.0)}
+
+
 def test_streaming_dedup_within_watermark(spark, tmp_path):
     from cybersecurity_miw_spark.streaming.windowed import streaming_dedup
 

@@ -169,33 +169,21 @@ class MiwJob:
         miw/log_format.cc:570-576) kept in ``self.result_ldef`` — the
         constructor-supplied ``self.ldef`` is never mutated, so
         repeated ``result()``/``parsed()`` calls on one job see the
-        same field list. Sinks must read ``self.result_ldef``."""
+        same field list. Sinks must read ``self.result_ldef``. With
+        ``store_content`` the group's raw lines come out as ``content``
+        from the same aggregation (one scan of the input)."""
         from cybersecurity_miw_spark.plans.compiler import discover_kv_fields
 
         rows = self.parsed(spark)
         rows, ldef = discover_kv_fields(rows, self.ldef)
         self.result_ldef = ldef
-        out = aggregate(
+        return aggregate(
             rows,
             ldef,
             self.union_count_strategy,
             self._extra_keys,
             union_limit=self.union_limit,
         )
-        if self.store_content:
-            from cybersecurity_miw_spark.functions.cols import qcol
-            from cybersecurity_miw_spark.operators.aggregate import key_columns
-
-            gcols = key_columns(ldef) + list(self._extra_keys)
-            raws = rows.groupBy(*[qcol(g) for g in gcols]).agg(
-                F.collect_list("_raw").alias("content")
-            )
-            if gcols:
-                out = out.join(raws, on=gcols, how="left")
-            else:  # keyless format: one global group
-                # bcast-bound: keyless format = exactly 1 global group row
-                out = out.crossJoin(F.broadcast(raws))
-        return out
 
     # -- sinks --
 

@@ -27,8 +27,10 @@ Mapping (SURVEY §2.4):
                   order, which is nondeterministic under parallel
                   merge; we sort for a stable result)
 * A9 union_count→ per-group value histogram map<value,count>
-                  (log_record.cc:100-124) — two-phase groupBy (scale
-                  path) or single-shuffle expression (small groups)
+                  (log_record.cc:100-124) — tagged rows aggregated in
+                  two levels beside every other aggregate, one scan
+                  (scale path), or a single-groupBy expression (the
+                  streaming merge loop)
 * A10 ratio     → post-aggregation projection num/denom, 0 when denom
                   is 0 (log_record.cc:747-823); operands are other
                   aggregated fields or the literal "logs"
@@ -43,6 +45,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType
 from pyspark.sql.window import Window
 
 from cybersecurity_miw_spark.functions.cols import qcol
@@ -50,6 +53,9 @@ from cybersecurity_miw_spark.plans.logdef import Field, LogDef
 
 LOGS_COL = "logs"
 ID_COL = "id"
+RAW_COL = "_raw"  # the raw line, kept by parse(keep_raw=True)
+CONTENT_COL = "content"
+TAG_COL = "_tag"
 
 
 def key_columns(ldef: LogDef) -> list[str]:
@@ -78,9 +84,9 @@ _AGG_EXPRS_MEMO_APP: str | None = None  # single-app dict, see derive.memo_for_a
 
 def simple_agg_exprs(ldef: LogDef, skip_union: bool = False) -> list[Column]:
     """All single-pass aggregate expressions (everything except
-    union_count, which needs its own plan, and ratio, which is a
-    post-projection). ``skip_union`` leaves A8 union fields to the
-    bounded two-phase path (:func:`union_limited_values`)."""
+    union_count, which needs a second aggregation level, and ratio,
+    which is a post-projection). ``skip_union`` leaves A8 union fields
+    to the bounded two-phase path (:func:`union_limited_values`)."""
     global _AGG_EXPRS_MEMO_APP
     from cybersecurity_miw_spark.operators.derive import _app_id, memo_for_app
 
@@ -147,9 +153,10 @@ def _build_simple_agg_exprs(
 
 def union_count_expr(field_name: str) -> Column:
     """Single-shuffle union_count: build the histogram from a
-    collect_list with array expressions. O(n·distinct) per group —
-    only for formats whose groups are known small; the default plan
-    uses :func:`aggregate_with_union_count`'s two-phase path."""
+    collect_list with array expressions. O(n·distinct) per group, and
+    the whole group's values sit in one buffer — only for groups known
+    small; the default plan is :func:`_tagged_aggregate`. Null values
+    are skipped (collect_list drops them)."""
     lst = F.collect_list(qcol(field_name))
     return F.map_from_entries(
         F.transform(
@@ -172,6 +179,20 @@ def aggregate(
     """parsed rows → one row per group with every aggregate, the ``id``
     composite key, ``logs``, and ratio post-projections.
 
+    One pass over ``df``: every aggregate, union_count histograms
+    included, comes out of the same scan and tokenize. Without
+    union_count fields that is one groupBy; with them the rows are
+    tagged and aggregated in two levels (:func:`_tagged_aggregate`).
+    ``union_count_strategy="expr"`` instead builds each histogram
+    inside the one groupBy (:func:`union_count_expr`, O(n·distinct) per
+    group) — for a caller that cannot chain two aggregations, the
+    streaming merge loop.
+
+    Rows that carry the raw line (``_raw``, from
+    ``parse(keep_raw=True)``) also get ``content``, the list of the
+    group's lines (reference -store_content, miw/log_record.cc:304-310),
+    collected in the same aggregation.
+
     ``extra_keys`` join the groupBy without entering the ``id`` — the
     per-file result mode (reference default, miw/job.cc:134-137) passes
     ``("_file",)`` so one job yields every file's independent result.
@@ -182,8 +203,11 @@ def aggregate(
     IP under a date_hour_user key, would otherwise grow an unbounded
     collect_set buffer in a single executor). The cap is applied BEFORE
     any per-group array materializes (:func:`union_limited_values`), so
-    aggregation state stays O(union_limit) per group.
+    aggregation state stays O(union_limit) per group; that bounded path
+    is a second branch over ``df``, joined back on the keys.
     """
+    if union_count_strategy not in ("two-phase", "expr"):
+        raise ValueError(f"unknown union_count_strategy {union_count_strategy!r}")
     keys = key_columns(ldef)
     all_keys = keys + list(extra_keys)
     ucount_fields = [
@@ -197,9 +221,16 @@ def aggregate(
 
     gcols = [qcol(k) for k in all_keys]
     aggs = simple_agg_exprs(ldef, skip_union=bool(union_fields))
-    if union_count_strategy == "expr":
-        aggs += [union_count_expr(f.name) for f in ucount_fields]
-    out = df.groupBy(*gcols).agg(*aggs)
+    if RAW_COL in df.columns:
+        aggs.append(F.collect_list(RAW_COL).alias(CONTENT_COL))
+    if ucount_fields and union_count_strategy == "two-phase":
+        out = _tagged_aggregate(df, all_keys, aggs, [f.name for f in ucount_fields])
+        if not all_keys:
+            out = _fill_empty_global(out, ldef)
+    else:
+        if union_count_strategy == "expr":
+            aggs += [union_count_expr(f.name) for f in ucount_fields]
+        out = df.groupBy(*gcols).agg(*aggs)
 
     for f in union_fields:
         vals = union_limited_values(
@@ -215,22 +246,6 @@ def aggregate(
             # bcast-bound: keyless format = exactly 1 global union row
             out = out.crossJoin(F.broadcast(vals))
 
-    if ucount_fields and union_count_strategy == "two-phase":
-        # Scale path: per-field (keys, value) pre-aggregation then a
-        # map roll-up. Both groupBys hash-partition on a superset /
-        # equal key set and partially aggregate map-side; the join back
-        # is co-partitioned on the group keys. Keyless formats (legal
-        # in the reference) produce a single global histogram row,
-        # attached with a broadcast cross join.
-        for f in ucount_fields:
-            hist = value_histogram(df, all_keys, f.name)
-            if all_keys:
-                out = out.join(hist, on=all_keys, how="left")
-            else:
-                # bcast-bound: keyless format = exactly 1 global histogram
-                #   row
-                out = out.crossJoin(F.broadcast(hist))
-
     # ratio post-projection (A10): operands are aggregated field names
     # or the literal "logs"
     for f in ldef.fields:
@@ -244,6 +259,95 @@ def aggregate(
         )
 
     return out.withColumn(ID_COL, id_column(ldef))
+
+
+def _tagged_aggregate(
+    df: DataFrame, keys: list[str], aggs: list[Column], hist_cols: list[str]
+) -> DataFrame:
+    """Every plain aggregate plus one value histogram per ``hist_cols``
+    entry (A9, map<value,count> named ``<col>_counts``) from ONE read
+    of ``df`` — the reference's single map pass and merge
+    (miw/log_record.cc:100-124,251-324).
+
+    * Tag: each row becomes 1+k rows (``_tag`` 0..k). Tag 0 carries the
+      plain aggregate inputs; tag i carries only the i-th histogram
+      value, in its own ``_uc_i`` column so each map keeps its key type.
+      Every other column is masked to null off its tag.
+    * Level 1: groupBy(keys, _tag, _uc_1.._uc_k) runs ``aggs`` —
+      partially aggregated map-side. On tag 0 they are the group's
+      plain aggregates; on tag i the ``logs`` row count is the
+      histogram count of one (group, value) pair.
+    * Level 2: groupBy(keys) reads the plain aggregates off the one
+      tag-0 row and collects the tag-i (value, count) pairs into each
+      sorted map.
+
+    Both groupBys shuffle only pre-aggregated rows, and a hot group
+    spreads over its distinct values at level 1. A null histogram
+    value becomes a null map key, which fails the job (NULL_MAP_KEY).
+    """
+    tag = F.col(TAG_COL)
+    ucs = [f"_uc_{i}" for i in range(1, len(hist_cols) + 1)]
+    unmasked = set(keys) | set(hist_cols)
+    tagged = df.withColumn(
+        TAG_COL, F.explode(F.array(*[F.lit(i) for i in range(len(ucs) + 1)]))
+    ).select(
+        *[qcol(k) for k in keys],
+        tag,
+        *[
+            F.when(tag == i, qcol(c)).alias(uc)
+            for i, (c, uc) in enumerate(zip(hist_cols, ucs), start=1)
+        ],
+        *[
+            F.when(tag == 0, qcol(c)).alias(c)
+            for c in df.columns
+            if c not in unmasked
+        ],
+    )
+    level1 = tagged.groupBy(*[qcol(k) for k in keys], tag, *ucs).agg(*aggs)
+    grouping = set(keys) | {TAG_COL, *ucs}
+    plain = [c for c in level1.columns if c not in grouping]
+    return level1.groupBy(*[qcol(k) for k in keys]).agg(
+        *[
+            F.first(F.when(tag == 0, qcol(c)), ignorenulls=True).alias(c)
+            for c in plain
+        ],
+        *[
+            F.map_from_entries(
+                F.sort_array(
+                    F.collect_list(
+                        F.when(tag == i, F.struct(uc, F.col(LOGS_COL)))
+                    )
+                )
+            ).alias(f"{c}_counts")
+            for i, (c, uc) in enumerate(zip(hist_cols, ucs), start=1)
+        ],
+    )
+
+
+def _fill_empty_global(out: DataFrame, ldef: LogDef) -> DataFrame:
+    """A keyless (global) roll-up yields its one row even over no input
+    rows, where every ``first()`` reads null: give that row the values
+    a one-pass aggregate has over no rows — 0 for ``logs`` and counts,
+    0.0 for variance, empty arrays and maps."""
+    zero: dict[str, Column] = {LOGS_COL: F.lit(0)}
+    for f in ldef.fields:
+        if f.is_filter_contain:
+            continue
+        if f.aggregation == "count":
+            zero[f"{f.name}_count"] = F.lit(0)
+        elif f.aggregation == "variance":
+            zero[f.name] = F.lit(0.0)
+    for sf in out.schema.fields:
+        if isinstance(sf.dataType, ArrayType):
+            zero[sf.name] = F.array().cast(sf.dataType)
+        elif isinstance(sf.dataType, MapType):
+            zero[sf.name] = F.create_map().cast(sf.dataType)
+    return out.select(
+        *[
+            F.coalesce(qcol(c), zero[c]).alias(c) if c in zero else qcol(c)
+            for c in out.columns
+        ]
+    )
 
 
 def union_limited_values(
@@ -274,9 +378,11 @@ def union_limited_values(
 
 def value_histogram(df: DataFrame, keys: list[str], col: str) -> DataFrame:
     """Standalone union_count (A9): per-group value histogram as a
-    map<value,count> column named ``<col>_counts``. Two-phase plan:
-    (keys, value) pre-aggregation (map-side combined, skew-free even
-    when one group dominates) then a map roll-up on keys."""
+    map<value,count> column named ``<col>_counts``, for callers that
+    need a histogram alone (:func:`aggregate` builds its histograms
+    beside the other aggregates instead). Two-phase plan: (keys, value)
+    pre-aggregation (map-side combined, skew-free even when one group
+    dominates) then a map roll-up on keys."""
     return (
         df.groupBy(*[qcol(k) for k in keys], qcol(col))
         .agg(F.count(F.lit(1)).alias("_cnt"))

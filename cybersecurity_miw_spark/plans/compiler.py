@@ -24,11 +24,13 @@ Scale notes (100 TB design):
 * The only shuffle is the aggregation exchange on the group keys;
   every aggregate here is algebraic, so map-side partial aggregation
   bounds the shuffle volume by the number of distinct groups per task,
-  not the input size.
+  not the input size. A format with `union_count` fields adds one
+  level: its rows are tagged and pre-reduced on (keys, tag, value)
+  before the roll-up on the keys — still one scan, two exchanges.
 * Heavy-tailed composite keys (e.g. date_hour_user in proxy logs) are
-  handled by AQE skew handling plus, for `union`/`union_count` fields
-  with pathological groups, the optional `two-phase` strategy which
-  pre-reduces on (keys, value) — the classic salting-free histogram.
+  handled by AQE skew handling; a `union_count` histogram of a hot
+  group spreads over its distinct values at the (keys, tag, value)
+  level — the classic salting-free histogram.
 * No Python UDFs anywhere: the whole plan is JVM expressions inside
   WholeStageCodegen.
 """

@@ -8,8 +8,8 @@ re-emitting the previous reduce output into the next map phase
 (miw/mr_job.h:147-177). In Spark this is either:
 
 * **batch**: all files in one plan — ``spark.read.text([...])`` then
-  one groupBy; the incremental machinery has no reason to exist; or
-* **streaming**: a file-source Structured Streaming query in "update"
+  one aggregation; the incremental machinery has no reason to exist; or
+* **streaming**: a file-source Structured Streaming query in "complete"
   mode — new files landing in a directory merge into the running
   aggregation state, checkpointed (= tmp_save), which is the honest
   cluster analog of "keep summarizing as logs arrive".
@@ -52,8 +52,11 @@ def stream_logs(
     golden in tests/test_streaming_merge.py injects a failing
     ``write_batch`` to prove it.
 
-    union_count uses the single-shuffle expression strategy because
-    multi-aggregation joins are awkward in update-mode streams.
+    union_count uses the single-groupBy expression strategy: the
+    loop runs the aggregation as a ``complete``-mode streaming query,
+    and Structured Streaming refuses to start one that chains a second
+    aggregation onto a streaming aggregation (an AnalysisException),
+    which the batch path's two-level histogram is.
     """
     if write_batch is None:
 

@@ -230,9 +230,12 @@ def running_user_profile(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
+        # materialized once: the touched-bucket collect, the anti-join
+        # and the union below all read it, and each read of the live
+        # frame would rerun the state function for every touched key
         batch = batch_df.withColumn(
             "bucket", F.pmod(F.xxhash64("user_id"), F.lit(n_buckets))
-        )
+        ).localCheckpoint(eager=True)
         # existence is probed, not inferred from a read error: a
         # transient FS failure on a later trigger must fail the
         # trigger, not pass for "no sink yet" — the bucket overwrite
@@ -246,11 +249,14 @@ def running_user_profile(
             carried = existing.where(F.col("bucket").isin(touched)).join(
                 batch.select("user_id"), "user_id", "left_anti"
             )
-            merged = carried.select(*batch.columns).unionByName(batch)
+            # materialize BEFORE the overwrite touches the files being read
+            merged = (
+                carried.select(*batch.columns)
+                .unionByName(batch)
+                .localCheckpoint(eager=True)
+            )
         else:
             merged = batch
-        # materialize BEFORE the overwrite touches the files being read
-        merged = merged.localCheckpoint(eager=True)
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -610,3 +610,42 @@ def test_predicate_pushdown_reaches_parquet_scan(spark):
     plan20 = _plan(spark, "tpch_q20_excess_shippers")
     assert "StringStartsWith(p_name,small)" in plan20
     assert "GreaterThanOrEqual(l_shipdate" in plan20
+
+
+# proxy summary with a union_count histogram beside plain aggregates
+_PROXY_HIST_FORMAT = {
+    "format_name": "proxy_hist",
+    "delims": " ",
+    "quotechar": '"',
+    "commentchar": "#",
+    "fields": [
+        {"name": "time", "pos": 1, "type": "time", "key": True,
+         "processing": "hour"},
+        {"name": "cs-host", "pos": 10, "type": "string",
+         "aggregation": "union_count"},
+        {"name": "cs-username", "pos": 14, "type": "string", "key": True},
+        {"name": "sc-bytes", "pos": 6, "type": "int", "aggregation": "sum"},
+        {"name": "cs-categories", "pos": 21, "type": "string",
+         "aggregation": "union"},
+    ],
+}
+
+
+@pytest.mark.parametrize("store_content", [False, True])
+def test_union_count_job_scans_its_input_once(spark, store_content):
+    """A union_count summary reads and tokenizes its input once: the
+    histograms, the plain aggregates and the stored lines all come out
+    of one tagged two-level aggregation, with no join back on the keys
+    (operators/aggregate.py:_tagged_aggregate)."""
+    from cybersecurity_miw_spark.job import MiwJob
+
+    path = os.path.join(os.path.dirname(__file__), "fixtures", "web_proxy.log")
+    df = MiwJob(
+        _PROXY_HIST_FORMAT, files=[path], store_content=store_content
+    ).result(spark)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1
+    assert plan.count("regexp_extract_all") == 1
+    assert "Join" not in plan
+    assert "BroadcastExchange" not in plan
+    assert plan.count("Exchange") <= 2

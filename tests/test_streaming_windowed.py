@@ -152,6 +152,50 @@ def test_running_user_profile_sink_read_failure_fails_trigger(
     assert sink() == {touched: (2, 11.0, 10.0), untouched: (1, 5.0, 5.0)}
 
 
+def test_running_user_profile_state_fn_runs_once_per_touched_key(
+    spark, tmp_path, monkeypatch
+):
+    """Each trigger runs the state function once per touched key, also
+    once the sink exists and the batch is merged into it: the batch
+    frame is read by the bucket collect, the anti-join and the union,
+    and is materialized once for all three. The calls are counted in a
+    file, since the function runs in Python workers."""
+    from cybersecurity_miw_spark.streaming import windowed
+
+    calls = tmp_path / "calls"
+    real = windowed._profile_fn
+
+    def counted(key, pdfs, state):
+        with open(calls, "a") as fh:
+            fh.write(f"{key[0]}\n")
+        yield from real(key, pdfs, state)
+
+    def tally():
+        ids = calls.read_text().split()
+        return {int(u): ids.count(u) for u in set(ids)}
+
+    monkeypatch.setattr(windowed, "_profile_fn", counted)
+    indir = tmp_path / "in"
+    outdir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    indir.mkdir()
+
+    (indir / "a.log").write_text(
+        "1,2026-01-01T10:00:00,7,click,1.0\n"
+        "2,2026-01-01T10:01:00,8,view,5.0\n"
+    )
+    _await(running_user_profile(spark, str(indir), ckpt, outdir))
+    assert tally() == {7: 1, 8: 1}
+
+    (indir / "b.log").write_text("3,2026-01-01T11:00:00,7,click,10.0\n")
+    _await(running_user_profile(spark, str(indir), ckpt, outdir))
+    assert tally() == {7: 2, 8: 1}
+    assert {
+        r["user_id"]: (r["n_events"], r["value_sum"], r["value_max"])
+        for r in spark.read.parquet(outdir).collect()
+    } == {7: (2, 11.0, 10.0), 8: (1, 5.0, 5.0)}
+
+
 def test_streaming_dedup_within_watermark(spark, tmp_path):
     from cybersecurity_miw_spark.streaming.windowed import streaming_dedup
 

@@ -14,6 +14,7 @@ import pytest
 
 from cybersecurity_miw_spark.job import MiwJob
 from cybersecurity_miw_spark.sources import parity
+from tests.reference_checkout import needs_reference
 
 EVTX_FORMAT = "/root/reference/miw/formats/evtx.json"
 EVTX2_FORMAT = "/root/reference/miw/formats/evtx2.json"
@@ -39,6 +40,7 @@ EVTX2_LINES = [
 ]
 
 
+@needs_reference(EVTX_FORMAT)
 def test_evtx_dynamic_fields_grouped(spark):
     """evtx.json end-to-end: dynamic fields appear as columns and in
     the reference-shape JSON output."""
@@ -69,6 +71,7 @@ def test_evtx_dynamic_fields_grouped(spark):
     assert "EventData" not in by_id["2012-11-30_23:00_HOST1"]
 
 
+@needs_reference(EVTX2_FORMAT)
 def test_evtx2_dynamic_fields_grouped(spark):
     job = MiwJob(format=EVTX2_FORMAT, lines=EVTX2_LINES)
     df = job.result(spark)
@@ -151,6 +154,7 @@ def test_reserved_payload_keys_are_prefix_renamed(spark):
     assert r["ok"] == "fine"
 
 
+@needs_reference(EVTX_FORMAT)
 def test_result_is_repeatable(spark):
     """result() must not mutate the constructor-supplied LogDef: two
     calls on one job see the same field list and schema."""

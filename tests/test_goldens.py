@@ -11,6 +11,8 @@ documented.
 import pytest
 
 from cybersecurity_miw_spark.job import MiwJob
+from tests.reference_checkout import needs_reference
+from tests.test_parity_output import PROXY_FORMAT
 
 FIX = "tests/fixtures"
 
@@ -311,6 +313,7 @@ def test_ip4_roundtrip_validation_and_cidr(spark):
             net.cidr_contains(badc, F.col("ip"))
 
 
+@needs_reference(PROXY_FORMAT)
 def test_gzip_logs_read_transparently(spark, tmp_path):
     """Compressed log files (the production norm) flow through the
     same CLI/job path: Spark's text source decodes .gz per file —
@@ -410,6 +413,7 @@ def test_ua_parsing_families_and_versions(spark):
         assert got[ua] == (fam, ver, osname), (ua, got[ua])
 
 
+@needs_reference(PROXY_FORMAT)
 def test_columnar_sinks_roundtrip(spark, tmp_path):
     """parquet/orc sinks preserve the typed result schema (arrays
     stay arrays) and the full row set."""
@@ -423,6 +427,7 @@ def test_columnar_sinks_roundtrip(spark, tmp_path):
         assert back == want, codec
 
 
+@needs_reference(PROXY_FORMAT)
 def test_cli_explain_prints_plan_without_executing(spark, capsys, tmp_path):
     from cybersecurity_miw_spark import job as jobmod
 

@@ -20,6 +20,7 @@ import pytest
 
 from cybersecurity_miw_spark.job import MiwJob
 from cybersecurity_miw_spark.sources import parity
+from tests.reference_checkout import needs_reference
 
 FIXTURE = str(Path(__file__).parent / "fixtures" / "web_proxy_10lines.log")
 PROXY_FORMAT = "/root/reference/miw/formats/proxy_format.json"
@@ -60,17 +61,20 @@ def proxy_result(spark):
     return job.result(spark), job.result_ldef
 
 
+@needs_reference(PROXY_FORMAT)
 def test_csv_header_alphabetical(proxy_result):
     df, ldef = proxy_result
     assert parity.csv_header(df, ldef) == EXPECTED_HEADER
 
 
+@needs_reference(PROXY_FORMAT)
 def test_csv_lines_reference_shape(proxy_result):
     df, ldef = proxy_result
     lines = [r[0] for r in parity.csv_lines(df, ldef).collect()]
     assert lines == EXPECTED_CSV
 
 
+@needs_reference(PROXY_FORMAT)
 def test_json_lines_reference_shape(proxy_result):
     df, ldef = proxy_result
     lines = [r[0] for r in parity.json_lines(df, ldef).collect()]
@@ -100,6 +104,7 @@ def test_json_lines_reference_shape(proxy_result):
     assert nqo["time"] == "23"
 
 
+@needs_reference(PROXY_FORMAT)
 def test_readme_demo_topk(proxy_result, capsys):
     """The README's console output: 2 keys, 2 logs each
     (/root/reference/README.md:99-103)."""
@@ -145,6 +150,7 @@ def test_store_content_companion_records(spark):
     ]
 
 
+@needs_reference(PROXY_FORMAT)
 def test_compressed_flag_gzips_line_sinks_byte_exact(spark, tmp_path):
     """-compressed (the reference's stored-content snappy flag,
     log_record.cc:351-357, mapped to sink codecs): the json sink

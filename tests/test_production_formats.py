@@ -13,6 +13,7 @@ std::to_string rendering)."""
 from __future__ import annotations
 
 from cybersecurity_miw_spark.job import MiwJob
+from tests.reference_checkout import needs_reference
 
 FMT = "/root/reference/miw/formats"
 
@@ -48,6 +49,7 @@ def _cp_line(date: str, user: str, action: str = "accept") -> str:
     )
 
 
+@needs_reference(f"{FMT}/firewall_checkpoint.json")
 def test_checkpoint_groups_and_first_values(spark):
     lines = (
         [_cp_line("30Nov2012", "alice", "accept")] * 4
@@ -71,6 +73,7 @@ def test_checkpoint_groups_and_first_values(spark):
     assert rows["30Nov2012_bob"]["proto"] == "tcp"
 
 
+@needs_reference(f"{FMT}/firewall_checkpoint.json")
 def test_checkpoint_collapsed_delimiters_drop_short_lines(spark):
     """The reference's boost char_separator drops empty tokens, so a
     line with an empty field has 97 positions and every field beyond
@@ -111,6 +114,7 @@ def _pa_line(ts: str, src: str, dst: str, sport: str, dport: str, proto: str) ->
     )
 
 
+@needs_reference(f"{FMT}/paloalto.json")
 def test_paloalto_minute_bucketed_composite_key(spark):
     lines = (
         [_pa_line("2012/11/30 23:05:12", "10.0.0.1", "8.8.8.8", "51000", "443", "tcp")] * 3
@@ -151,6 +155,7 @@ def _mc_line(event: str, ip: str, host: str, risk: str, path: str, ts: str) -> s
     )
 
 
+@needs_reference(f"{FMT}/McAfee.json")
 def test_mcafee_threat_event_grouping(spark):
     ts_a = "11/30/2012 23:05:12"
     ts_b = "11/30/2012 23:07:45"
@@ -195,6 +200,7 @@ def _bc_line(user: str, ip: str) -> str:
     )
 
 
+@needs_reference(f"{FMT}/anon_bluecoat_format.json")
 def test_bluecoat_union_of_server_ips(spark):
     lines = [
         _bc_line("alice", "93.184.216.34"),
@@ -234,6 +240,7 @@ def _dc_line(date: str, time: str, user: str, src: str, dev: str, cat: str) -> s
     )
 
 
+@needs_reference(f"{FMT}/domain_controller_format.json")
 def test_domain_controller_buckets_and_histograms(spark):
     lines = (
         [_dc_line("2012-11-30", "23:05:12", "alice", "10.2.0.4", "10.9.9.1", "Logon")] * 2

@@ -7,22 +7,29 @@ comma: exercises the lenient jsoncpp-style parse.)
 from __future__ import annotations
 
 import glob
+import os
 
 import pytest
 
 from cybersecurity_miw_spark.plans.compiler import compile_pipeline
 from cybersecurity_miw_spark.plans.logdef import LogDef
 from cybersecurity_miw_spark.sources.text import from_lines
+from tests.reference_checkout import needs_reference
 
 FORMAT_GLOB = "/root/reference/miw/formats/*.json"
 SKIP = {"test_json2pb.py"}
+
+needs_reference_formats = needs_reference(os.path.dirname(FORMAT_GLOB))
 
 
 def format_paths() -> list[str]:
     return sorted(glob.glob(FORMAT_GLOB))
 
 
-@pytest.mark.parametrize("path", format_paths(), ids=lambda p: p.rsplit("/", 1)[-1])
+@needs_reference_formats
+@pytest.mark.parametrize(
+    "path", format_paths(), ids=[os.path.basename(p) for p in format_paths()]
+)
 def test_format_loads_and_compiles(spark, path):
     ldef = LogDef.load(path)
     assert ldef.fields
@@ -112,17 +119,25 @@ def _clean_dict(ldef: LogDef) -> dict:
     return d
 
 
-@pytest.mark.parametrize("path", FMT_PATHS, ids=lambda p: p.rsplit("/", 1)[-1])
+@needs_reference_formats
+@pytest.mark.parametrize(
+    "path", FMT_PATHS, ids=[os.path.basename(p) for p in FMT_PATHS]
+)
 def test_fmt_decodes_and_validates(path):
     """Every shipped binary .fmt decodes to a validated LogDef."""
     ldef = LogDef.load(path)
     assert ldef.fields and ldef.delims
 
 
+@needs_reference_formats
 @pytest.mark.parametrize(
     "path",
     [p for p in FMT_PATHS if p.rsplit("/", 1)[-1] not in STALE_FMT],
-    ids=lambda p: p.rsplit("/", 1)[-1],
+    ids=[
+        os.path.basename(p)
+        for p in FMT_PATHS
+        if p.rsplit("/", 1)[-1] not in STALE_FMT
+    ],
 )
 def test_fmt_identical_to_json_sibling(path):
     """Where the shipped binary is in sync with its JSON source, the
@@ -132,6 +147,7 @@ def test_fmt_identical_to_json_sibling(path):
     )
 
 
+@needs_reference_formats
 def test_fmt_stale_binaries_decode_faithfully():
     """The 5 stale binaries decode to exactly what their bytes say:
     evidence that the DIFFERENCES are reference-side compile artifacts,
@@ -158,6 +174,7 @@ def test_fmt_stale_binaries_decode_faithfully():
     assert aggs["sc-filter-result"] == "union_count"  # JSON says union
 
 
+@needs_reference_formats
 def test_fmt_end_to_end_equals_json(spark):
     """A .fmt-driven job produces the same result as its JSON twin
     (evtx2, whose shipped binary is in sync)."""
@@ -173,7 +190,10 @@ def test_fmt_end_to_end_equals_json(spark):
 # ---- binary .fmt writing (miw/formats/format_json2pb.py:9-19) ----
 
 
-@pytest.mark.parametrize("path", FMT_PATHS, ids=lambda p: p.rsplit("/", 1)[-1])
+@needs_reference_formats
+@pytest.mark.parametrize(
+    "path", FMT_PATHS, ids=[os.path.basename(p) for p in FMT_PATHS]
+)
 def test_fmt_save_load_roundtrip(path, tmp_path):
     """save_fmt is the write half of the format tooling: every shipped
     .fmt survives decode → encode → decode with identical fields."""
@@ -185,6 +205,7 @@ def test_fmt_save_load_roundtrip(path, tmp_path):
     assert _clean_dict(LogDef.load(out)) == _clean_dict(ldef)
 
 
+@needs_reference_formats
 def test_fmt_save_from_json_equals_shipped_decode(tmp_path):
     """Compiling a JSON format with save_fmt yields a binary that
     decodes identically to the JSON load — the json2pb workflow."""

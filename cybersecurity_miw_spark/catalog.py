@@ -2109,7 +2109,7 @@ def q_semantic_dedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH-bucketed cosine join as semantic_dedup_survivors; the oracle
 # closes it with the recursive-CTE reachability fixpoint (the
 # dup_clusters_cc pattern) and keeps each component's minimum id —
-# exactly what dup_clusters_auto's min-label propagation computes.
+# exactly what dup_clusters' union-find computes.
 _SEMANTIC_CLUSTERS_SQL = f"""
 WITH RECURSIVE b AS (
   SELECT vec_id, embedding::DOUBLE[] AS v,
@@ -2141,7 +2141,7 @@ def q_semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-atomic SemDeDup
     (operators/similarity.py:semantic_dedup_clusters): the
     LSH-bucketed cosine pair list routed through connected components
-    (min-label propagation, star-contraction escalation) keeping each
+    (dedup.dup_clusters, a two-level union-find) keeping each
     component's minimum id — one survivor per semantic cluster, drops
     exactly size(component)−1. Same planes/threshold as
     `semantic_dedup_survivors`, so the two oracles differ only where
@@ -8884,7 +8884,7 @@ def q_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Duplicate clusters: connected components over the LSH->Jaccard>=0.8
 # confirmed pair graph. The oracle closes the symmetric edge relation
 # with a recursive CTE and takes each node's minimum reachable id —
-# the exact fixpoint the iterative min-label propagation computes.
+# the component minimum the dup_clusters union-find computes.
 _CLUSTERS_SQL = f"""
 WITH RECURSIVE {_SIGS_CTE}, {_BANDED_CTE},
 dup_pairs AS (
@@ -8909,10 +8909,12 @@ FROM reach GROUP BY src
 @register("dup_clusters_cc", _CLUSTERS_SQL)
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global duplicate clusters (operators/dedup.py:dup_clusters):
-    iterative min-label propagation over the confirmed near-dup pair
-    graph — the step that turns pairwise hits into components so
-    dedup keeps exactly one doc per cluster. O(diameter) rounds, one
-    uniform-key shuffle per round, one scalar to the driver per round."""
+    a two-level union-find over the confirmed near-dup pair graph —
+    the step that turns pairwise hits into components so dedup keeps
+    exactly one doc per cluster. Each partition's pairs shrink to a
+    forest, one single-task reduce labels every node with its
+    component minimum: a fixed number of Spark jobs on any graph
+    shape, nothing collected to the driver."""
     # widen=True: same rationale as q_jaccard_confirm — the MinHash/
     # shingle projections feeding the candidate+confirm chain must not
     # materialize on a single scan split

@@ -283,6 +283,43 @@ def minhash_minima(hs, num_hashes: int = DEFAULT_NUM_HASHES):
     )
 
 
+def component_roots(a, b):
+    """Connected components of the edge list ``a[i] — b[i]`` (int64
+    arrays of equal length) → ``(nodes, roots)``: every distinct id
+    once, ascending, and the minimum id of its component.
+
+    Ids map to dense indices with ``np.unique``; the indices follow
+    sorted order, so the minimum index in a component is its minimum
+    id. Each pass hooks every root to the smallest root across its
+    edges (``np.minimum.at``; pointers only ever decrease, so no
+    cycle can form) and then pointer-jumps (``label = label[label]``)
+    until every node points at its root. A pass merges every root
+    that still has a cross edge into a tree of two or more roots, so
+    the root count at least halves: O(log n) vectorized passes on any
+    graph shape, a long path included."""
+    import numpy as np
+
+    n = len(a)
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = idx[:n], idx[n:]
+    label = np.arange(len(nodes))
+    while True:
+        lu, lv = label[u], label[v]
+        cross = lu != lv
+        if not cross.any():
+            return nodes, nodes[label]
+        np.minimum.at(
+            label,
+            np.maximum(lu, lv)[cross],
+            np.minimum(lu, lv)[cross],
+        )
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+
+
 def with_signature(
     df: DataFrame,
     text_col: str = "text",
@@ -1422,11 +1459,34 @@ def decontaminate(
 # ---- duplicate clusters (connected components) ----
 
 
+def _cc_pass(batches, forest: bool):
+    """One :func:`component_roots` run over every Arrow batch of a
+    partition. ``forest=True`` keeps only the ``(node, root)`` rows with
+    ``node != root`` — k-1 rows for a k-node component, whatever its
+    edge count — plus ``(node, node)`` for a node whose only edges are
+    self-loops, so that it survives the reduce. ``forest=False`` emits
+    every node with its component minimum."""
+    import numpy as np
+    import pyarrow as pa
+
+    a, b = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for batch in batches:
+        a.append(batch.column(0).to_numpy())
+        b.append(batch.column(1).to_numpy())
+    nodes, roots = component_roots(np.concatenate(a), np.concatenate(b))
+    if forest:
+        size = np.bincount(np.searchsorted(nodes, roots), minlength=len(nodes))
+        keep = (nodes != roots) | (size == 1)
+        nodes, roots = nodes[keep], roots[keep]
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(nodes), pa.array(roots)], names=["doc_id", "cluster_id"]
+    )
+
+
 def dup_clusters(
     pairs: DataFrame,
     col_a: str = "id_a",
     col_b: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over confirmed duplicate pairs: every doc
     that appears in >=1 pair gets ``cluster_id`` = the minimum doc id
@@ -1436,109 +1496,43 @@ def dup_clusters(
     chains (a~b, b~c drops b and c even when a!~c); cluster-then-keep
     drops exactly size(component)-1 per component.
 
-    Algorithm: iterative min-label propagation (the MapReduce
-    connected-components shape of Rastogi et al.'s Hash-to-Min) —
-    each round every node takes the min of its own label and its
-    neighbors' labels. Converges in O(diameter) rounds; dedup graphs
-    are near-cliques (every member shares most shingles), so 2-3
-    rounds in practice, ``max_iter`` as a guard. Driver traffic is
-    ONE scalar per round (the label sum used as the convergence test
-    — labels only decrease, so the sum is strictly decreasing until
-    the fixpoint and equality detects it exactly); lineage is
-    truncated each round with a localCheckpoint so the plan stays
-    O(1) deep at any scale.
+    Algorithm: a two-level union-find over Arrow batches, in a fixed
+    number of Spark jobs whatever the graph's diameter — no rounds, no
+    convergence action, no driver collect:
 
-    Round shape (r18 optimization pass): round 1 is FUSED into
-    initialization — with identity labels, one propagation round is
-    exactly ``min(id, min(neighbor id))``, ONE aggregation over the
-    symmetric edge list (the previous shape paid a roster distinct
-    plus a join+agg+join first round). Rounds 2+ use the UNION form:
-    neighbor-propagated labels unioned with each node's own label,
-    then ONE ``groupBy(node).min`` — three exchanges per round where
-    the join + left-join-back shape paid five (the self-label union
-    replaces the left join; every roster node appears as ``src`` in
-    the symmetric edge list, so the roster is preserved). Identical
-    label sequence, identical round count, identical output — pinned
-    by the union-find property test and the dup_clusters_cc oracle.
+    1. ``mapInArrow`` runs :func:`component_roots` over each input
+       partition and emits that partition's components as a forest of
+       ``(node, root)`` rows (a k-clique's k(k-1)/2 pairs shrink to
+       k-1 rows).
+    2. ``repartition(1)`` and the same kernel over the union of the
+       forests. The union has the same components as the input, so
+       this single reduce is exact. The reduce task holds at most the
+       sum over partitions of the nodes in that partition, which is
+       <= 2 × the number of pairs.
+
+    The labels arrive behind an eager ``localCheckpoint``, so that
+    consumers plan against a materialized leaf.
+
+    Ids must be castable to long. A null endpoint adds no edge and no
+    node: its non-null partner stays as a node, and a pair with both
+    ends null is dropped. A self-loop keeps its node.
     """
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    a, b = F.col(col_a).cast("long"), F.col(col_b).cast("long")
     edges = pairs.select(
-        F.col(col_a).alias("src"), F.col(col_b).alias("dst")
+        F.coalesce(a, b).alias("a"), F.coalesce(b, a).alias("b")
+    ).filter(F.col("a").isNotNull())
+    schema = StructType([
+        StructField("doc_id", LongType(), nullable=False),
+        StructField("cluster_id", LongType(), nullable=False),
+    ])
+    return (
+        edges.mapInArrow(lambda it: _cc_pass(it, forest=True), schema)
+        .repartition(1)
+        .mapInArrow(lambda it: _cc_pass(it, forest=False), schema)
+        .localCheckpoint(eager=True)
     )
-    edges = (
-        edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        # lazy: the first consumer (the fused round-1 aggregation) is
-        # a full pass and materializes the checkpoint in its own job —
-        # eager=True paid one extra job
-        .localCheckpoint(eager=False)
-    )
-    labels = None
-    prev_sum = None
-    for _ in range(max_iter):
-        if labels is None:
-            # round 1 ≡ initialization: label(id) = min(id, min nbrs)
-            labels = (
-                edges.groupBy("src")
-                .agg(F.min("dst").alias("_m"))
-                .select(
-                    F.col("src").alias("id"),
-                    F.least(F.col("src"), F.col("_m")).alias("cluster_id"),
-                )
-            )
-        else:
-            labels = (
-                edges.join(labels, edges["dst"] == labels["id"])
-                .select("src", "cluster_id")
-                .unionByName(
-                    labels.select(F.col("id").alias("src"), "cluster_id")
-                )
-                .groupBy("src")
-                .agg(F.min("cluster_id").alias("cluster_id"))
-                .select(F.col("src").alias("id"), "cluster_id")
-            )
-        # lazy checkpoint: the convergence sum right below is a FULL
-        # pass over every partition, so it materializes the checkpoint
-        # as a side effect — one job per round instead of two
-        # (eager=True ran a dedicated materialization job). (Safe
-        # precisely because the sum computes all partitions; a
-        # take(1)-style action could checkpoint partially.)
-        labels = labels.localCheckpoint(eager=False)
-        cur_sum = labels.agg(F.sum("cluster_id")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"dup_clusters did not converge in {max_iter} rounds — "
-            "component diameter exceeds the guard; raise max_iter"
-        )
-    return labels.select(F.col("id").alias("doc_id"), "cluster_id")
-
-
-def dup_clusters_auto(
-    pairs: DataFrame,
-    col_a: str = "id_a",
-    col_b: str = "id_b",
-    propagate_iter: int = 8,
-    star_max_iter: int = 40,
-) -> DataFrame:
-    """Connected components with automatic escalation: run min-label
-    propagation (:func:`dup_clusters`, O(diameter) rounds — 2-3 on the
-    near-clique graphs dedup actually produces) and, if its
-    convergence guard trips (a pathological high-diameter component:
-    chained boilerplate, templated docs differing one token per hop),
-    transparently restart with star contraction
-    (:func:`dup_clusters_star`, O(log n) rounds on any shape).
-
-    The restart discards ``propagate_iter`` cheap rounds — acceptable
-    because the guard trips only on inputs where propagation would
-    need orders of magnitude more rounds than the star path's total.
-    Requires long-castable ids (the star path's contract); output is
-    the shared (doc_id, cluster_id=component min) schema."""
-    try:
-        return dup_clusters(pairs, col_a, col_b, max_iter=propagate_iter)
-    except RuntimeError:
-        return dup_clusters_star(pairs, col_a, col_b, max_iter=star_max_iter)
 
 
 def near_dedup_clusters(
@@ -1555,9 +1549,9 @@ def near_dedup_clusters(
     threshold → connected components → keep each component's minimum
     id (plus every unpaired doc). Unlike ``near_dedup_minhash`` this
     never drops two docs that are only transitively related.
-    Components are computed via :func:`dup_clusters_auto`, so a
-    pathological long-chain duplicate graph transparently escalates
-    from min-label propagation to star contraction.
+    Components are computed by :func:`dup_clusters`, a two-level
+    union-find whose Spark job count does not depend on the shape of
+    the duplicate graph, long chains included.
 
     With ``max_bucket_width`` set, band buckets wider than the cap
     are FENCED out of the pair join (see
@@ -1615,105 +1609,13 @@ def near_dedup_clusters(
     confirmed = jaccard_pairs(df, cand, text_col, id_col, shingle_k).filter(
         F.col("jaccard") >= threshold
     )
-    clusters = dup_clusters_auto(confirmed)
+    clusters = dup_clusters(confirmed)
     losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
         F.col("doc_id").alias(id_col)
     )
     if fenced_losers is not None:
         losers = losers.unionByName(fenced_losers).distinct()
     return df.join(losers, on=id_col, how="left_anti")
-
-
-def dup_clusters_star(
-    pairs: DataFrame,
-    col_a: str = "id_a",
-    col_b: str = "id_b",
-    max_iter: int = 40,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond")
-    — the escalation path for graphs whose diameter makes plain
-    min-label propagation (``dup_clusters``, O(diameter) rounds) too
-    slow: star contraction converges in O(log n) rounds on ANY graph
-    shape, including adversarial long chains.
-
-    Per round each phase is one groupBy(min) + one join on the node
-    id — same uniform-key shuffle profile as ``dup_clusters``, so the
-    cost model is rounds × (2 shuffles), with exponentially fewer
-    rounds on high-diameter inputs. Convergence is detected by an
-    edge-set checksum (count + order-insensitive hash sum), one tiny
-    row to the driver per round; lineage is truncated per round.
-
-    Returns (doc_id, cluster_id = component minimum), for every node
-    that appears in >=1 pair — identical output contract to
-    ``dup_clusters``.
-    """
-    edges = pairs.select(
-        F.col(col_a).cast("long").alias("u"),
-        F.col(col_b).cast("long").alias("v"),
-    ).filter(F.col("u") != F.col("v"))
-
-    def _canon(e: DataFrame) -> DataFrame:
-        return e.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        ).distinct()
-
-    def _checksum(e: DataFrame):
-        # bit_xor: order-insensitive and overflow-free under ANSI
-        # (sum of hashes overflows long)
-        row = e.select(F.xxhash64("u", "v").alias("_h")).agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(_h)").alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        adj = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = (
-            adj.groupBy("u")
-            .agg(F.min("v").alias("_mv"))
-            .select("u", F.least("_mv", F.col("u")).alias("m"))
-        )
-        return _canon(
-            adj.filter(F.col("v") > F.col("u"))
-            .join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        adj = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        down = adj.filter(F.col("v") < F.col("u"))
-        m = down.groupBy("u").agg(F.min("v").alias("m"))
-        moved = (
-            down.join(m, "u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        kept = m.select(F.col("u"), F.col("m").alias("v"))
-        return _canon(moved.union(kept))
-
-    e = _canon(edges).localCheckpoint(eager=True)
-    prev = _checksum(e)
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        cur = _checksum(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"dup_clusters_star did not converge in {max_iter} rounds"
-        )
-    # fixpoint: every component is a star centered at its minimum
-    adj = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    return (
-        adj.groupBy("u")
-        .agg(F.min("v").alias("_mv"))
-        .select(
-            F.col("u").alias("doc_id"),
-            F.least("_mv", F.col("u")).alias("cluster_id"),
-        )
-    )
 
 
 def flag_eval_ngram_overlap(

@@ -12,7 +12,7 @@ Scale design: every operator is a bounded composition of explodes,
 uniform-key aggregations and joins on URL/domain keys — no
 driver-side edge lists, no adjacency matrices. PageRank is the one
 iterative op; it follows the engine's integer driver-loop discipline
-(apps.kmeans_train_int, dedup.dup_clusters_cc): scores are LONG
+(apps.kmeans_train_int): scores are LONG
 micro-units, every per-iteration aggregate is a LONG sum of integer
 divisions — partition order cannot change a single bit — and the
 driver sees only scalars, never rows. The damping split is the
@@ -409,8 +409,8 @@ def pagerank(
             ).cast("long").alias("pr_micro"),
         )
         if checkpoint:
-            # truncate the per-iteration lineage (the dup_clusters_cc
-            # discipline) — without this, iteration N replans N joins
+            # truncate the per-iteration lineage — without this,
+            # iteration N replans N joins
             score = score.localCheckpoint(eager=True)
     return score
 

@@ -292,7 +292,7 @@ def semantic_dedup(
     cos(a,c) < t keeps a and drops b AND c (c has neighbor b < c) —
     the same contract as the paper's within-cluster pruning. For
     cluster-atomic semantics route the pair list through
-    :func:`~cybersecurity_miw_spark.operators.dedup.dup_clusters_auto`
+    :func:`~cybersecurity_miw_spark.operators.dedup.dup_clusters`
     and keep each cluster's min id.
 
     100 TB: bucket self-join (uniform key) + one anti-join on the
@@ -325,25 +325,26 @@ def semantic_dedup_clusters(
     :func:`semantic_dedup` docstring points at, as a first-class
     operator: the LSH-bucketed cosine pair list is routed through
     connected components
-    (:func:`~cybersecurity_miw_spark.operators.dedup.dup_clusters_auto`
-    — min-label propagation with star-contraction escalation) and
-    each component keeps exactly its MINIMUM id. On a chain a~b~c
+    (:func:`~cybersecurity_miw_spark.operators.dedup.dup_clusters` —
+    a two-level Arrow union-find) and each component keeps exactly
+    its MINIMUM id. On a chain a~b~c
     with cos(a,c) < t this keeps a only (one survivor per semantic
     cluster); the adjacency rule keeps a as well but can over-drop on
     other shapes — here drops are exactly size(component)−1.
 
     100 TB: the pair stage is the same uniform-bucket self-join;
-    components add O(diameter) rounds (near-clique dedup graphs: 2-3)
-    with one scalar per round to the driver; the keep rule is one
-    anti-join on the non-representative node set. Default
+    components add a fixed number of Spark jobs on any graph shape
+    (a per-partition union-find, one single-task reduce over the
+    partition forests, nothing collected to the driver); the keep
+    rule is one anti-join on the non-representative node set. Default
     ``n_planes=None`` = the occupancy-constant schedule (see
     :func:`semantic_dedup` — same r14 default flip)."""
-    from cybersecurity_miw_spark.operators.dedup import dup_clusters_auto
+    from cybersecurity_miw_spark.operators.dedup import dup_clusters
 
     pairs = cosine_near_dup_lsh(
         df, threshold, dim, n_planes, vec_col, id_col, n_bands=n_bands
     )
-    clusters = dup_clusters_auto(pairs)
+    clusters = dup_clusters(pairs)
     removed = clusters.filter(
         F.col("doc_id") != F.col("cluster_id")
     ).select(F.col("doc_id").alias(id_col))
@@ -406,16 +407,16 @@ def semantic_dedup_cells_clusters(
     (:func:`cells_near_dup_pairs`, multi-assign-capable) routed
     through connected components, each component keeping exactly its
     MINIMUM id. Same plan economics as its siblings — uniform-key
-    self-join, O(diameter) CC rounds with one scalar per round to the
-    driver, one anti-join."""
-    from cybersecurity_miw_spark.operators.dedup import dup_clusters_auto
+    self-join, connected components in a fixed number of Spark jobs,
+    one anti-join."""
+    from cybersecurity_miw_spark.operators.dedup import dup_clusters
 
     pairs = cells_near_dup_pairs(
         df, centroids, threshold, vec_col, id_col, n_assign
     ).select(
         F.col("id_a").alias("id_a"), F.col("id_b").alias("id_b")
     )
-    clusters = dup_clusters_auto(pairs)
+    clusters = dup_clusters(pairs)
     removed = clusters.filter(
         F.col("doc_id") != F.col("cluster_id")
     ).select(F.col("doc_id").alias(id_col))

@@ -287,7 +287,7 @@ def streaming_near_dup_flags(
     waiting a trigger, and it keeps "every pair is flagged exactly
     once, when its second member arrives" as the contract. Downstream
     decides what to do with flags (drop, cluster via
-    dup_clusters_auto, or human review); flagging and deletion are
+    dup_clusters, or human review); flagging and deletion are
     deliberately decoupled, matching the batch operators.
 
     ``max_store_bucket_width`` fences history mega-templates out of

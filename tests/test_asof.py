@@ -124,4 +124,3 @@ def test_dup_clusters_empty_pairs(spark):
 
     empty = spark.createDataFrame([], "id_a long, id_b long")
     assert dedup.dup_clusters(empty).count() == 0
-    assert dedup.dup_clusters_star(empty).count() == 0

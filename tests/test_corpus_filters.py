@@ -165,9 +165,8 @@ def test_dup_clusters_matches_union_find_on_random_graph(spark):
 
 
 def test_dup_clusters_star_converges_on_fused_first_round(spark):
-    # a star centered at the min id converges in round 1 — the round
-    # the r18 rework fuses into initialization; the break must fire on
-    # the first no-op union round, and labels must all be the center
+    # a star centered at the min id: every leaf is labelled with the
+    # center
     edges = [(1, x) for x in (5, 9, 13, 21)]
     got = {
         r["doc_id"]: r["cluster_id"]
@@ -176,11 +175,72 @@ def test_dup_clusters_star_converges_on_fused_first_round(spark):
     assert got == {1: 1, 5: 1, 9: 1, 13: 1, 21: 1}
 
 
-def test_dup_clusters_raises_when_iteration_guard_hit(spark):
-    # a 6-node path needs ~5 rounds; cap at 1 must trip the guard
+def test_dup_clusters_labels_short_path_with_its_minimum(spark):
+    # a 6-node path: no round count or iteration guard to trip, every
+    # node carries the path minimum
     edges = [(i, i + 1) for i in range(1, 6)]
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dup_clusters(_pairs(spark, edges), max_iter=1)
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.dup_clusters(_pairs(spark, edges)).collect()
+    }
+    assert got == {i: 1 for i in range(1, 7)}
+
+
+def test_dup_clusters_long_chain_over_partitions(spark):
+    """A chain of diameter 149 with shuffled ids, its edges shuffled
+    over 4 partitions: every partition holds scattered fragments of
+    the chain, and the reduce over their forests joins them into one
+    component labelled with the chain's minimum."""
+    import random
+
+    rng = random.Random(150)
+    ids = rng.sample(range(10_000), 150)
+    edges = [(ids[i], ids[i + 1]) for i in range(149)]
+    rng.shuffle(edges)
+    pairs = _pairs(spark, edges).repartition(4)
+    assert pairs.rdd.getNumPartitions() >= 3
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.dup_clusters(pairs).collect()
+    }
+    assert got == {i: min(ids) for i in ids}
+
+
+def _jobs_to_collect(spark, edges, group: str) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        dedup.dup_clusters(_pairs(spark, edges).repartition(3)).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dup_clusters_job_count_does_not_grow_with_diameter(spark):
+    """Bounded jobs: a 200-node path runs exactly as many Spark jobs as
+    a 10-node one — no per-round action whose count tracks the
+    diameter."""
+    short = _jobs_to_collect(
+        spark, [(i, i + 1) for i in range(9)], "cc-path-10"
+    )
+    long = _jobs_to_collect(
+        spark, [(i, i + 1) for i in range(199)], "cc-path-200"
+    )
+    assert short > 0
+    assert long == short
+
+
+def test_dup_clusters_null_endpoint_adds_no_node(spark):
+    """A null endpoint adds no edge and no node: its non-null partner
+    stays as a node, a pair with both ends null is dropped, and a
+    self-loop keeps its node. No row may carry a null doc id."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 5), (7, 7), (None, None)],
+        "id_a long, id_b long",
+    )
+    got = sorted(tuple(r) for r in dedup.dup_clusters(pairs).collect())
+    assert got == [(1, 1), (2, 1), (5, 5), (7, 7)]
 
 
 def test_near_dedup_clusters_vs_pairwise_on_transitive_chain(spark):
@@ -271,10 +331,10 @@ def test_narrow_corpus_filters_run_in_structured_streaming(spark, tmp_path):
     assert rows[2]["n_words"] == 4
 
 
-# ---- star-contraction connected components ----
+# ---- connected components on more graph shapes ----
 
 
-def test_star_clusters_match_union_find_on_random_graph(spark):
+def test_dup_clusters_matches_union_find_on_80_node_graph(spark):
     import random
 
     rng = random.Random(99)
@@ -283,54 +343,48 @@ def test_star_clusters_match_union_find_on_random_graph(spark):
     )
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.dup_clusters_star(_pairs(spark, edges)).collect()
+        for r in dedup.dup_clusters(_pairs(spark, edges)).collect()
     }
     assert got == _uf_components(edges)
 
 
-def test_star_clusters_handle_long_chain_where_minlabel_guard_trips(spark):
-    # a 64-node path has diameter 63: min-label propagation at its
-    # default 25-round guard must refuse, star contraction (O(log n)
-    # rounds) must finish and label the whole chain with its minimum
+def test_dup_clusters_labels_64_node_chain(spark):
+    # a 64-node path has diameter 63 — more than the 25 rounds the
+    # retired min-label propagation allowed; labelled in one pass
     edges = [(i, i + 1) for i in range(63)]
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dup_clusters(_pairs(spark, edges))
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.dup_clusters_star(_pairs(spark, edges)).collect()
+        for r in dedup.dup_clusters(_pairs(spark, edges)).collect()
     }
     assert got == {i: 0 for i in range(64)}
 
 
-def test_auto_routing_escalates_long_chain_to_star(spark):
-    """dup_clusters_auto: the public API transparently converges on a
-    long chain — propagation's guard trips internally, star
-    contraction finishes, the caller never sees the RuntimeError."""
-    edges = [(i, i + 1) for i in range(63)]
+def test_dup_clusters_labels_reversed_64_node_chain(spark):
+    """The same chain with every pair written high-to-low: pair
+    direction carries no meaning."""
+    edges = [(i + 1, i) for i in range(63)]
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.dup_clusters_auto(_pairs(spark, edges)).collect()
+        for r in dedup.dup_clusters(_pairs(spark, edges)).collect()
     }
     assert got == {i: 0 for i in range(64)}
 
 
-def test_auto_routing_uses_propagation_on_shallow_graphs(spark):
-    """On a near-clique (the shape dedup actually produces) the auto
-    router's answer equals plain propagation's — and propagation at
-    the router's round budget converges, so no escalation happened."""
+def test_dup_clusters_matches_union_find_on_shallow_graph(spark):
+    """A near-clique (the shape dedup actually produces) plus a short
+    chain: labels equal the Python union-find's."""
     edges = [(0, i) for i in range(1, 6)] + [(10, 11), (11, 12)]
-    auto = {
+    got = {
         r["doc_id"]: r["cluster_id"]
-        for r in dedup.dup_clusters_auto(_pairs(spark, edges)).collect()
+        for r in dedup.dup_clusters(_pairs(spark, edges)).collect()
     }
-    plain = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.dup_clusters(_pairs(spark, edges), max_iter=8).collect()
-    }
-    assert auto == plain == _uf_components(sorted(edges))
+    assert got == _uf_components(sorted(edges))
+    assert set(got.values()) == {0, 10}
 
 
 def test_star_clusters_agree_with_minlabel_on_near_dup_pairs(spark, sf_dir):
+    """The confirmed near-dup pairs of the sf documents: dup_clusters
+    agrees with the Python union-find over the same collected pairs."""
     from cybersecurity_miw_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -340,15 +394,12 @@ def test_star_clusters_agree_with_minlabel_on_near_dup_pairs(spark, sf_dir):
     confirmed = dedup.jaccard_pairs(docs, cand, shingle_k=3).filter(
         F.col("jaccard") >= 0.8
     )
-    a = {
+    got = {
         r["doc_id"]: r["cluster_id"]
         for r in dedup.dup_clusters(confirmed).collect()
     }
-    b = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup.dup_clusters_star(confirmed).collect()
-    }
-    assert a == b and len(a) > 0
+    edges = [(r["id_a"], r["id_b"]) for r in confirmed.collect()]
+    assert got == _uf_components(edges) and len(got) > 0
 
 
 # ---- bigram LM quality score ----

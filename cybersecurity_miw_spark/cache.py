@@ -27,6 +27,9 @@ registry mutation happens under one lock, so a concurrent
 :func:`release_intermediates` cannot shift anything out from under an
 open scope (double-release degrades to a no-op via the storage-level
 check).
+
+The module also holds the one per-application memo (:func:`app_memo`)
+for lazy reader plans and unresolved expression trees.
 """
 
 from __future__ import annotations
@@ -125,3 +128,39 @@ def _release(frames: list[DataFrame]) -> int:
         except Exception:
             pass  # stopped session / already-released frame
     return released
+
+
+# ---- per-application memo --------------------------------------------------
+
+_MEMO_LOCK = threading.Lock()
+_MEMO: dict[tuple, tuple[str, object]] = {}  # key -> (app id, value)
+_MEMO_APP: str | None = None  # the application the memo holds entries of
+
+
+def app_memo(app: str | None, key: tuple, build):
+    """``build()`` memoized under ``key`` for the Spark application
+    ``app``: the session-level registry for lazy reader plans and
+    unresolved Columns (never rows), whose construction costs py4j
+    round trips on every compile otherwise.
+
+    A py4j handle dies with its application, so an entry is served only
+    to the app that built it, and a store from another app first clears
+    the memo (a driver that restarts sessions keeps no dead handles).
+    ``app is None`` (no active session) builds without caching.
+    ``build`` runs outside the lock: a slow build never blocks another
+    thread's lookup, and two threads that miss the same key both build,
+    the later store winning."""
+    global _MEMO_APP
+    if app is None:
+        return build()
+    with _MEMO_LOCK:
+        hit = _MEMO.get(key)
+    if hit is not None and hit[0] == app:
+        return hit[1]
+    val = build()
+    with _MEMO_LOCK:
+        if app != _MEMO_APP:
+            _MEMO.clear()
+            _MEMO_APP = app
+        _MEMO[key] = (app, val)
+    return val

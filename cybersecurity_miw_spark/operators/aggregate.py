@@ -71,37 +71,26 @@ def id_column(ldef: LogDef) -> Column:
     return F.concat_ws("_", *parts)
 
 
-# Memoized aggregate-expression lists per (application, logdef,
-# skip_union) — the derive._DERIVE_MEMO discipline: the Columns are
-# immutable aliased expressions, rebuilt identically on every compile
-# otherwise (~0.1 s of py4j round-trips per call on aggregate-heavy
-# formats). resolved_pos never enters these expressions (they
-# reference fields by NAME), so the LogDef repr alone is a complete
-# key. The cached list is copied on return — callers extend it.
-_AGG_EXPRS_MEMO: dict[tuple, list[Column]] = {}
-_AGG_EXPRS_MEMO_APP: str | None = None  # single-app dict, see derive.memo_for_app
-
-
 def simple_agg_exprs(ldef: LogDef, skip_union: bool = False) -> list[Column]:
     """All single-pass aggregate expressions (everything except
     union_count, which needs a second aggregation level, and ratio,
     which is a post-projection). ``skip_union`` leaves A8 union fields
-    to the bounded two-phase path (:func:`union_limited_values`)."""
-    global _AGG_EXPRS_MEMO_APP
-    from cybersecurity_miw_spark.operators.derive import _app_id, memo_for_app
+    to the bounded two-phase path (:func:`union_limited_values`).
 
-    app = _app_id()
-    if app is None:
-        return _build_simple_agg_exprs(ldef, skip_union)
-    _AGG_EXPRS_MEMO_APP = memo_for_app(
-        _AGG_EXPRS_MEMO, _AGG_EXPRS_MEMO_APP, app
+    Memoized per application (``derive.expr_memo``): the Columns are
+    immutable aliased expressions, rebuilt identically on every compile
+    otherwise (~0.1 s of py4j round-trips per call on aggregate-heavy
+    formats). resolved_pos never enters them (they reference fields by
+    NAME), so the LogDef repr alone is a complete key. The list is
+    copied on return — callers extend it."""
+    from cybersecurity_miw_spark.operators.derive import expr_memo
+
+    return list(
+        expr_memo(
+            ("simple_agg_exprs", repr(ldef), skip_union),
+            lambda: _build_simple_agg_exprs(ldef, skip_union),
+        )
     )
-    key = (repr(ldef), skip_union)
-    cached = _AGG_EXPRS_MEMO.get(key)
-    if cached is None:
-        cached = _build_simple_agg_exprs(ldef, skip_union)
-        _AGG_EXPRS_MEMO[key] = cached
-    return list(cached)
 
 
 def _build_simple_agg_exprs(
@@ -279,11 +268,11 @@ def _tagged_aggregate(
       histogram count of one (group, value) pair.
     * Level 2: groupBy(keys) reads the plain aggregates off the one
       tag-0 row and collects the tag-i (value, count) pairs into each
-      sorted map.
+      sorted map, skipping a null value (it cannot be a map key) as
+      :func:`union_count_expr` and the A8 unions do.
 
     Both groupBys shuffle only pre-aggregated rows, and a hot group
-    spreads over its distinct values at level 1. A null histogram
-    value becomes a null map key, which fails the job (NULL_MAP_KEY).
+    spreads over its distinct values at level 1.
     """
     tag = F.col(TAG_COL)
     ucs = [f"_uc_{i}" for i in range(1, len(hist_cols) + 1)]
@@ -315,7 +304,10 @@ def _tagged_aggregate(
             F.map_from_entries(
                 F.sort_array(
                     F.collect_list(
-                        F.when(tag == i, F.struct(uc, F.col(LOGS_COL)))
+                        F.when(
+                            (tag == i) & F.col(uc).isNotNull(),
+                            F.struct(uc, F.col(LOGS_COL)),
+                        )
                     )
                 )
             ).alias(f"{c}_counts")

@@ -27,6 +27,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cybersecurity_miw_spark import sidecar
 from cybersecurity_miw_spark.operators.textstats import (
     fingerprint,
     shingles,
@@ -829,60 +830,6 @@ def simhash_band_store(
     return _simhash_banded(df, text_col, id_col, band_bits, hash_fn)
 
 
-SIMHASH_STORE_PARAMS_FILE = "_simhash_params.json"
-
-
-def write_simhash_store_params(
-    spark: SparkSession,
-    store_dir: str,
-    band_bits: int = 16,
-    hash_fn: str = "xxhash64",
-) -> None:
-    """Record a SimHash store's (band_bits, hash_fn) in a sidecar —
-    the SimHash twin of :func:`write_band_store_params`: bands from
-    different bit-widths or hash functions never collide, so a
-    mismatched join silently yields zero candidates."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    params = {"band_bits": band_bits, "hash_fn": hash_fn}
-    fsutil.write_text(
-        spark,
-        f"{store_dir}/{SIMHASH_STORE_PARAMS_FILE}",
-        json.dumps(params),
-    )
-
-
-def load_simhash_band_store(
-    spark: SparkSession,
-    store_dir: str,
-    band_bits: int = 16,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """Read a persisted SimHash band store, raising on a recorded
-    family mismatch; legacy stores without a sidecar load unchecked."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{store_dir}/{SIMHASH_STORE_PARAMS_FILE}"
-    if fsutil.exists(spark, path):
-        stored = json.loads(fsutil.read_text(spark, path))
-        params = {"band_bits": band_bits, "hash_fn": hash_fn}
-        # family keys only: monitoring keys (baseline_cand_per_doc)
-        # are advisory and must not fail a same-family load
-        family = {k: v for k, v in stored.items() if k in params}
-        if family != params:
-            raise ValueError(
-                f"simhash store at {store_dir} was built with {family}; "
-                f"this query supplies {params} — mixed SimHash families "
-                "never match. Rebuild the store or pass the stored "
-                "parameters."
-            )
-    return spark.read.parquet(store_dir)
-
-
 def incremental_simhash_candidates(
     new_docs: DataFrame,
     band_store: DataFrame | str,
@@ -896,11 +843,12 @@ def incremental_simhash_candidates(
     Batch fingerprints are computed fresh; history contributes stored
     rows only. Same band family as the self-join path, so a pair is a
     candidate here iff the pooled self-join would find it. A string
-    ``band_store`` is loaded via :func:`load_simhash_band_store`
-    (family sidecar checked)."""
+    ``band_store`` is loaded with its ``sidecar.SIMHASH`` family
+    checked."""
     if isinstance(band_store, str):
-        band_store = load_simhash_band_store(
-            new_docs.sparkSession, band_store, band_bits, hash_fn
+        band_store = sidecar.load(
+            new_docs.sparkSession, band_store, sidecar.SIMHASH,
+            band_bits=band_bits, hash_fn=hash_fn,
         )
     nb = _simhash_banded(
         new_docs, text_col, id_col, band_bits, hash_fn
@@ -1025,96 +973,6 @@ def dedup_against_store(
     return new_docs.join(keep.select(id_col), on=id_col, how="left_semi")
 
 
-BAND_STORE_PARAMS_FILE = "_lsh_params.json"
-
-
-def write_band_store_params(
-    spark: SparkSession,
-    store_dir: str,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_k: int = 3,
-    baseline_cand_per_doc: float | None = None,
-) -> None:
-    """Record the MinHash family of a persisted band store in a
-    ``_lsh_params.json`` sidecar inside ``store_dir`` (underscore
-    prefix = invisible to ``spark.read.parquet``). Written via the
-    Hadoop FS API so it lands wherever the store lives (local, hdfs,
-    s3a) — the guard half is :func:`check_band_store_params`.
-
-    ``baseline_cand_per_doc``: optional store-candidates-per-batch-doc
-    reference for the ingest staleness/skew monitor (the band-store
-    analog of setsim's frozen-order baseline — here the degradation
-    channel is history bucket skew: a hot template bucket multiplies
-    every later batch's candidate volume). streaming_near_dup_flags
-    records it automatically on its first store-joined trigger."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    params = {
-        "num_hashes": num_hashes, "bands": bands, "shingle_k": shingle_k
-    }
-    if baseline_cand_per_doc is not None:
-        params["baseline_cand_per_doc"] = float(baseline_cand_per_doc)
-    fsutil.write_text(
-        spark, f"{store_dir}/{BAND_STORE_PARAMS_FILE}", json.dumps(params)
-    )
-
-
-def check_band_store_params(
-    spark: SparkSession,
-    store_dir: str,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_k: int = 3,
-) -> dict | None:
-    """Validate that a persisted band store was built with THIS hash
-    family. Band hashes from different (num_hashes, bands, shingle_k)
-    families never collide, so a mismatched join silently yields zero
-    candidates — the failure mode this guard turns into a raise.
-    Returns the stored params, or None when the store predates the
-    sidecar (legacy store: caller must know its family — rebuild the
-    sidecar with :func:`write_band_store_params` to opt in)."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{store_dir}/{BAND_STORE_PARAMS_FILE}"
-    if not fsutil.exists(spark, path):
-        return None
-    stored = json.loads(fsutil.read_text(spark, path))
-    params = {
-        "num_hashes": num_hashes, "bands": bands, "shingle_k": shingle_k
-    }
-    # compare FAMILY keys only: monitoring keys (baseline_cand_per_doc)
-    # are advisory and must not fail a legitimate same-family load
-    family = {k: v for k, v in stored.items() if k in params}
-    if family != params:
-        raise ValueError(
-            f"band store at {store_dir} was built with {family}; this "
-            f"query supplies {params} — mixed MinHash families never "
-            "match (candidates silently drop to zero). Rebuild the "
-            "store or pass the stored parameters."
-        )
-    return stored
-
-
-def load_band_store(
-    spark: SparkSession,
-    store_dir: str,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Read a persisted band store, raising if its recorded hash
-    family differs from the parameters supplied — the batch-path twin
-    of the streaming sidecar guard (ADVICE r8: the batch incremental
-    path previously had no family check)."""
-    check_band_store_params(spark, store_dir, num_hashes, bands, shingle_k)
-    return spark.read.parquet(store_dir)
-
-
 def lsh_band_store(
     df: DataFrame,
     text_col: str = "text",
@@ -1168,15 +1026,15 @@ def incremental_lsh_candidates(
     route them as template/boilerplate matches instead of pairwise
     near-dups.
 
-    ``band_store`` may be a store DIRECTORY path, in which case it is
-    read via :func:`load_band_store` and the ``_lsh_params.json``
-    sidecar is checked against this call's hash family — a mismatched
-    family would otherwise silently yield zero candidates (ADVICE
-    r8). A pre-loaded DataFrame skips the check (the caller owns the
-    family contract; prefer passing the path)."""
+    ``band_store`` may be a store DIRECTORY path, in which case its
+    ``sidecar.LSH`` params are checked against this call's hash
+    family — a mismatched family would otherwise silently yield zero
+    candidates (ADVICE r8). A pre-loaded DataFrame skips the check
+    (the caller owns the family contract; prefer passing the path)."""
     if isinstance(band_store, str):
-        band_store = load_band_store(
-            new_docs.sparkSession, band_store, num_hashes, bands, shingle_k
+        band_store = sidecar.load(
+            new_docs.sparkSession, band_store, sidecar.LSH,
+            num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
         )
     nb = lsh_band_store(
         new_docs, text_col, id_col, num_hashes, bands, shingle_k
@@ -1216,11 +1074,11 @@ def incremental_fenced_hits(
     fan-out the fence exists to avoid. Route these as boilerplate /
     template matches (drop, or cluster against the bucket's
     representative) instead of pairwise near-dups. A string
-    ``band_store`` is loaded via :func:`load_band_store` (family
-    sidecar checked)."""
+    ``band_store`` is loaded with its ``sidecar.LSH`` family checked."""
     if isinstance(band_store, str):
-        band_store = load_band_store(
-            new_docs.sparkSession, band_store, num_hashes, bands, shingle_k
+        band_store = sidecar.load(
+            new_docs.sparkSession, band_store, sidecar.LSH,
+            num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
         )
     nb = lsh_band_store(
         new_docs, text_col, id_col, num_hashes, bands, shingle_k

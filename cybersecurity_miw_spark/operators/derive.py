@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cybersecurity_miw_spark.cache import app_memo
 from cybersecurity_miw_spark.functions.cols import qcol
 from cybersecurity_miw_spark.functions.datetime import bucket_date, bucket_time, parse_date
 from cybersecurity_miw_spark.functions.kv import evtx_kv, evtx2_kv
@@ -60,86 +61,36 @@ def raw_token(f: Field) -> Column:
     return F.trim(strip_quotes(F.get(F.col(TOKENS_COL), f.resolved_pos)))
 
 
-# Memoized per-field derived-column EXPRESSIONS — the _READER_MEMO
-# discipline (sources/tables.py) applied to expression trees: a Column
-# wraps an immutable unresolved JVM expression (attributes bind by
-# name at analysis), so ONE build serves every query that projects an
-# identical field. Building a date field's tree costs ~50-100 ms of
-# py4j round-trips (finding 6, OPTIMIZATION_r18.md) and the format
-# compiler rebuilds every field on every compile. Keyed by the live
-# application (a JVM restart invalidates py4j handles), the field's
-# dataclass repr, AND resolved_pos (repr=False on the dataclass, so
-# two fields differing only in resolved position must be keyed
-# explicitly). Entry count is bounded by the configured format
-# surface, like the reader memo.
-_DERIVE_MEMO: dict[tuple, Column] = {}
-# the application the memo belongs to — a SINGLE-app dict cleared on
-# app change (ADVICE r18: keying entries by app id never evicted dead
-# applications' py4j handles in a driver that restarts sessions)
-_DERIVE_MEMO_APP: str | None = None
-
-
 def _app_id() -> str | None:
     spark = SparkSession.getActiveSession()
     return spark.sparkContext.applicationId if spark is not None else None
 
 
-def memo_for_app(memo: dict, owner_app: str | None, app: str | None):
-    """Single-application memo discipline (shared by the derive/agg
-    expression memos): on app-id change the whole dict is cleared —
-    stale Column handles point into a dead JVM and can never be
-    served again — and the new owner is returned for the caller to
-    store. ``app is None`` (no active session on this thread) means
-    DO NOT cache: a None-keyed entry could serve dead handles across
-    restarts (ADVICE r18)."""
-    if app != owner_app:
-        memo.clear()
-    return app
-
-
-# generic single-app memo for expensive UNRESOLVED expression trees
-# (the r19 extension of the derive/agg memos to other operators):
-# a Column is an immutable tree that binds attributes by NAME at
-# analysis, so one build serves every frame with those column names.
-# Keyed by a caller-chosen tuple; cleared on app change; uncached
-# when no session is active (memo_for_app discipline).
-_EXPR_MEMO: dict[tuple, object] = {}
-_EXPR_MEMO_APP: str | None = None
-
-
 def expr_memo(key: tuple, build):
     """Memoize ``build()`` (an unresolved Column or a list of them)
-    under ``key`` for the life of the current Spark application.
-    Use for builders whose py4j construction cost is measurable
-    (~0.1 s+) and whose output depends only on column NAMES — never
-    for anything holding rows or a DataFrame."""
-    global _EXPR_MEMO_APP
-    app = _app_id()
-    if app is None:
-        return build()
-    _EXPR_MEMO_APP = memo_for_app(_EXPR_MEMO, _EXPR_MEMO_APP, app)
-    val = _EXPR_MEMO.get(key)
-    if val is None:
-        val = build()
-        _EXPR_MEMO[key] = val
-    return val
+    under ``key`` for the life of the current Spark application
+    (:func:`~cybersecurity_miw_spark.cache.app_memo`; uncached when no
+    session is active). A Column is an immutable tree that binds
+    attributes by NAME at analysis, so one build serves every frame
+    with those column names. Use for builders whose py4j construction
+    cost is measurable (~0.1 s+) and whose output depends only on
+    column NAMES — never for anything holding rows or a DataFrame."""
+    return app_memo(_app_id(), key, build)
 
 
 def derive_column(f: Field) -> Column:
-    """The typed/derived output column for one field (memoized — see
-    ``_DERIVE_MEMO``; the returned Column is immutable and aliased by
-    callers, never mutated)."""
-    global _DERIVE_MEMO_APP
-    app = _app_id()
-    if app is None:
-        return _build_derive_column(f)
-    _DERIVE_MEMO_APP = memo_for_app(_DERIVE_MEMO, _DERIVE_MEMO_APP, app)
-    key = (repr(f), f.resolved_pos)
-    col = _DERIVE_MEMO.get(key)
-    if col is None:
-        col = _build_derive_column(f)
-        _DERIVE_MEMO[key] = col
-    return col
+    """The typed/derived output column for one field, memoized per
+    application: building a date field's tree costs ~50-100 ms of
+    py4j round-trips (finding 6, OPTIMIZATION_r18.md) and the format
+    compiler rebuilds every field on every compile. Keyed by the
+    field's dataclass repr AND resolved_pos (repr=False on the
+    dataclass, so two fields differing only in resolved position must
+    be keyed explicitly). The returned Column is immutable and aliased
+    by callers, never mutated."""
+    return expr_memo(
+        ("derive_column", repr(f), f.resolved_pos),
+        lambda: _build_derive_column(f),
+    )
 
 
 def _build_derive_column(f: Field) -> Column:

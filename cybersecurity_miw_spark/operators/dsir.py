@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cybersecurity_miw_spark import sidecar
+
 DEFAULT_BUCKETS = 10_000
 
 
@@ -294,9 +296,6 @@ def dsir_select_to_budget(
     return graded.join(picked.select(id_col), id_col, "semi")
 
 
-DSIR_MODEL_PARAMS_FILE = "_dsir_params.json"
-
-
 def write_dsir_model(
     raw: DataFrame,
     target: DataFrame,
@@ -309,15 +308,13 @@ def write_dsir_model(
     """Persist the DSIR model so scoring never rescans the corpora:
     one (bucket, llr_micro, rc) row per raw-observed bucket (rc — the
     raw corpus's bucket count — rides along as the drift monitor's
-    reference distribution) plus the ``_dsir_params.json`` family
+    reference distribution) plus the ``sidecar.DSIR`` family
     sidecar (n_buckets, bigrams, totals). ≤ n_buckets rows — the
     model is broadcast-sized by construction, the cheapest persisted
     store in the repo. Returns the recorded params. Published
-    atomically (the store-family convention) so a concurrent scorer
-    never reads a half-written model."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
+    atomically with its sidecar staged inside the swap, so a
+    concurrent scorer never reads a half-written model nor pairs new
+    rows with the old totals."""
     from cybersecurity_miw_spark.sources.maintain import publish_table
 
     spark = raw.sparkSession
@@ -327,15 +324,15 @@ def write_dsir_model(
     model = joined.select(
         "bucket", "llr_micro", F.col("rc").cast("long").alias("rc")
     )
-    publish_table(spark, model, model_dir)
     params = {
         "n_buckets": n_buckets,
         "bigrams": bigrams,
         "tot_r": int(tot_r),
         "tot_t": int(tot_t),
     }
-    fsutil.write_text(
-        spark, f"{model_dir}/{DSIR_MODEL_PARAMS_FILE}", json.dumps(params)
+    publish_table(
+        spark, model, model_dir,
+        sidecar_texts=sidecar.staged(sidecar.DSIR, **params),
     )
     return params
 
@@ -350,29 +347,9 @@ def load_dsir_model(
     family mismatch when the caller pins expectations — hash buckets
     from different (n_buckets, bigrams) families silently mis-score,
     the mixed-family hazard class every store sidecar here guards."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{model_dir}/{DSIR_MODEL_PARAMS_FILE}"
-    if not fsutil.exists(spark, path):
-        raise ValueError(
-            f"no DSIR model sidecar at {model_dir} — write the model "
-            "with write_dsir_model (a bare parquet dir is not a model)"
-        )
-    params = json.loads(fsutil.read_text(spark, path))
-    expect = {}
-    if n_buckets is not None:
-        expect["n_buckets"] = n_buckets
-    if bigrams is not None:
-        expect["bigrams"] = bigrams
-    family = {k: params.get(k) for k in expect}
-    if family != expect:
-        raise ValueError(
-            f"DSIR model at {model_dir} was built with {family}; this "
-            f"caller supplies {expect} — mixed hash families mis-score "
-            "silently. Rebuild the model or pass the stored parameters."
-        )
+    params = sidecar.check(
+        spark, model_dir, sidecar.DSIR, n_buckets=n_buckets, bigrams=bigrams
+    )
     return spark.read.parquet(model_dir), params
 
 

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from cybersecurity_miw_spark import sidecar
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -150,8 +152,6 @@ def media_stats(df: DataFrame) -> DataFrame:
 
 PHASH_DEFAULT_BITS = 60  # 15 hex digits < 2^63: no sign wrap in
 PHASH_DEFAULT_BAND_BITS = 15  # either engine (the md5_60 convention)
-
-PHASH_STORE_PARAMS_FILE = "_phash_params.json"
 
 
 def with_phash(
@@ -327,53 +327,6 @@ def phash_band_store(
     return _phash_banded(df, bits, band_bits, payload_col, id_col)
 
 
-def write_phash_store_params(
-    spark,
-    store_dir: str,
-    bits: int = PHASH_DEFAULT_BITS,
-    band_bits: int = PHASH_DEFAULT_BAND_BITS,
-) -> None:
-    """Record a phash store's (bits, band_bits) family in a sidecar —
-    bands from different widths never collide, so a mismatched join
-    silently yields zero candidates (the mixed-family hazard class)."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    fsutil.write_text(
-        spark,
-        f"{store_dir}/{PHASH_STORE_PARAMS_FILE}",
-        json.dumps({"bits": bits, "band_bits": band_bits}),
-    )
-
-
-def load_phash_band_store(
-    spark,
-    store_dir: str,
-    bits: int = PHASH_DEFAULT_BITS,
-    band_bits: int = PHASH_DEFAULT_BAND_BITS,
-) -> DataFrame:
-    """Read a persisted phash band store, raising on a recorded
-    family mismatch; legacy stores without a sidecar load unchecked."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{store_dir}/{PHASH_STORE_PARAMS_FILE}"
-    if fsutil.exists(spark, path):
-        stored = json.loads(fsutil.read_text(spark, path))
-        params = {"bits": bits, "band_bits": band_bits}
-        family = {k: v for k, v in stored.items() if k in params}
-        if family != params:
-            raise ValueError(
-                f"phash store at {store_dir} was built with {family}; "
-                f"this query supplies {params} — mixed perceptual-hash "
-                "families never match. Rebuild the store or pass the "
-                "stored parameters."
-            )
-    return spark.read.parquet(store_dir)
-
-
 def incremental_phash_candidates(
     new_media: DataFrame,
     band_store: DataFrame | str,
@@ -389,11 +342,12 @@ def incremental_phash_candidates(
     rescanned. Same band family as the self-join path, so a pair is
     a candidate here iff the pooled self-join would find it
     (golden-pinned); (x, x) self-pairs are guarded for the family's
-    replay contract. A string ``band_store`` loads via
-    :func:`load_phash_band_store` (family sidecar checked)."""
+    replay contract. A string ``band_store`` loads with its
+    ``sidecar.PHASH`` family checked."""
     if isinstance(band_store, str):
-        band_store = load_phash_band_store(
-            new_media.sparkSession, band_store, bits, band_bits
+        band_store = sidecar.load(
+            new_media.sparkSession, band_store, sidecar.PHASH,
+            bits=bits, band_bits=band_bits,
         )
     nb = _phash_banded(
         new_media, bits, band_bits, payload_col, id_col

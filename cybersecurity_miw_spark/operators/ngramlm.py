@@ -67,10 +67,11 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cybersecurity_miw_spark import sidecar
+
 MICRO = 1_000_000
 DEFAULT_ALPHA = 0.4  # Brants et al. 2007 §4's stupid-backoff weight
 DEFAULT_MIN_COUNT = 1
-LM_PARAMS_FILE = "_lm_params.json"
 
 # CCNet cuts head/middle/tail at the 33rd/67th percentile of the
 # target-domain score distribution; these module defaults are only
@@ -445,12 +446,10 @@ def write_lm_model(
     alpha: float = DEFAULT_ALPHA,
 ) -> dict:
     """Train and persist: the ``(w1, w2, lp_micro, c)`` model table
-    plus the ``_lm_params.json`` sidecar, published atomically
+    plus the ``sidecar.LM`` sidecar, published atomically
     (publish_table stages the sidecar inside the rename — the ADVICE
     r16 torn-read contract) so a concurrent scorer never pairs new
     rows with stale params. Returns the params dict."""
-    import json
-
     from cybersecurity_miw_spark.sources.maintain import publish_table
 
     spark = target.sparkSession
@@ -461,7 +460,7 @@ def write_lm_model(
         spark,
         model,
         model_dir,
-        sidecar_texts={LM_PARAMS_FILE: json.dumps(params)},
+        sidecar_texts=sidecar.staged(sidecar.LM, **params),
     )
     return params
 
@@ -475,23 +474,7 @@ def load_lm_model(
     on a missing sidecar or (when the caller pins ``order``) a family
     mismatch. The model stays DISTRIBUTED — target-vocab tables can
     be millions of rows; scoring joins them, never collects them."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{model_dir}/{LM_PARAMS_FILE}"
-    if not fsutil.exists(spark, path):
-        raise ValueError(
-            f"no LM sidecar at {model_dir} — write the model with "
-            "write_lm_model (a bare parquet dir is not a model)"
-        )
-    params = json.loads(fsutil.read_text(spark, path))
-    if order is not None and int(params["order"]) != int(order):
-        raise ValueError(
-            f"LM at {model_dir} has order={params['order']}; this "
-            f"caller expects order={order} — mixed families mis-score "
-            "silently. Rebuild or pass the stored order."
-        )
+    params = sidecar.check(spark, model_dir, sidecar.LM, order=order)
     if params.get("unigram_lp") != "raw":
         raise ValueError(
             f"LM at {model_dir} predates the raw-unigram format "

@@ -45,6 +45,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cybersecurity_miw_spark import sidecar
+
 MICRO = 1_000_000
 DEFAULT_DIM = 1024
 
@@ -515,9 +517,6 @@ def clf_separation(
     )
 
 
-CLF_PARAMS_FILE = "_clf_params.json"
-
-
 def write_quality_model(
     target: DataFrame,
     raw: DataFrame,
@@ -532,12 +531,10 @@ def write_quality_model(
     """Train and persist: a (bucket, w_micro, rc) table (rc = the RAW
     corpus's absolute feature counts — the drift monitor's reference
     distribution, the dsir model-store shape) plus the
-    ``_clf_params.json`` sidecar. ≤ dim rows — broadcast-sized by
+    ``sidecar.CLF`` sidecar. ≤ dim rows — broadcast-sized by
     construction. Published atomically (publish_table) so a
     concurrent scorer never reads a half-written model. Returns the
     sidecar params (with the weights)."""
-    import json
-
     from cybersecurity_miw_spark.operators.dedup import staged
     from cybersecurity_miw_spark.sources.maintain import publish_table
 
@@ -565,7 +562,7 @@ def write_quality_model(
         spark,
         table,
         model_dir,
-        sidecar_texts={CLF_PARAMS_FILE: json.dumps(params)},
+        sidecar_texts=sidecar.staged(sidecar.CLF, **params),
     )
     return model
 
@@ -579,25 +576,7 @@ def load_quality_model(
     raising on a family mismatch when the caller pins ``dim`` —
     feature spaces of different dims silently mis-score, the
     mixed-family hazard every store sidecar here guards."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{model_dir}/{CLF_PARAMS_FILE}"
-    if not fsutil.exists(spark, path):
-        raise ValueError(
-            f"no classifier sidecar at {model_dir} — write the model "
-            "with write_quality_model (a bare parquet dir is not a "
-            "model)"
-        )
-    params = json.loads(fsutil.read_text(spark, path))
-    if dim is not None and int(params["dim"]) != int(dim):
-        raise ValueError(
-            f"classifier at {model_dir} was trained with "
-            f"dim={params['dim']}; this caller expects dim={dim} — "
-            "mixed feature spaces mis-score silently. Rebuild or pass "
-            "the stored dim."
-        )
+    params = sidecar.check(spark, model_dir, sidecar.CLF, dim=dim)
     rows = spark.read.parquet(model_dir).collect()
     w = [0] * int(params["dim"])
     for r in rows:

@@ -68,6 +68,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from cybersecurity_miw_spark import sidecar
 from cybersecurity_miw_spark.operators.dedup import staged
 from cybersecurity_miw_spark.operators.textstats import with_shingles
 
@@ -601,18 +602,17 @@ def ppjoin_cross(
 # fresh frequencies restores it. Unseen batch tokens order at _df=0
 # (rarest-first guess, sound under the lemma).
 
-SETSIM_STORE_PARAMS_FILE = "_setsim_params.json"
-
 # rebuild-threshold multiple for the frozen-order staleness monitor:
 # SCALE.md r11 measured healthy drift at ≤ ~1× the creation baseline
 # and the recurring-drift blowup at ×13.9 by its second batch, so any
 # factor in the 3-5× band separates them cleanly
 STALENESS_DEFAULT_FACTOR = 4.0
 
-# family keys of the sidecar — the ones whose mismatch silently
-# changes prefix contents; monitoring keys (baseline) are advisory
-# and excluded from the load-time equality guard
-_SETSIM_FAMILY_KEYS = ("t_pm", "shingle_k")
+
+def _prefix_family(threshold: float, shingle_k: int) -> dict:
+    """The prefix store's ``sidecar.PREFIX`` family keys: prefix
+    lengths follow the threshold, recorded in per-mille."""
+    return {"t_pm": _t_pm(threshold), "shingle_k": shingle_k}
 
 
 def write_prefix_store_params(
@@ -622,11 +622,11 @@ def write_prefix_store_params(
     shingle_k: int = 3,
     baseline_cand_per_doc: float | None = None,
 ) -> None:
-    """Record a prefix store's (threshold, shingle_k) in a sidecar
-    inside ``store_dir`` (Hadoop FS — works on any filesystem).
-    Prefix lengths depend on the threshold, so a store probed at a
-    different threshold silently loses pairs — the same
-    silent-zero-candidates hazard class as mixed MinHash families.
+    """Record a prefix store's (threshold, shingle_k) in its
+    ``sidecar.PREFIX`` sidecar. Prefix lengths depend on the
+    threshold, so a store probed at a different threshold silently
+    loses pairs — the same silent-zero-candidates hazard class as
+    mixed MinHash families.
 
     ``baseline_cand_per_doc``: optional creation-time candidate
     volume per probe doc (:func:`measure_cand_per_doc` over the
@@ -635,15 +635,10 @@ def write_prefix_store_params(
     measured a ×66 cand/doc blowup under recurring vocabulary drift
     with NO correctness signal, so cost drift is only visible
     against a recorded baseline."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    params = {"t_pm": _t_pm(threshold), "shingle_k": shingle_k}
-    if baseline_cand_per_doc is not None:
-        params["baseline_cand_per_doc"] = float(baseline_cand_per_doc)
-    fsutil.write_text(
-        spark, f"{store_dir}/{SETSIM_STORE_PARAMS_FILE}", json.dumps(params)
+    sidecar.write(
+        spark, store_dir, sidecar.PREFIX,
+        **_prefix_family(threshold, shingle_k),
+        baseline_cand_per_doc=baseline_cand_per_doc,
     )
 
 
@@ -657,42 +652,10 @@ def load_prefix_store(
     (threshold, shingle_k) differ from the supplied parameters.
     Legacy stores without a sidecar load unchecked (caller owns the
     contract)."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{store_dir}/{SETSIM_STORE_PARAMS_FILE}"
-    if fsutil.exists(spark, path):
-        stored = json.loads(fsutil.read_text(spark, path))
-        family = {
-            k: v for k, v in stored.items() if k in _SETSIM_FAMILY_KEYS
-        }
-        params = {"t_pm": _t_pm(threshold), "shingle_k": shingle_k}
-        if family != params:
-            raise ValueError(
-                f"prefix store at {store_dir} was built with {family}; "
-                f"this query supplies {params} — prefix lengths differ, "
-                "pairs would silently drop. Rebuild the store or pass "
-                "the stored parameters."
-            )
-    return spark.read.parquet(store_dir)
-
-
-def read_prefix_store_baseline(spark, store_dir: str) -> float | None:
-    """The creation-time ``baseline_cand_per_doc`` recorded in a
-    prefix store's sidecar, or None (legacy store / never measured).
-    Feed it to :func:`staleness_report` with a live batch's candidate
-    count."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{store_dir}/{SETSIM_STORE_PARAMS_FILE}"
-    if not fsutil.exists(spark, path):
-        return None
-    stored = json.loads(fsutil.read_text(spark, path))
-    v = stored.get("baseline_cand_per_doc")
-    return float(v) if v is not None else None
+    return sidecar.load(
+        spark, store_dir, sidecar.PREFIX,
+        **_prefix_family(threshold, shingle_k),
+    )
 
 
 def measure_cand_per_doc(
@@ -895,7 +858,7 @@ def incremental_ppjoin_pairs(
     the plan reuses for its three candidate references, so the
     monitored path trades one eager batch-sized job for two repeated
     candidate computations). ``baseline_cand_per_doc`` usually comes
-    from :func:`read_prefix_store_baseline`; with no baseline the
+    from the store's ``sidecar.PREFIX`` params; with no baseline the
     report still carries the live cand/doc (``stale`` stays False —
     nothing to compare against)."""
     t_pm = _t_pm(threshold)
@@ -951,9 +914,6 @@ def incremental_ppjoin_pairs(
 
 # ---- store-backed incremental containment (decontamination loop) ----
 
-CONTAINMENT_STORE_PARAMS_FILE = "_containment_params.json"
-
-
 def containment_store(
     containers: DataFrame,
     freq: DataFrame,
@@ -979,69 +939,6 @@ def containment_store(
         .select(id_col, "sz", F.posexplode("toks").alias("pos", "tok"))
         .withColumn("pos", (F.col("pos") + 1).cast("int"))
     )
-
-
-def write_containment_store_params(
-    spark,
-    store_dir: str,
-    shingle_k: int = 3,
-    baseline_cand_per_doc: float | None = None,
-) -> None:
-    """Record a containment store's shingle width (the one family
-    parameter — the store is threshold-independent) plus an optional
-    creation-time staleness baseline, mirroring
-    :func:`write_prefix_store_params`."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    params: dict = {"shingle_k": shingle_k}
-    if baseline_cand_per_doc is not None:
-        params["baseline_cand_per_doc"] = float(baseline_cand_per_doc)
-    fsutil.write_text(
-        spark,
-        f"{store_dir}/{CONTAINMENT_STORE_PARAMS_FILE}",
-        json.dumps(params),
-    )
-
-
-def load_containment_store(spark, store_dir: str, shingle_k: int = 3):
-    """Read a persisted containment store, raising on a recorded
-    shingle-width mismatch (different widths produce disjoint token
-    vocabularies — the join would silently find nothing). Legacy
-    stores without a sidecar load unchecked."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{store_dir}/{CONTAINMENT_STORE_PARAMS_FILE}"
-    if fsutil.exists(spark, path):
-        stored = json.loads(fsutil.read_text(spark, path))
-        if stored.get("shingle_k") != shingle_k:
-            raise ValueError(
-                f"containment store at {store_dir} was built with "
-                f"shingle_k={stored.get('shingle_k')}; this query "
-                f"supplies shingle_k={shingle_k} — the token "
-                "vocabularies are disjoint, candidates would silently "
-                "drop to zero. Rebuild the store or pass the stored "
-                "width."
-            )
-    return spark.read.parquet(store_dir)
-
-
-def read_containment_store_baseline(spark, store_dir: str) -> float | None:
-    """The creation-time staleness baseline recorded in a containment
-    store's sidecar, or None."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{store_dir}/{CONTAINMENT_STORE_PARAMS_FILE}"
-    if not fsutil.exists(spark, path):
-        return None
-    stored = json.loads(fsutil.read_text(spark, path))
-    v = stored.get("baseline_cand_per_doc")
-    return float(v) if v is not None else None
 
 
 def _incremental_containment_cand(
@@ -1320,8 +1217,8 @@ def rebuild_containment_store(
             threshold=baseline_threshold,
             shingle_k=shingle_k,
         )
-    write_containment_store_params(
-        spark, store_dir, shingle_k=shingle_k,
+    sidecar.write(
+        spark, store_dir, sidecar.CONTAINMENT, shingle_k=shingle_k,
         baseline_cand_per_doc=baseline or None,
     )
     return {"rows": rows, "baseline_cand_per_doc": baseline}

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from cybersecurity_miw_spark import sidecar
 from cybersecurity_miw_spark.operators.dedup import staged
 
 
@@ -498,9 +499,6 @@ def _cells_pairs_raw(
     )
 
 
-SEMANTIC_STORE_PARAMS_FILE = "_semdedup_params.json"
-
-
 def embedding_bucket_store(
     df: DataFrame,
     dim: int,
@@ -533,75 +531,6 @@ def embedding_bucket_store(
     )
 
 
-def write_semantic_store_params(
-    spark,
-    store_dir: str,
-    dim: int,
-    n_planes: int = 4,
-    baseline_cand_per_doc: float | None = None,
-) -> None:
-    """Record an embedding bucket store's (dim, n_planes) in a
-    sidecar — the semantic twin of ``write_band_store_params``:
-    buckets from different plane families never collide, so a
-    mismatched join silently yields zero candidates. The optional
-    ``baseline_cand_per_doc`` is the ingest monitor's reference
-    point (store-pair candidates per batch doc at creation), exactly
-    as in the other store sidecars."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    params: dict = {"dim": dim, "n_planes": n_planes}
-    if baseline_cand_per_doc is not None:
-        params["baseline_cand_per_doc"] = float(baseline_cand_per_doc)
-    fsutil.write_text(
-        spark,
-        f"{store_dir}/{SEMANTIC_STORE_PARAMS_FILE}",
-        json.dumps(params),
-    )
-
-
-def read_semantic_store_baseline(spark, store_dir: str) -> float | None:
-    """The ingest-monitor baseline recorded in an embedding bucket
-    store's sidecar, or None."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{store_dir}/{SEMANTIC_STORE_PARAMS_FILE}"
-    if not fsutil.exists(spark, path):
-        return None
-    stored = json.loads(fsutil.read_text(spark, path))
-    v = stored.get("baseline_cand_per_doc")
-    return float(v) if v is not None else None
-
-
-def load_embedding_bucket_store(
-    spark, store_dir: str, dim: int, n_planes: int = 4
-) -> DataFrame:
-    """Read a persisted embedding bucket store, raising on a recorded
-    family mismatch; legacy stores without a sidecar load unchecked."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{store_dir}/{SEMANTIC_STORE_PARAMS_FILE}"
-    if fsutil.exists(spark, path):
-        stored = json.loads(fsutil.read_text(spark, path))
-        params = {"dim": dim, "n_planes": n_planes}
-        # family keys only: monitoring keys (baseline_cand_per_doc)
-        # are advisory and must not fail a same-family load
-        family = {k: v for k, v in stored.items() if k in params}
-        if family != params:
-            raise ValueError(
-                f"semantic store at {store_dir} was built with {family}; "
-                f"this query supplies {params} — mixed hyperplane "
-                "families never match. Rebuild the store or pass the "
-                "stored parameters."
-            )
-    return spark.read.parquet(store_dir)
-
-
 def incremental_semantic_pairs(
     new_vecs: DataFrame,
     store: DataFrame | str,
@@ -619,15 +548,16 @@ def incremental_semantic_pairs(
     never an all-pairs scan of history. Same plane family as the
     batch self-join path (:func:`cosine_near_dup_lsh`), so a pair is
     found here iff the pooled self-join restricted to batch × history
-    would find it (golden-pinned). A string ``store`` loads via
-    :func:`load_embedding_bucket_store` (family sidecar checked).
+    would find it (golden-pinned). A string ``store`` loads with its
+    ``sidecar.SEMANTIC`` family checked.
     ``new_id != stored_id`` pairs only: a foreachBatch replay that
     re-joins a batch against its own partially-appended store rows
     (at-least-once sinks append before the checkpoint commits) must
     not emit (x, x) self-pairs."""
     if isinstance(store, str):
-        store = load_embedding_bucket_store(
-            new_vecs.sparkSession, store, dim, n_planes
+        store = sidecar.load(
+            new_vecs.sparkSession, store, sidecar.SEMANTIC,
+            dim=dim, n_planes=n_planes,
         )
     nb = embedding_bucket_store(
         new_vecs, dim, n_planes, vec_col, id_col
@@ -2120,7 +2050,7 @@ def append_to_ivf_index(
     with a from-scratch build over the pooled corpus is
     golden-pinned.
 
-    The ``_ivf_params.json`` sidecar guards the family: an append
+    The ``sidecar.IVF`` sidecar guards the family: an append
     whose quantizer fingerprint differs from the recorded one RAISES
     instead of silently interleaving incomparable codes (the mixed
     MinHash-family hazard class); a missing sidecar is written on
@@ -2132,41 +2062,27 @@ def append_to_ivf_index(
     measure_mean_assigned_d2(train_vecs, centroids))``; with no
     baseline the first monitored append records its own), ``stale``
     above ``staleness_factor`` × baseline."""
-    stored = read_ivf_index_params(new_vecs.sparkSession, index_dir)
+    spark = new_vecs.sparkSession
     fp = quantizer_fingerprint(centroids, codebooks, scale, residual)
-    if stored is not None and stored.get("quantizer") not in (None, fp):
-        raise ValueError(
-            f"ivf index at {index_dir} was built with quantizer "
-            f"{stored.get('quantizer')}; this append supplies {fp} — "
-            "codes from different quantizers are not comparable. "
-            "Rebuild the index or pass the original "
-            "centroids/codebooks."
-        )
+    stored = sidecar.check(spark, index_dir, sidecar.IVF, quantizer=fp)
     baseline = (stored or {}).get("baseline_mean_d2")
     if metrics is not None:
         mean_d2 = measure_mean_assigned_d2(new_vecs, centroids, vec_col)
-        n = new_vecs.count()
         if baseline is None and mean_d2 > 0:
             baseline = mean_d2
-            write_ivf_index_params(
-                new_vecs.sparkSession, index_dir, centroids, codebooks,
-                scale, residual, baseline_mean_d2=baseline,
-            )
-            stored = {"quantizer": fp, "baseline_mean_d2": baseline}
         metrics.append(
-            distortion_report(n, mean_d2, baseline, staleness_factor)
+            distortion_report(
+                new_vecs.count(), mean_d2, baseline, staleness_factor
+            )
         )
     idx = ivf_pq_index(
         new_vecs, centroids, codebooks,
         vec_col=vec_col, id_col=id_col, scale=scale, residual=residual,
     )
     idx.write.mode("append").partitionBy("_cell").parquet(index_dir)
-    if stored is None:
-        write_ivf_index_params(
-            new_vecs.sparkSession, index_dir, centroids, codebooks,
-            scale, residual,
-            baseline_mean_d2=baseline,
-        )
+    sidecar.merge(
+        spark, index_dir, sidecar.IVF, quantizer=fp, baseline_mean_d2=baseline
+    )
 
 
 def rebuild_ivf_index(
@@ -2239,19 +2155,23 @@ def rebuild_ivf_index(
         vectors, centroids, codebooks,
         vec_col=vec_col, id_col=id_col, scale=scale, residual=residual,
     )
+    baseline = measure_mean_assigned_d2(vectors, centroids, vec_col)
+    # the fresh sidecar rides the atomic swap, so a reader never pairs
+    # new codes with the old quantizer. The measured baseline is
+    # recorded unconditionally: a legitimate 0.0 (degenerate corpus
+    # exactly on centroids) must not be dropped for the next monitored
+    # append to re-baseline with its own possibly-drifted mean_d2
+    # (ADVICE r13); only None counts as absent.
     rows = publish_table(
         spark, idx, index_dir, keep_sidecars=False,
         partition_by=("_cell",),
-    )
-    baseline = measure_mean_assigned_d2(vectors, centroids, vec_col)
-    # Pass the measured baseline unconditionally: a legitimate 0.0
-    # (degenerate corpus exactly on centroids) must be recorded, not
-    # dropped for the next monitored append to re-baseline with its
-    # own possibly-drifted mean_d2 (ADVICE r13). write_ivf_index_params
-    # treats only None as absent.
-    write_ivf_index_params(
-        spark, index_dir, centroids, codebooks, scale, residual,
-        baseline_mean_d2=baseline,
+        sidecar_texts=sidecar.staged(
+            sidecar.IVF,
+            quantizer=quantizer_fingerprint(
+                centroids, codebooks, scale, residual
+            ),
+            baseline_mean_d2=baseline,
+        ),
     )
     return {
         "rows": rows,
@@ -2341,8 +2261,6 @@ def semantic_dedup_cells_auto(
 
 # ---- IVF index sidecar: quantizer family guard + distortion monitor ----
 
-IVF_INDEX_PARAMS_FILE = "_ivf_params.json"
-
 
 def quantizer_fingerprint(
     centroids: list[list[float]],
@@ -2375,33 +2293,13 @@ def write_ivf_index_params(
 ) -> None:
     """Record the quantizer fingerprint (and optionally the
     training-time mean assigned-centroid distortion,
-    :func:`measure_mean_assigned_d2`) in a ``_ivf_params.json``
-    sidecar inside the index directory."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    params: dict = {
-        "quantizer": quantizer_fingerprint(
-            centroids, codebooks, scale, residual
-        )
-    }
-    if baseline_mean_d2 is not None:
-        params["baseline_mean_d2"] = float(baseline_mean_d2)
-    fsutil.write_text(
-        spark, f"{index_dir}/{IVF_INDEX_PARAMS_FILE}", json.dumps(params)
+    :func:`measure_mean_assigned_d2`) in the index's ``sidecar.IVF``
+    sidecar."""
+    sidecar.write(
+        spark, index_dir, sidecar.IVF,
+        quantizer=quantizer_fingerprint(centroids, codebooks, scale, residual),
+        baseline_mean_d2=baseline_mean_d2,
     )
-
-
-def read_ivf_index_params(spark, index_dir: str) -> dict | None:
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{index_dir}/{IVF_INDEX_PARAMS_FILE}"
-    if not fsutil.exists(spark, path):
-        return None
-    return json.loads(fsutil.read_text(spark, path))
 
 
 def measure_mean_assigned_d2(
@@ -2478,9 +2376,6 @@ def distortion_report(
 
 # ---- banded semantic store: index/vector split ------------------------------
 
-SEMANTIC_BANDED_PARAMS_FILE = "_semdedup_banded_params.json"
-
-
 def embedding_band_index(
     df: DataFrame,
     dim: int,
@@ -2528,57 +2423,6 @@ def embedding_vector_store(
     )
 
 
-def write_semantic_banded_params(
-    spark,
-    store_dir: str,
-    dim: int,
-    n_planes: int,
-    n_bands: int,
-    baseline_cand_per_doc: float | None = None,
-) -> None:
-    """Family sidecar for the banded index (dim, n_planes, n_bands) +
-    the optional ingest-monitor baseline, the standard store
-    contract."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    params: dict = {
-        "dim": dim, "n_planes": n_planes, "n_bands": n_bands
-    }
-    if baseline_cand_per_doc is not None:
-        params["baseline_cand_per_doc"] = float(baseline_cand_per_doc)
-    fsutil.write_text(
-        spark,
-        f"{store_dir}/{SEMANTIC_BANDED_PARAMS_FILE}",
-        json.dumps(params),
-    )
-
-
-def load_embedding_band_index(
-    spark, store_dir: str, dim: int, n_planes: int, n_bands: int
-) -> DataFrame:
-    """Read a persisted banded index, raising on a recorded family
-    mismatch (family keys only; monitoring keys advisory)."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    path = f"{store_dir}/{SEMANTIC_BANDED_PARAMS_FILE}"
-    if fsutil.exists(spark, path):
-        stored = json.loads(fsutil.read_text(spark, path))
-        params = {"dim": dim, "n_planes": n_planes, "n_bands": n_bands}
-        family = {k: v for k, v in stored.items() if k in params}
-        if family != params:
-            raise ValueError(
-                f"banded semantic index at {store_dir} was built with "
-                f"{family}; this query supplies {params} — mixed plane "
-                "families never match. Rebuild the index or pass the "
-                "stored parameters."
-            )
-    return spark.read.parquet(store_dir)
-
-
 def incremental_semantic_pairs_banded(
     new_vecs: DataFrame,
     index_store: DataFrame | str,
@@ -2603,13 +2447,14 @@ def incremental_semantic_pairs_banded(
     ``cosine_near_dup_lsh(n_bands)`` restricted to batch × history
     (golden-pinned). Self-pairs guarded (replay safety); the
     standard ``metrics``/baseline staleness report attaches to the
-    candidate stage. A string ``index_store`` loads via
-    :func:`load_embedding_band_index` (family sidecar checked)."""
+    candidate stage. A string ``index_store`` loads with its
+    ``sidecar.SEMANTIC_BANDED`` family checked."""
     from cybersecurity_miw_spark.operators import setsim
 
     if isinstance(index_store, str):
-        index_store = load_embedding_band_index(
-            new_vecs.sparkSession, index_store, dim, n_planes, n_bands
+        index_store = sidecar.load(
+            new_vecs.sparkSession, index_store, sidecar.SEMANTIC_BANDED,
+            dim=dim, n_planes=n_planes, n_bands=n_bands,
         )
     nb = embedding_band_index(
         new_vecs, dim, n_planes, n_bands, vec_col, id_col

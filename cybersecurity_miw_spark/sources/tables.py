@@ -18,6 +18,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cybersecurity_miw_spark.cache import app_memo
+
 TABLES = (
     "region",
     "nation",
@@ -46,32 +48,20 @@ _WIDEN_AUTO_MIN_BYTES = int(
 # same table must not re-pay metadata reads
 _PARQUET_STATS: dict[str, tuple[int, list[int]]] = {}
 
-# memoized parquet READER plans, keyed by (applicationId, path): a
-# session-level table registry (what spark.table() gives catalog
-# tables). spark.read.parquet re-runs driver-side footer/schema
-# inference on every call (~0.1 s per table locally; listing-bound on
-# object stores) even though the benchmark tables are immutable for
-# the life of a session. The memo stores the LAZY DataFrame plan only
-# — no rows are cached or persisted; every action still scans the
-# parquet files in full (same PushedFilters/ReadSchema, same plan).
-_READER_MEMO: dict[str, DataFrame] = {}
-# single-app dict cleared on app change (the derive.memo_for_app
-# discipline, ADVICE r18): per-app keys never evicted dead
-# applications' plans in a driver that restarts sessions
-_READER_MEMO_APP: str | None = None
-
 
 def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
-    global _READER_MEMO_APP
-    from cybersecurity_miw_spark.operators.derive import memo_for_app
-
-    app = spark.sparkContext.applicationId
-    _READER_MEMO_APP = memo_for_app(_READER_MEMO, _READER_MEMO_APP, app)
-    df = _READER_MEMO.get(path)
-    if df is None:
-        df = spark.read.parquet(path)
-        _READER_MEMO[path] = df
-    return df
+    """``spark.read.parquet(path)``, memoized per application — a
+    session-level table registry (what spark.table() gives catalog
+    tables): the read re-runs driver-side footer/schema inference on
+    every call (~0.1 s per table locally; listing-bound on object
+    stores) though the benchmark tables are immutable for the life of
+    a session. Only the LAZY plan is kept — no rows are cached or
+    persisted; every action still scans the parquet files in full."""
+    return app_memo(
+        spark.sparkContext.applicationId,
+        ("read_parquet", path),
+        lambda: spark.read.parquet(path),
+    )
 
 
 def _parquet_stats(path: str) -> tuple[int, list[int]] | None:
@@ -205,15 +195,17 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with ``ts`` as a real TimestampType column."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, f"{sf_dir}/events.parquet#ts")
-    memo = _READER_MEMO.get(key)
-    if memo is not None:
-        return memo
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    _READER_MEMO[key] = df
-    return df
+    path = f"{sf_dir}/events.parquet"
+
+    def build() -> DataFrame:
+        df = spark.read.parquet(path)
+        if dict(df.dtypes).get("ts") == "bigint":
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        return df
+
+    return app_memo(
+        spark.sparkContext.applicationId, ("load_events", path), build
+    )
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

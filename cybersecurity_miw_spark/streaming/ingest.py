@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from cybersecurity_miw_spark import sidecar
 from cybersecurity_miw_spark.operators.dedup import (
     dedup_against_store,
     fingerprint_store,
@@ -147,58 +148,34 @@ def _exact_dedup_loop(
     )
 
 
-def _check_family(
-    spark: SparkSession,
-    store_dir: str,
-    params_file: str,
-    kind: str,
-    what: str,
-    family: dict,
-) -> str:
-    """Fail fast, BEFORE the stream starts, when the store's params
-    sidecar records a different hash family than this stream supplies
-    (mixed families never match: candidates would quietly drop to
-    zero). Returns the sidecar path."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
-    params_path = f"{store_dir}/{params_file}"
-    if fsutil.exists(spark, params_path):
-        stored = json.loads(fsutil.read_text(spark, params_path))
-        recorded = {k: v for k, v in stored.items() if k in family}
-        if recorded != family:
-            supplied = ", ".join(f"{k}={v}" for k, v in family.items())
-            raise ValueError(
-                f"{kind} store at {store_dir} was built with "
-                f"{recorded}; this stream supplies {supplied} — mixed "
-                f"{what} families never match. Rebuild the store or "
-                "pass the stored parameters."
-            )
-    return params_path
-
-
 def _monitor_store(
     metrics: list,
     n_cand: int,
     n_docs: int,
-    baseline: float | None,
-    record_baseline,
+    sess: SparkSession,
+    store_dir: str,
+    fam: sidecar.Family,
+    family: dict,
     staleness_factor: float | None,
     on_stale: str,
     loop: str,
 ) -> None:
     """The band-store ingest monitor of one store-joined trigger: on
-    the first trigger WITH candidates, record the baseline later
-    triggers compare against through the family's own sidecar writer
-    ``record_baseline`` (a zero baseline would make every later ratio
+    the first trigger WITH candidates, merge the baseline later
+    triggers compare against into the store's ``fam`` sidecar,
+    together with this stream's ``family`` (a legacy store without a
+    sidecar adopts it; a zero baseline would make every later ratio
     undefined); then append the ``setsim.staleness_report`` and apply
     the ``on_stale`` policy."""
     from cybersecurity_miw_spark.operators import setsim
 
+    stored = sidecar.read(sess, store_dir, fam) or {}
+    baseline = stored.get("baseline_cand_per_doc")
     if baseline is None and n_docs > 0 and n_cand > 0:
         baseline = n_cand / n_docs
-        record_baseline(baseline)
+        sidecar.merge(
+            sess, store_dir, fam, **family, baseline_cand_per_doc=baseline
+        )
     report = setsim.staleness_report(
         n_cand,
         n_docs,
@@ -300,15 +277,16 @@ def streaming_near_dup_flags(
     Per trigger the batch is banded ONCE (the signature computation is
     the dominant narrow stage): the checkpointed bands feed the store
     append, the within-batch self-join, the store join, and the
-    fenced-hit report. A ``_lsh_params.json`` sidecar written inside
+    fenced-hit report. A ``sidecar.LSH`` sidecar written inside
     the store records (num_hashes, bands, shingle_k); a restart with
     different parameters raises instead of silently joining two
     incompatible hash families (old-family band hashes never match
     new-family ones — candidates would quietly drop to zero). Sidecar
     I/O goes through the Hadoop FS API (fsutil), so the guard works
     for hdfs:// and s3a:// stores, not just local paths (ADVICE r8);
-    the same sidecar guards the batch path via
-    :func:`~cybersecurity_miw_spark.operators.dedup.load_band_store`.
+    the same sidecar guards the batch path
+    (:func:`~cybersecurity_miw_spark.operators.dedup.
+    incremental_lsh_candidates` given a store path).
 
     Pass a list as ``metrics`` to monitor store-candidate volume
     (the degradation channel the width fence bounds per-bucket but
@@ -317,9 +295,9 @@ def streaming_near_dup_flags(
     doc vs the creation-time baseline, ``stale`` above
     ``staleness_factor`` × baseline (default
     setsim.STALENESS_DEFAULT_FACTOR). The baseline is recorded
-    automatically into the ``_lsh_params.json`` sidecar on the FIRST
+    automatically into the ``sidecar.LSH`` sidecar on the FIRST
     store-joined trigger (or pre-record one with
-    ``write_band_store_params(..., baseline_cand_per_doc=...)``).
+    ``sidecar.write(..., baseline_cand_per_doc=...)``).
     The candidate count rides the Observation API on the store-join
     subtree, so monitoring adds no extra job — the count is collected
     while the flags sink writes.
@@ -335,25 +313,19 @@ def streaming_near_dup_flags(
     quantizers are load-bearing, so failing fast is the only honest
     in-stream action (docs/MONITORING.md)."""
     from cybersecurity_miw_spark.operators.dedup import (
-        BAND_STORE_PARAMS_FILE,
         DEFAULT_BANDS,
         DEFAULT_NUM_HASHES,
-        check_band_store_params,
         lsh_band_store,
         pairs_from_bands,
-        write_band_store_params,
     )
-    from cybersecurity_miw_spark import fsutil
 
     if num_hashes is None:
         num_hashes = DEFAULT_NUM_HASHES
     if bands is None:
         bands = DEFAULT_BANDS
 
-    check_band_store_params(
-        spark, band_store_dir, num_hashes, bands, shingle_k
-    )
-    params_path = f"{band_store_dir}/{BAND_STORE_PARAMS_FILE}"
+    family = {"num_hashes": num_hashes, "bands": bands, "shingle_k": shingle_k}
+    sidecar.check(spark, band_store_dir, sidecar.LSH, **family)
     metrics = _stale_gate(metrics, on_stale)
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
@@ -425,23 +397,13 @@ def streaming_near_dup_flags(
             # changed cost but not the unit).
             n_docs = bands_new.count() // max(bands, 1)
             n_cand = obs.get["n_store_candidates"]
-            stored = check_band_store_params(
-                sess, band_store_dir, num_hashes, bands, shingle_k
-            ) or {}
             _monitor_store(
                 metrics, n_cand, n_docs,
-                stored.get("baseline_cand_per_doc"),
-                lambda b: write_band_store_params(
-                    sess, band_store_dir, num_hashes, bands, shingle_k,
-                    baseline_cand_per_doc=b,
-                ),
+                sess, band_store_dir, sidecar.LSH, family,
                 staleness_factor, on_stale, "streaming_near_dup_flags",
             )
         bands_new.write.mode("append").parquet(band_store_dir)
-        if not fsutil.exists(sess, params_path):
-            write_band_store_params(
-                sess, band_store_dir, num_hashes, bands, shingle_k
-            )
+        sidecar.merge(sess, band_store_dir, sidecar.LSH, **family)
 
     return micro_batch_loop(
         spark, input_dir, checkpoint_dir, body, parse=parse_doc_lines,
@@ -478,7 +440,7 @@ def streaming_semantic_flags(
     Within-batch semantic pairs surface in the same trigger (batch
     self-join through :func:`cosine_near_dup_lsh`), keeping the
     "every pair is flagged exactly once, when its second member
-    arrives" contract. A ``_semdedup_params.json`` sidecar records
+    arrives" contract. A ``sidecar.SEMANTIC`` sidecar records
     (dim, n_planes): restarting with a different plane family raises
     instead of silently joining incompatible buckets to zero
     candidates.
@@ -501,7 +463,7 @@ def streaming_semantic_flags(
     store-joined trigger appends a ``setsim.staleness_report`` over
     store-pair rows per batch doc (Observation on the store-join
     subtree — counted while the flags sink writes), baseline
-    auto-recorded into ``_semdedup_params.json`` on the first
+    auto-recorded into that sidecar on the first
     store-joined trigger with pairs. A hot hyperplane bucket (the
     occupancy channel ``suggested_planes`` bounds by schedule)
     inflates this ratio; ``stale`` above ``staleness_factor`` ×
@@ -510,21 +472,15 @@ def streaming_semantic_flags(
     ("raise" fails the trigger with :class:`StaleStoreError` before
     its checkpoint commits; rebuild offline, restart, replay)."""
     from cybersecurity_miw_spark.operators.similarity import (
-        SEMANTIC_STORE_PARAMS_FILE,
         cosine_near_dup_lsh,
         embedding_bucket_store,
         incremental_semantic_pairs,
-        read_semantic_store_baseline,
-        write_semantic_store_params,
     )
     from cybersecurity_miw_spark.operators.textstats import hashed_embedding
-    from cybersecurity_miw_spark import fsutil
 
     metrics = _stale_gate(metrics, on_stale)
-    params_path = _check_family(
-        spark, vec_store_dir, SEMANTIC_STORE_PARAMS_FILE, "semantic",
-        "hyperplane", {"dim": dim, "n_planes": n_planes},
-    )
+    family = {"dim": dim, "n_planes": n_planes}
+    sidecar.check(spark, vec_store_dir, sidecar.SEMANTIC, **family)
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -565,16 +521,11 @@ def streaming_semantic_flags(
             n_pairs = obs.get["n_store_pairs"]
             _monitor_store(
                 metrics, n_pairs, n_docs,
-                read_semantic_store_baseline(sess, vec_store_dir),
-                lambda b: write_semantic_store_params(
-                    sess, vec_store_dir, dim, n_planes,
-                    baseline_cand_per_doc=b,
-                ),
+                sess, vec_store_dir, sidecar.SEMANTIC, family,
                 staleness_factor, on_stale, "streaming_semantic_flags",
             )
         bucketed.write.mode("append").parquet(vec_store_dir)
-        if not fsutil.exists(sess, params_path):
-            write_semantic_store_params(sess, vec_store_dir, dim, n_planes)
+        sidecar.merge(sess, vec_store_dir, sidecar.SEMANTIC, **family)
 
     return micro_batch_loop(
         spark, input_dir, checkpoint_dir, body, parse=parse_doc_lines,
@@ -624,10 +575,10 @@ def streaming_containment_flags(
 
     The shingle-width sidecar is checked once before the stream
     starts; ``metrics`` attaches the per-trigger staleness report
-    (baseline from the ``_containment_params.json`` sidecar — record
+    (baseline from the ``sidecar.CONTAINMENT`` sidecar — record
     it at store creation with
-    ``write_containment_store_params(...,
-    baseline_cand_per_doc=measure_containment_cand_per_doc(...))``);
+    ``sidecar.write(..., baseline_cand_per_doc=
+    measure_containment_cand_per_doc(...))``);
     ``on_stale``: the family policy hook — see
     :func:`streaming_near_dup_flags`.
 
@@ -638,16 +589,17 @@ def streaming_containment_flags(
     from cybersecurity_miw_spark.operators.setsim import (
         STALENESS_DEFAULT_FACTOR,
         incremental_containment_pairs,
-        load_containment_store,
-        read_containment_store_baseline,
     )
 
     metrics = _stale_gate(metrics, on_stale)
     # fail fast on a width mismatch BEFORE any batch runs
-    store = load_containment_store(spark, store_dir, shingle_k=shingle_k)
+    stored = sidecar.check(
+        spark, store_dir, sidecar.CONTAINMENT, shingle_k=shingle_k
+    )
+    store = spark.read.parquet(store_dir)
     freq = spark.read.parquet(freq_dir)
     containers = spark.read.parquet(containers_dir)
-    baseline = read_containment_store_baseline(spark, store_dir)
+    baseline = (stored or {}).get("baseline_cand_per_doc")
     factor = (
         staleness_factor
         if staleness_factor is not None
@@ -710,7 +662,7 @@ def streaming_setsim_flags(
     Self-bootstrapping: the FIRST trigger freezes the token order on
     its own batch (token_freq_table → ``freq_dir``), builds the
     store, records the creation-time candidates-per-doc baseline in
-    the ``_setsim_params.json`` sidecar, and flags its within-batch
+    the ``sidecar.PREFIX`` sidecar, and flags its within-batch
     pairs. Every later trigger reads the frozen order as-is. This is
     exactly the frozen-order regime whose cost-staleness r11
     measured: pass ``metrics`` to get the per-trigger
@@ -734,24 +686,20 @@ def streaming_setsim_flags(
     dedupe downstream on the pair key; (x, x) self-pairs are guarded
     out inside the candidate join itself."""
     from cybersecurity_miw_spark.operators.setsim import (
-        SETSIM_STORE_PARAMS_FILE,
         STALENESS_DEFAULT_FACTOR,
+        _prefix_family,
         incremental_ppjoin_pairs,
-        load_prefix_store,
         measure_cand_per_doc,
         ppjoin_pairs,
         prefix_store,
-        read_prefix_store_baseline,
         token_freq_table,
         write_prefix_store_params,
     )
-    from cybersecurity_miw_spark import fsutil
 
     metrics = _stale_gate(metrics, on_stale)
+    family = _prefix_family(threshold, shingle_k)
     # fail fast on a family mismatch BEFORE any batch runs
-    params_path = f"{store_dir}/{SETSIM_STORE_PARAMS_FILE}"
-    if fsutil.exists(spark, params_path):
-        load_prefix_store(spark, store_dir, threshold, shingle_k)
+    sidecar.check(spark, store_dir, sidecar.PREFIX, **family)
     factor = (
         staleness_factor
         if staleness_factor is not None
@@ -768,9 +716,11 @@ def streaming_setsim_flags(
             F.col("id_a").alias("stored_id"),
             "jaccard",
         )
-        has_store = fsutil.exists(sess, params_path)
-        if has_store:
-            store = load_prefix_store(sess, store_dir, threshold, shingle_k)
+        # the sidecar marks a bootstrapped store: it is written after
+        # the first trigger's appends
+        stored = sidecar.check(sess, store_dir, sidecar.PREFIX, **family)
+        if stored is not None:
+            store = sess.read.parquet(store_dir)
             freq = sess.read.parquet(freq_dir)
             hist = sess.read.parquet(history_dir)
             start = len(metrics) if metrics is not None else 0
@@ -778,9 +728,7 @@ def streaming_setsim_flags(
                 batch_df, hist, store, freq,
                 threshold=threshold, shingle_k=shingle_k,
                 metrics=metrics,
-                baseline_cand_per_doc=read_prefix_store_baseline(
-                    sess, store_dir
-                ),
+                baseline_cand_per_doc=stored.get("baseline_cand_per_doc"),
                 staleness_factor=factor,
             )
             _enforce_stale(metrics, start, on_stale, "streaming_setsim_flags")
@@ -799,7 +747,7 @@ def streaming_setsim_flags(
             batch_df, freq, threshold=threshold, shingle_k=shingle_k
         ).write.mode("append").parquet(store_dir)
         batch_df.write.mode("append").parquet(history_dir)
-        if not has_store:
+        if stored is None:
             base = measure_cand_per_doc(
                 batch_df,
                 sess.read.parquet(store_dir),
@@ -831,34 +779,25 @@ def _hamming_band_flags(
     staleness_factor: float | None,
     on_stale: str,
     *,
-    kind: str,
-    what: str,
-    params_file: str,
+    fam: sidecar.Family,
     family: dict,
     opts: dict,
     candidates,
     store_candidates,
     band_rows,
-    write_params,
     loop: str,
     **source,
 ) -> StreamingQuery:
     """The Hamming-band flags loop shared by the SimHash (text) and
     perceptual-hash (media) store families. Each family supplies its
+    ``fam`` sidecar with the ``family`` keys it records, and its
     operators, all called with ``opts``: ``candidates(batch)`` (the
     within-batch band self-join), ``store_candidates(batch, store)``
     (the join against the persisted index) and ``band_rows(batch)``
-    (the rows the batch appends to it); ``write_params(sess, store_dir,
-    **family)`` writes its sidecar, and ``source`` selects the input
+    (the rows the batch appends to it); ``source`` selects the input
     (forwarded to :func:`micro_batch_loop`)."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-
     metrics = _stale_gate(metrics, on_stale)
-    params_path = _check_family(
-        spark, band_store_dir, params_file, kind, what, family
-    )
+    sidecar.check(spark, band_store_dir, fam, **family)
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
@@ -886,27 +825,15 @@ def _hamming_band_flags(
         flags.write.mode("append").parquet(flags_dir)
         if n_cand is not None:
             n_docs = batch_df.count()  # cached checkpoint
-            if not fsutil.exists(sess, params_path):
-                # externally-built store without a sidecar (the legacy
-                # case the family loaders accept): adopt this stream's
-                # startup-validated family before recording the
-                # baseline into it
-                write_params(sess, band_store_dir, **family)
-            stored = json.loads(fsutil.read_text(sess, params_path))
             _monitor_store(
                 metrics, n_cand, n_docs,
-                stored.get("baseline_cand_per_doc"),
-                lambda b: fsutil.write_text(
-                    sess, params_path,
-                    json.dumps({**stored, "baseline_cand_per_doc": b}),
-                ),
+                sess, band_store_dir, fam, family,
                 staleness_factor, on_stale, loop,
             )
         band_rows(batch_df, **opts).write.mode("append").parquet(
             band_store_dir
         )
-        if not fsutil.exists(sess, params_path):
-            write_params(sess, band_store_dir, **family)
+        sidecar.merge(sess, band_store_dir, fam, **family)
 
     return micro_batch_loop(
         spark, input_dir, checkpoint_dir, body,
@@ -939,7 +866,7 @@ def streaming_simhash_flags(
     to the store. Within-batch candidates surface in the same trigger
     (batch band self-join), keeping the "every pair flagged exactly
     once, when its second member arrives" contract; the
-    ``_simhash_params.json`` sidecar fails a restart with a different
+    ``sidecar.SIMHASH`` sidecar fails a restart with a different
     (band_bits, hash_fn) family fast. SimHash trades MinHash's
     shingle-set Jaccard for bit-level cosine-ish similarity at 4-5
     small int rows per doc — the cheapest of the store families per
@@ -962,15 +889,12 @@ def streaming_simhash_flags(
         spark, input_dir, checkpoint_dir, flags_dir, band_store_dir,
         available_now, max_files_per_trigger, metrics, staleness_factor,
         on_stale,
-        kind="simhash",
-        what="SimHash",
-        params_file=dedup.SIMHASH_STORE_PARAMS_FILE,
+        fam=sidecar.SIMHASH,
         family=family,
         opts=family,
         candidates=dedup.simhash_dedup_candidates,
         store_candidates=dedup.incremental_simhash_candidates,
         band_rows=dedup.simhash_band_store,
-        write_params=dedup.write_simhash_store_params,
         loop="streaming_simhash_flags",
         parse=parse_doc_lines,
     )
@@ -1006,7 +930,7 @@ def streaming_phash_flags(
     rescanned. Within-batch near-dups surface in the same trigger
     (batch band self-join), keeping the "every pair flagged exactly
     once, when its second member arrives" contract; the
-    ``_phash_params.json`` sidecar fails a restart with a different
+    ``sidecar.PHASH`` sidecar fails a restart with a different
     (bits, band_bits) family fast, BEFORE the stream starts.
 
     ``metrics`` attaches the family's ingest monitor: store candidates
@@ -1029,15 +953,12 @@ def streaming_phash_flags(
         spark, input_dir, checkpoint_dir, flags_dir, band_store_dir,
         available_now, max_files_per_trigger, metrics, staleness_factor,
         on_stale,
-        kind="phash",
-        what="perceptual-hash",
-        params_file=mm.PHASH_STORE_PARAMS_FILE,
+        fam=sidecar.PHASH,
         family=family,
         opts={**family, "payload_col": payload_col, "id_col": id_col},
         candidates=mm.phash_dedup_candidates,
         store_candidates=mm.incremental_phash_candidates,
         band_rows=mm.phash_band_store,
-        write_params=mm.write_phash_store_params,
         loop="streaming_phash_flags",
         schema=f"{id_col} LONG, {payload_col} BINARY",
         not_null=(id_col,),
@@ -1072,7 +993,7 @@ def streaming_ivf_append(
     only the cell directories the batch lands in, and probe-limited
     queries keep pruning at the file index while the stream runs.
 
-    The ``_ivf_params.json`` quantizer fingerprint is checked BEFORE
+    The ``sidecar.IVF`` quantizer fingerprint is checked BEFORE
     the stream starts (a restart with retrained centroids/codebooks
     fails fast — mixed codes are never comparable) and again inside
     every append (the batch path's guard, unchanged). ``metrics``
@@ -1097,18 +1018,12 @@ def streaming_ivf_append(
 
     metrics = _stale_gate(metrics, on_stale)
     eff_scale = similarity.PQ_SCALE if scale is None else scale
-    stored = similarity.read_ivf_index_params(spark, index_dir)
-    fp = similarity.quantizer_fingerprint(
-        centroids, codebooks, eff_scale, residual
+    sidecar.check(
+        spark, index_dir, sidecar.IVF,
+        quantizer=similarity.quantizer_fingerprint(
+            centroids, codebooks, eff_scale, residual
+        ),
     )
-    if stored is not None and stored.get("quantizer") not in (None, fp):
-        raise ValueError(
-            f"ivf index at {index_dir} was built with quantizer "
-            f"{stored.get('quantizer')}; this stream supplies {fp} — "
-            "codes from different quantizers are not comparable. "
-            "Rebuild the index or pass the original "
-            "centroids/codebooks."
-        )
 
     def body(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1222,7 +1137,7 @@ def streaming_dsir_scores(
 
     Unlike the band-store loops this one cannot bootstrap its store —
     scoring without a model is meaningless — so a missing or
-    family-mismatched ``_dsir_params.json`` fails BEFORE the stream
+    family-mismatched ``sidecar.DSIR`` sidecar fails BEFORE the stream
     starts. Per trigger the drift monitor
     (:func:`~cybersecurity_miw_spark.operators.dsir.dsir_drift_report`
     — JS divergence of the batch's bucket distribution vs the model's
@@ -1272,7 +1187,7 @@ def streaming_clf_scores(
     is reproducible after the fact.
 
     The dsir-scoring loop's contract verbatim: a missing or
-    dim-mismatched ``_clf_params.json`` fails BEFORE the stream
+    dim-mismatched ``sidecar.CLF`` sidecar fails BEFORE the stream
     starts; per trigger the drift monitor
     (:func:`~cybersecurity_miw_spark.operators.qualityclf.
     quality_clf_drift_report` — JS divergence of the batch's hashed-
@@ -1321,7 +1236,7 @@ def streaming_lm_scores(
     reproducible after the fact.
 
     The clf-scoring loop's contract verbatim: a missing or
-    order-mismatched ``_lm_params.json`` fails BEFORE the stream
+    order-mismatched ``sidecar.LM`` sidecar fails BEFORE the stream
     starts; per trigger the drift monitor
     (:func:`~cybersecurity_miw_spark.operators.ngramlm.
     lm_drift_report` — JS divergence of the batch's unigram

@@ -228,6 +228,38 @@ def test_dsir_drift_monitor_and_rebuild(spark, corpus, target, tmp_path):
     assert scored == again and set(scored) == set(scratch)
 
 
+def test_dsir_rebuild_stages_sidecar_inside_the_swap(
+    spark, corpus, target, tmp_path, monkeypatch
+):
+    """The rebuilt model's totals must already sit in the staged
+    directory when it is renamed over the live one: a sidecar written
+    after the swap lets a concurrent load_dsir_model pair the new rows
+    with the old tot_r/tot_t."""
+    from cybersecurity_miw_spark import fsutil, sidecar
+
+    model_dir = str(tmp_path / "dsir_model")
+    old = dsir.write_dsir_model(corpus, target, model_dir, n_buckets=512)
+    grown = corpus.unionByName(
+        spark.createDataFrame(
+            [(900, "new", "quantum ledger blockchain oracle shard")],
+            "doc_id long, source string, text string",
+        )
+    )
+    swapped_in = []
+    real_rename = fsutil.rename
+
+    def rename(spark_, src, dst):
+        if dst.rstrip("/") == model_dir.rstrip("/"):
+            swapped_in.append(sidecar.read(spark_, src, sidecar.DSIR))
+        real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fsutil, "rename", rename)
+    new = dsir.rebuild_dsir_model(grown, target, model_dir)
+    assert new["tot_r"] > old["tot_r"]
+    assert swapped_in == [new]
+    assert dsir.load_dsir_model(spark, model_dir)[1] == new
+
+
 # ---- pure-python reference model (engine-portability property) ----
 
 

@@ -168,10 +168,11 @@ def test_simple_agg_exprs_returns_fresh_list(spark):
 
 
 def test_derive_memo_single_app_eviction(spark, monkeypatch):
-    """r19 (ADVICE r18): the derive memo is a SINGLE-application dict
-    — an app-id change clears it (stale Column handles point into a
-    dead JVM), and with no active session nothing is cached (a
+    """r19 (ADVICE r18): the per-app memo holds ONE application's
+    entries — an app-id change clears it (stale Column handles point
+    into a dead JVM), and with no active session nothing is cached (a
     None-keyed entry could serve dead handles across restarts)."""
+    from cybersecurity_miw_spark import cache
     from cybersecurity_miw_spark.operators import derive
     from cybersecurity_miw_spark.plans.logdef import LogDef
 
@@ -183,15 +184,60 @@ def test_derive_memo_single_app_eviction(spark, monkeypatch):
         }
     )
     fa = ldef.fields[0]
+    key = ("derive_column", repr(fa), fa.resolved_pos)
     derive.derive_column(fa)
-    assert len(derive._DERIVE_MEMO) >= 1
+    assert cache._MEMO[key][0] == spark.sparkContext.applicationId
     # app change -> memo cleared, repopulated under the new owner only
     monkeypatch.setattr(derive, "_app_id", lambda: "app-after-restart")
-    derive.derive_column(fa)
-    assert derive._DERIVE_MEMO_APP == "app-after-restart"
-    assert len(derive._DERIVE_MEMO) == 1
+    col = derive.derive_column(fa)
+    assert cache._MEMO_APP == "app-after-restart"
+    assert list(cache._MEMO) == [key]
+    assert cache._MEMO[key][0] == "app-after-restart"
+    assert derive.derive_column(fa) is col
     # no active session -> build without caching
     monkeypatch.setattr(derive, "_app_id", lambda: None)
-    before = len(derive._DERIVE_MEMO)
-    derive.derive_column(fa)
-    assert len(derive._DERIVE_MEMO) == before
+    assert derive.derive_column(fa) is not col
+    assert list(cache._MEMO) == [key] and cache._MEMO[key][1] is col
+
+
+def test_app_memo_serves_only_the_building_app():
+    """ADVICE: two live applications (or threads straddling a session
+    restart) share the memo, yet an entry built under one app is never
+    served to another, and no build runs under the memo's lock."""
+    import sys
+    import threading
+
+    from cybersecurity_miw_spark import cache
+
+    def build(app):
+        assert not cache._MEMO_LOCK.locked()
+        return (app, object())
+
+    a = cache.app_memo("app-A", ("probe",), lambda: build("app-A"))
+    assert cache.app_memo("app-A", ("probe",), lambda: build("app-A")) is a
+    b = cache.app_memo("app-B", ("probe",), lambda: build("app-B"))
+    assert b[0] == "app-B"
+    assert cache.app_memo("app-A", ("probe",), lambda: build("app-A")) is not a
+
+    # stress: more threads than cores, alternating apps on shared keys
+    wrong: list = []
+
+    def worker(i):
+        for j in range(300):
+            app = f"app-{(i + j) % 3}"
+            got = cache.app_memo(app, ("probe", j % 4), lambda: (app, j))
+            if got[0] != app:
+                wrong.append((app, got[0]))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert wrong == []

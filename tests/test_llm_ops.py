@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cybersecurity_miw_spark import sidecar
 from cybersecurity_miw_spark.operators import dedup, multimodal, similarity, textstats
 
 BASE = (
@@ -502,9 +503,13 @@ def test_phash_incremental_store_matches_pooled(spark, tmp_path):
 
     store_dir = str(tmp_path / "phash_store")
     multimodal.phash_band_store(history).write.parquet(store_dir)
-    multimodal.write_phash_store_params(spark, store_dir)
+    sidecar.write(
+        spark, store_dir, sidecar.PHASH,
+        bits=multimodal.PHASH_DEFAULT_BITS,
+        band_bits=multimodal.PHASH_DEFAULT_BAND_BITS,
+    )
     with pytest.raises(ValueError, match="phash store"):
-        multimodal.load_phash_band_store(spark, store_dir, band_bits=10)
+        multimodal.incremental_phash_candidates(batch, store_dir, band_bits=10)
 
     inc = {
         (r["new_id"], r["stored_id"])
@@ -1345,7 +1350,7 @@ def test_ivf_index_sidecar_guards_quantizer_family(spark, tmp_path):
     books = similarity.static_pq_codebooks(16, 4, 8)
     path = str(tmp_path / "idx")
     similarity.append_to_ivf_index(b1, cents, books, path)
-    params = similarity.read_ivf_index_params(spark, path)
+    params = sidecar.read(spark, path, sidecar.IVF)
     assert params["quantizer"] == similarity.quantizer_fingerprint(
         cents, books
     )
@@ -1393,7 +1398,7 @@ def test_ivf_append_distortion_monitor_trips_on_drift(spark, tmp_path):
     assert m[0]["staleness_ratio"] == 1.0  # first append IS the baseline
     assert m[2]["staleness_ratio"] > 10  # far-drift batch
     # baseline persisted: a fresh reader sees it
-    assert similarity.read_ivf_index_params(spark, path)[
+    assert sidecar.read(spark, path, sidecar.IVF)[
         "baseline_mean_d2"
     ] == m[0]["baseline_mean_d2"]
 
@@ -1461,7 +1466,7 @@ def test_rebuild_ivf_index_one_call_remediation(spark, tmp_path):
     assert "_cell" in idx.columns  # partitioned layout survived the swap
 
     # sidecar: fresh fingerprint + fresh baseline, stale one dropped
-    params = similarity.read_ivf_index_params(spark, path)
+    params = sidecar.read(spark, path, sidecar.IVF)
     assert params["quantizer"] == similarity.quantizer_fingerprint(
         info["centroids"], info["codebooks"]
     )

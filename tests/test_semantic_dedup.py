@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from cybersecurity_miw_spark import sidecar
 from cybersecurity_miw_spark.operators import similarity
 
 DIM = 8
@@ -125,9 +126,9 @@ def test_semantic_store_roundtrip_and_params_guard(spark, tmp_path):
     similarity.embedding_bucket_store(df, dim=DIM, n_planes=2).write.parquet(
         store_dir
     )
-    similarity.write_semantic_store_params(spark, store_dir, DIM, n_planes=2)
-    loaded = similarity.load_embedding_bucket_store(
-        spark, store_dir, DIM, n_planes=2
+    sidecar.write(spark, store_dir, sidecar.SEMANTIC, dim=DIM, n_planes=2)
+    loaded = sidecar.load(
+        spark, store_dir, sidecar.SEMANTIC, dim=DIM, n_planes=2
     )
     assert loaded.count() == 6
     batch = _emb(spark, [(100, _unit([1.0] + [0.5] * (DIM - 1)))])
@@ -137,8 +138,8 @@ def test_semantic_store_roundtrip_and_params_guard(spark, tmp_path):
     assert pairs.count() > 0
     # family mismatch fails fast instead of silently zero candidates
     with pytest.raises(ValueError, match="semantic store"):
-        similarity.load_embedding_bucket_store(
-            spark, store_dir, DIM, n_planes=3
+        similarity.incremental_semantic_pairs(
+            batch, store_dir, threshold=0.99, dim=DIM, n_planes=3
         )
 
 
@@ -425,15 +426,21 @@ def test_banded_index_sidecar_and_monitor(spark, tmp_path):
     similarity.embedding_band_index(
         df, DIM, n_planes=2, n_bands=2
     ).write.parquet(idx_dir)
-    similarity.write_semantic_banded_params(
-        spark, idx_dir, DIM, 2, 2, baseline_cand_per_doc=3.0
+    sidecar.write(
+        spark, idx_dir, sidecar.SEMANTIC_BANDED,
+        dim=DIM, n_planes=2, n_bands=2, baseline_cand_per_doc=3.0,
     )
-    loaded = similarity.load_embedding_band_index(spark, idx_dir, DIM, 2, 2)
+    loaded = sidecar.load(
+        spark, idx_dir, sidecar.SEMANTIC_BANDED, dim=DIM, n_planes=2, n_bands=2
+    )
     assert loaded.count() == 16  # 8 vectors x 2 bands
     import pytest
 
     with pytest.raises(ValueError, match="banded semantic index"):
-        similarity.load_embedding_band_index(spark, idx_dir, DIM, 2, 3)
+        similarity.incremental_semantic_pairs_banded(
+            df, idx_dir, similarity.embedding_vector_store(df),
+            threshold=0.999, dim=DIM, n_planes=2, n_bands=3,
+        )
     m: list = []
     pairs = similarity.incremental_semantic_pairs_banded(
         df, idx_dir, similarity.embedding_vector_store(df),

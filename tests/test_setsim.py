@@ -16,10 +16,15 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
+from cybersecurity_miw_spark import sidecar
 from cybersecurity_miw_spark.operators import setsim
 from cybersecurity_miw_spark.operators.textstats import with_shingles
 
 WORDS = [f"w{i}" for i in range(40)]
+
+
+def _baseline(spark, store_dir, family):
+    return sidecar.read(spark, store_dir, family)["baseline_cand_per_doc"]
 
 
 def _doc(idx: list[int]) -> str:
@@ -560,7 +565,7 @@ def test_staleness_monitor_trips_on_recurring_drift_only(spark, tmp_path):
     setsim.write_prefix_store_params(
         spark, store_dir, threshold=0.5, baseline_cand_per_doc=baseline
     )
-    assert setsim.read_prefix_store_baseline(spark, store_dir) == baseline
+    assert _baseline(spark, store_dir, sidecar.PREFIX) == baseline
     assert baseline > 0  # fixture has some real overlap
 
     drift = " ".join(f"driftword{j}" for j in range(8))
@@ -670,13 +675,14 @@ def test_incremental_containment_two_batch_append_and_sidecar(
     store_dir = str(tmp_path / "cstore")
     freq = setsim.token_freq_table(c0)
     setsim.containment_store(c0, freq).write.parquet(store_dir)
-    setsim.write_containment_store_params(
-        spark, store_dir, shingle_k=3, baseline_cand_per_doc=2.5
+    sidecar.write(
+        spark, store_dir, sidecar.CONTAINMENT, shingle_k=3,
+        baseline_cand_per_doc=2.5,
     )
     setsim.containment_store(c1, freq).write.mode("append").parquet(
         store_dir
     )
-    store = setsim.load_containment_store(spark, store_dir, shingle_k=3)
+    store = sidecar.load(spark, store_dir, sidecar.CONTAINMENT, shingle_k=3)
     containers = c0.unionByName(c1)
     m: list = []
     inc = {
@@ -684,8 +690,8 @@ def test_incremental_containment_two_batch_append_and_sidecar(
         for r in setsim.incremental_containment_pairs(
             probe, containers, store, freq, threshold=0.6,
             metrics=m,
-            baseline_cand_per_doc=setsim.read_containment_store_baseline(
-                spark, store_dir
+            baseline_cand_per_doc=_baseline(
+                spark, store_dir, sidecar.CONTAINMENT
             ),
         ).collect()
     }
@@ -698,9 +704,9 @@ def test_incremental_containment_two_batch_append_and_sidecar(
     assert inc == pooled and inc
     assert len(m) == 1 and m[0]["baseline_cand_per_doc"] == 2.5
     assert m[0]["staleness_ratio"] is not None
-    assert setsim.read_containment_store_baseline(spark, store_dir) == 2.5
+    assert _baseline(spark, store_dir, sidecar.CONTAINMENT) == 2.5
     with pytest.raises(ValueError, match="containment store"):
-        setsim.load_containment_store(spark, store_dir, shingle_k=5)
+        sidecar.load(spark, store_dir, sidecar.CONTAINMENT, shingle_k=5)
 
 
 def test_incremental_containment_drifted_probe_still_exact(spark):
@@ -810,7 +816,7 @@ def test_rebuild_prefix_store_restores_baseline_after_drift(spark, tmp_path):
         spark, corpus, store_dir, freq_dir=freq_dir, threshold=0.5
     )
     assert info["rows"] == spark.read.parquet(store_dir).count()
-    new_base = setsim.read_prefix_store_baseline(spark, store_dir)
+    new_base = _baseline(spark, store_dir, sidecar.PREFIX)
     assert new_base == info["baseline_cand_per_doc"]
 
     m2: list = []
@@ -835,21 +841,21 @@ def test_rebuild_containment_store_swaps_and_rebaselines(spark, tmp_path):
     store_dir = str(tmp_path / "cs")
     freq0 = setsim.token_freq_table(containers)
     setsim.containment_store(containers, freq0).write.parquet(store_dir)
-    setsim.write_containment_store_params(spark, store_dir, shingle_k=3)
+    sidecar.write(spark, store_dir, sidecar.CONTAINMENT, shingle_k=3)
     info = setsim.rebuild_containment_store(
         spark, containers, store_dir,
         baseline_probe=probe, baseline_threshold=0.6,
     )
     assert info["baseline_cand_per_doc"] and info["rows"] > 0
-    assert setsim.read_containment_store_baseline(
-        spark, store_dir
+    assert _baseline(
+        spark, store_dir, sidecar.CONTAINMENT
     ) == info["baseline_cand_per_doc"]
     # rebuilt store still produces the pooled-exact result
     inc = {
         tuple(r)
         for r in setsim.incremental_containment_pairs(
             probe, containers,
-            setsim.load_containment_store(spark, store_dir),
+            sidecar.load(spark, store_dir, sidecar.CONTAINMENT, shingle_k=3),
             setsim.token_freq_table(containers), threshold=0.6,
         ).collect()
     }

@@ -218,11 +218,8 @@ def test_match_filter_empties_the_input(spark, keyed):
 
 def test_null_union_count_value(spark):
     """A union_count value that parses to null (a k/v field absent
-    from the payload) cannot be a map key: the batch histogram fails
-    the job with NULL_MAP_KEY, while the expression path's
-    collect_list skips the null."""
-    from pyspark.errors import SparkRuntimeException
-
+    from the payload) cannot be a map key: both strategies skip it, as
+    the A8 unions skip nulls, and count the line in ``logs``."""
     fmt = _fmt([
         KEY,
         {"name": "p", "pos": 1, "type": "string", "preprocessing": "evtxcsv"},
@@ -230,14 +227,11 @@ def test_null_union_count_value(spark):
          "aggregation": "union_count"},
     ])
     lines = ["a,p-> user=u1", "a,p-> user=u2", "a,p-> t=q", "b,p-> user=u1"]
-    with pytest.raises(SparkRuntimeException, match="NULL_MAP_KEY"):
-        MiwJob(fmt, lines=lines).result(spark).collect()
-    expr = _rows(MiwJob(fmt, lines=lines, union_count_strategy="expr")
-                 .result(spark))
-    assert {gid: (r["logs"], r["user_counts"]) for gid, r in expr.items()} == {
-        "a": (3, {"u1": 1, "u2": 1}),
-        "b": (1, {"u1": 1}),
-    }
+    for got in _both(spark, fmt, lines=lines):
+        assert {g: (r["logs"], r["user_counts"]) for g, r in got.items()} == {
+            "a": (3, {"u1": 1, "u2": 1}),
+            "b": (1, {"u1": 1}),
+        }
 
 
 def test_unknown_union_count_strategy_rejected(spark):

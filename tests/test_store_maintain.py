@@ -15,6 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from cybersecurity_miw_spark import sidecar
 from cybersecurity_miw_spark.operators import dedup
 
 
@@ -215,7 +216,10 @@ def test_phash_store_compacts_and_prunes_like_its_siblings(spark, tmp_path):
         mm.phash_band_store(_media(rows)).write.mode("append").parquet(
             store_dir
         )
-    mm.write_phash_store_params(spark, store_dir)
+    sidecar.write(
+        spark, store_dir, sidecar.PHASH,
+        bits=mm.PHASH_DEFAULT_BITS, band_bits=mm.PHASH_DEFAULT_BAND_BITS,
+    )
 
     batch = _media([(20, template)])
     before = {
@@ -236,7 +240,7 @@ def test_phash_store_compacts_and_prunes_like_its_siblings(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="phash store"):
-        mm.load_phash_band_store(spark, store_dir, band_bits=10)
+        sidecar.load(spark, store_dir, sidecar.PHASH, band_bits=10)
 
     keep = spark.createDataFrame([(2,), (3,)], "media_id long")
     dedup.prune_band_store(spark, store_dir, keep, id_col="media_id")
@@ -298,7 +302,7 @@ def test_pruned_ivf_index_erases_vector_from_answers(spark, tmp_path):
     assert "_cell" in idx.columns
     import pytest as _pytest
 
-    params = similarity.read_ivf_index_params(spark, path)
+    params = sidecar.read(spark, path, sidecar.IVF)
     assert params["quantizer"] == similarity.quantizer_fingerprint(
         cents, books
     )

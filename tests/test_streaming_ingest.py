@@ -284,6 +284,7 @@ def test_batch_store_path_checks_family_sidecar(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
+    from cybersecurity_miw_spark import sidecar
     from cybersecurity_miw_spark.operators import dedup
 
     rows = [
@@ -300,8 +301,8 @@ def test_batch_store_path_checks_family_sidecar(spark, tmp_path):
     )
 
     # legacy store (no sidecar): loads, no check possible
-    legacy = dedup.load_band_store(
-        spark, store_dir, num_hashes=16, bands=4
+    legacy = sidecar.load(
+        spark, store_dir, sidecar.LSH, num_hashes=16, bands=4
     )
     want = {
         (r["new_id"], r["stored_id"])
@@ -311,8 +312,8 @@ def test_batch_store_path_checks_family_sidecar(spark, tmp_path):
     }
     assert want
 
-    dedup.write_band_store_params(
-        spark, store_dir, num_hashes=16, bands=4, shingle_k=3
+    sidecar.write(
+        spark, store_dir, sidecar.LSH, num_hashes=16, bands=4, shingle_k=3
     )
     # sidecar is underscore-prefixed: invisible to the parquet reader
     assert spark.read.parquet(store_dir).columns == [
@@ -342,6 +343,7 @@ def test_simhash_store_path_checks_family_sidecar(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
+    from cybersecurity_miw_spark import sidecar
     from cybersecurity_miw_spark.operators import dedup
 
     rows = [
@@ -354,7 +356,9 @@ def test_simhash_store_path_checks_family_sidecar(spark, tmp_path):
 
     store_dir = str(tmp_path / "simhash")
     dedup.simhash_band_store(history, band_bits=16).write.parquet(store_dir)
-    dedup.write_simhash_store_params(spark, store_dir, band_bits=16)
+    sidecar.write(
+        spark, store_dir, sidecar.SIMHASH, band_bits=16, hash_fn="xxhash64"
+    )
 
     want = {
         (r["new_id"], r["stored_id"])
@@ -446,12 +450,7 @@ def test_near_dup_flags_staleness_metrics(spark, tmp_path):
     records the baseline into the _lsh_params.json sidecar; a later
     burst of template near-dups (many batch docs each hitting many
     store rows) trips ``stale``; a healthy batch does not."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-    from cybersecurity_miw_spark.operators.dedup import (
-        BAND_STORE_PARAMS_FILE,
-    )
+    from cybersecurity_miw_spark import sidecar
     from cybersecurity_miw_spark.streaming.ingest import (
         streaming_near_dup_flags,
     )
@@ -487,10 +486,8 @@ def test_near_dup_flags_staleness_metrics(spark, tmp_path):
         )
     )
     assert len(metrics) == 1 and metrics[0]["stale"] is False
-    sidecar = json.loads(
-        fsutil.read_text(spark, f"{store}/{BAND_STORE_PARAMS_FILE}")
-    )
-    assert sidecar["baseline_cand_per_doc"] == metrics[0]["cand_per_doc"]
+    params = sidecar.read(spark, store, sidecar.LSH)
+    assert params["baseline_cand_per_doc"] == metrics[0]["cand_per_doc"]
 
     # template burst: every doc near-dups the accumulated template
     # rows -> candidates per doc far above the recorded baseline
@@ -512,6 +509,7 @@ def test_containment_flags_match_pooled_cross_and_resume(spark, tmp_path):
     new file probes ONLY the new docs (checkpoint), and the staleness
     metrics list gets one report per trigger with the sidecar
     baseline."""
+    from cybersecurity_miw_spark import sidecar
     from cybersecurity_miw_spark.operators import setsim
     from cybersecurity_miw_spark.streaming.ingest import (
         streaming_containment_flags,
@@ -534,11 +532,11 @@ def test_containment_flags_match_pooled_cross_and_resume(spark, tmp_path):
     sdir = str(tmp_path / "cstore")
     setsim.containment_store(containers, freq).write.parquet(sdir)
     base = setsim.measure_containment_cand_per_doc(
-        containers, setsim.load_containment_store(spark, sdir),
-        freq, threshold=0.6,
+        containers, spark.read.parquet(sdir), freq, threshold=0.6,
     )
-    setsim.write_containment_store_params(
-        spark, sdir, shingle_k=3, baseline_cand_per_doc=base
+    sidecar.write(
+        spark, sdir, sidecar.CONTAINMENT, shingle_k=3,
+        baseline_cand_per_doc=base,
     )
 
     indir = tmp_path / "in"
@@ -614,6 +612,7 @@ def test_setsim_flags_exact_across_runs_with_monitor(spark, tmp_path):
     pairs against the persisted prefix index with a metrics report;
     drained flags equal the pooled ppjoin_pairs over everything
     ingested — zero false negatives, exact jaccard values."""
+    from cybersecurity_miw_spark import sidecar
     from cybersecurity_miw_spark.operators import setsim
     from cybersecurity_miw_spark.streaming.ingest import (
         streaming_setsim_flags,
@@ -651,7 +650,7 @@ def test_setsim_flags_exact_across_runs_with_monitor(spark, tmp_path):
     }
     assert any(n == 2 and s == 1 for n, s, _ in got1)
     assert metrics == []  # first trigger has no store join
-    base = setsim.read_prefix_store_baseline(spark, store)
+    base = sidecar.read(spark, store, sidecar.PREFIX)["baseline_cand_per_doc"]
     assert base and base > 0  # within-batch pair -> nonzero baseline
 
     batch2 = {
@@ -691,12 +690,7 @@ def test_semantic_flags_metrics_and_baseline(spark, tmp_path):
     """The semantic ingest loop's monitor (r12): first store-joined
     trigger with pairs records the baseline into the sidecar; the
     report rides the Observation on the store-join subtree."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
-    from cybersecurity_miw_spark.operators.similarity import (
-        SEMANTIC_STORE_PARAMS_FILE,
-    )
+    from cybersecurity_miw_spark import sidecar
     from cybersecurity_miw_spark.streaming.ingest import (
         streaming_semantic_flags,
     )
@@ -725,11 +719,9 @@ def test_semantic_flags_metrics_and_baseline(spark, tmp_path):
     ).awaitTermination(120)
     assert len(metrics) == 1 and metrics[0]["n_candidates"] >= 1
     assert metrics[0]["stale"] is False
-    sidecar = json.loads(
-        fsutil.read_text(spark, f"{store}/{SEMANTIC_STORE_PARAMS_FILE}")
-    )
-    assert sidecar["baseline_cand_per_doc"] == metrics[0]["cand_per_doc"]
-    assert sidecar["dim"] == 16 and sidecar["n_planes"] == 2
+    params = sidecar.read(spark, store, sidecar.SEMANTIC)
+    assert params["baseline_cand_per_doc"] == metrics[0]["cand_per_doc"]
+    assert params["dim"] == 16 and params["n_planes"] == 2
     got = {
         (r["new_id"], r["stored_id"])
         for r in spark.read.parquet(flags).collect()
@@ -745,7 +737,7 @@ def test_simhash_flags_within_and_across_runs_with_monitor(spark, tmp_path):
     store-joined trigger with candidates."""
     import pytest as _pytest
 
-    from cybersecurity_miw_spark.operators import dedup as _dedup
+    from cybersecurity_miw_spark import sidecar
     from cybersecurity_miw_spark.streaming.ingest import (
         streaming_simhash_flags,
     )
@@ -785,7 +777,9 @@ def test_simhash_flags_within_and_across_runs_with_monitor(spark, tmp_path):
     assert any(n == 10 and s in (1, 2) for n, s in got2)
     assert len(metrics) == 1 and metrics[0]["stale"] is False
     # baseline persisted into the family sidecar; same-family load ok
-    loaded = _dedup.load_simhash_band_store(spark, store)
+    loaded = sidecar.load(
+        spark, store, sidecar.SIMHASH, band_bits=16, hash_fn="xxhash64"
+    )
     assert {r["doc_id"] for r in loaded.collect()} == {1, 2, 3, 10, 11}
     # family mismatch fails fast before the stream starts
     with _pytest.raises(ValueError, match="simhash store"):
@@ -817,6 +811,7 @@ def test_phash_flags_within_and_across_runs_with_monitor(spark, tmp_path):
     trips on a template burst."""
     import pytest as _pytest
 
+    from cybersecurity_miw_spark import sidecar
     from cybersecurity_miw_spark.operators import multimodal as _mm
     from cybersecurity_miw_spark.streaming.ingest import (
         streaming_phash_flags,
@@ -862,7 +857,10 @@ def test_phash_flags_within_and_across_runs_with_monitor(spark, tmp_path):
     assert len(metrics) == 1 and metrics[0]["stale"] is False
     # store rows loadable via the family-checked loader; one row per
     # (asset, band) — payloads never stored
-    loaded = _mm.load_phash_band_store(spark, store)
+    loaded = sidecar.load(
+        spark, store, sidecar.PHASH,
+        bits=_mm.PHASH_DEFAULT_BITS, band_bits=_mm.PHASH_DEFAULT_BAND_BITS,
+    )
     assert {r["media_id"] for r in loaded.collect()} == {1, 2, 3, 10, 11}
     assert set(loaded.columns) == {"media_id", "band", "val"}
     # family mismatch fails fast before the stream starts
@@ -887,12 +885,12 @@ def test_phash_stream_joins_externally_built_store_without_sidecar(
     spark, tmp_path
 ):
     """ADVICE r14: a store built externally via ``phash_band_store``
-    WITHOUT ``write_phash_store_params`` must still be joined from the
+    WITHOUT a params sidecar must still be joined from the
     FIRST trigger — store presence is detected from the data (the
     minhash-loop probe), not the params sidecar, so cross-run pairs
     are never silently missed. The loop adopts the startup-validated
     family into a fresh sidecar as it appends."""
-    from cybersecurity_miw_spark import fsutil
+    from cybersecurity_miw_spark import sidecar
     from cybersecurity_miw_spark.operators import multimodal as _mm
     from cybersecurity_miw_spark.streaming.ingest import (
         streaming_phash_flags,
@@ -913,9 +911,7 @@ def test_phash_stream_joins_externally_built_store_without_sidecar(
         [(1, template)], "media_id LONG, payload BINARY"
     )
     _mm.phash_band_store(hist).write.mode("overwrite").parquet(store)
-    assert not fsutil.exists(
-        spark, f"{store}/{_mm.PHASH_STORE_PARAMS_FILE}"
-    )
+    assert sidecar.read(spark, store, sidecar.PHASH) is None
 
     spark.createDataFrame(
         [(2, bytes(near))], "media_id LONG, payload BINARY"
@@ -932,23 +928,24 @@ def test_phash_stream_joins_externally_built_store_without_sidecar(
     assert (2, 1) in got  # first trigger already saw the store
     # the monitored trigger recorded its baseline into a fresh sidecar
     assert len(metrics) == 1 and metrics[0]["stale"] is False
-    assert fsutil.exists(spark, f"{store}/{_mm.PHASH_STORE_PARAMS_FILE}")
+    assert sidecar.read(spark, store, sidecar.PHASH) == {
+        "bits": _mm.PHASH_DEFAULT_BITS,
+        "band_bits": _mm.PHASH_DEFAULT_BAND_BITS,
+        "baseline_cand_per_doc": metrics[0]["cand_per_doc"],
+    }
 
 
 def test_simhash_stream_joins_externally_built_store_without_sidecar(
     spark, tmp_path
 ):
     """The SimHash twin of the phash test above: a store built
-    externally via ``simhash_band_store`` WITHOUT
-    ``write_simhash_store_params`` (a legacy store
-    ``load_simhash_band_store`` accepts) must be joined from the FIRST
+    externally via ``simhash_band_store`` WITHOUT a params sidecar (a
+    legacy store the family loader accepts) must be joined from the FIRST
     trigger — store presence is detected from the data, not the params
     sidecar, so cross-run pairs are never silently missed. The loop
     adopts the stream's family into a fresh sidecar and records the
     monitor's baseline there."""
-    import json
-
-    from cybersecurity_miw_spark import fsutil
+    from cybersecurity_miw_spark import sidecar
     from cybersecurity_miw_spark.operators import dedup as _dedup
     from cybersecurity_miw_spark.streaming.ingest import (
         streaming_simhash_flags,
@@ -964,8 +961,7 @@ def test_simhash_stream_joins_externally_built_store_without_sidecar(
     # external build: band rows only, NO sidecar
     hist = spark.createDataFrame([(1, base)], "doc_id LONG, text STRING")
     _dedup.simhash_band_store(hist).write.mode("overwrite").parquet(store)
-    sidecar = f"{store}/{_dedup.SIMHASH_STORE_PARAMS_FILE}"
-    assert not fsutil.exists(spark, sidecar)
+    assert sidecar.read(spark, store, sidecar.SIMHASH) is None
 
     (indir / "a.tsv").write_text(f"2\t{base} extra\n")
     metrics: list = []
@@ -980,10 +976,12 @@ def test_simhash_stream_joins_externally_built_store_without_sidecar(
     assert (2, 1) in got  # first trigger already saw the store
     # the monitored trigger recorded its baseline into a fresh sidecar
     assert len(metrics) == 1 and metrics[0]["stale"] is False
-    params = json.loads(fsutil.read_text(spark, sidecar))
+    params = sidecar.read(spark, store, sidecar.SIMHASH)
     assert (params["band_bits"], params["hash_fn"]) == (16, "xxhash64")
     assert params["baseline_cand_per_doc"] == 1.0
-    loaded = _dedup.load_simhash_band_store(spark, store)
+    loaded = sidecar.load(
+        spark, store, sidecar.SIMHASH, band_bits=16, hash_fn="xxhash64"
+    )
     assert {r["doc_id"] for r in loaded.collect()} == {1, 2}
 
 

@@ -18,11 +18,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _char_class(chars: str) -> str:
-    """A regex character class matching any of ``chars``."""
-    return "[" + "".join(re.escape(c) for c in chars) + "]"
-
-
 def token_pattern(delims: str, quotechar: str = "") -> str:
     """Regex whose successive matches are the line's tokens.
 

@@ -813,6 +813,69 @@ def _simhash_banded(
     ).select(id_col, "b.band", "b.val")
 
 
+def _band_self_pairs(banded: DataFrame, key: str, id_col: str) -> DataFrame:
+    """(id_a < id_b) pairs of pre-banded ``(id, band, key)`` rows
+    sharing a bucket — the Hamming families' band self-join."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(
+            b,
+            on=[
+                F.col("a.band") == F.col("b.band"),
+                F.col(f"a.{key}") == F.col(f"b.{key}"),
+                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+            ],
+        )
+        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
+
+
+def _store_probe(
+    banded: DataFrame,
+    store: DataFrame,
+    key: str,
+    id_col: str = "doc_id",
+    max_store_bucket_width: int | None = None,
+) -> tuple[DataFrame, DataFrame | None]:
+    """Probe pre-banded batch rows ``(id_col, band, key)`` against a
+    persisted store of the same schema: the one store join of the
+    MinHash (``key="band_hash"``), SimHash and pHash (``key="val"``)
+    and banded semantic (``key="bucket"``) families, shared by their
+    ``incremental_*`` operators and their streaming loops.
+
+    Returns ``(pairs, fenced)``: the distinct ``(new_id, stored_id)``
+    pairs sharing a bucket, ``new_id != stored_id`` (the replay
+    guard: a trigger re-probing a store that already holds its own
+    rows emits no ``(x, x)``); and, with ``max_store_bucket_width``
+    set, the distinct ``(new_id, band, key, store_width)`` hits on the
+    store buckets wider than it, which ``pairs`` leave out (``None``
+    without a fence). The width aggregation is staged, so writing both
+    outputs counts the store's buckets once."""
+    on = ["band", key]
+    nb = banded.withColumnRenamed(id_col, "new_id")
+    sb = store.withColumnRenamed(id_col, "stored_id")
+    fenced = None
+    if max_store_bucket_width is not None:
+        widths = staged(
+            store.groupBy(*on).agg(F.count(F.lit(1)).alias("store_width"))
+        )
+        wide = F.col("store_width") > max_store_bucket_width
+        sb = sb.join(widths.filter(~wide).select(*on), on=on, how="left_semi")
+        fenced = (
+            nb.join(widths.filter(wide), on=on)
+            .select("new_id", *on, "store_width")
+            .distinct()
+        )
+    pairs = (
+        nb.join(sb, on=on)
+        .filter(F.col("new_id") != F.col("stored_id"))
+        .select("new_id", "stored_id")
+        .distinct()
+    )
+    return pairs, fenced
+
+
 def simhash_band_store(
     df: DataFrame,
     text_col: str = "text",
@@ -844,24 +907,14 @@ def incremental_simhash_candidates(
     rows only. Same band family as the self-join path, so a pair is a
     candidate here iff the pooled self-join would find it. A string
     ``band_store`` is loaded with its ``sidecar.SIMHASH`` family
-    checked."""
+    checked; the join is :func:`_store_probe`."""
     if isinstance(band_store, str):
         band_store = sidecar.load(
             new_docs.sparkSession, band_store, sidecar.SIMHASH,
             band_bits=band_bits, hash_fn=hash_fn,
         )
-    nb = _simhash_banded(
-        new_docs, text_col, id_col, band_bits, hash_fn
-    ).withColumnRenamed(id_col, "new_id")
-    sb = band_store.withColumnRenamed(id_col, "stored_id")
-    return (
-        nb.join(sb, on=["band", "val"])
-        # replay guard (family-wide, r12): no (x, x) self-pairs when a
-        # batch re-probes its own partially-appended store rows
-        .filter(F.col("new_id") != F.col("stored_id"))
-        .select("new_id", "stored_id")
-        .distinct()
-    )
+    nb = _simhash_banded(new_docs, text_col, id_col, band_bits, hash_fn)
+    return _store_probe(nb, band_store, "val", id_col)[0]
 
 
 def simhash_dedup_candidates(
@@ -877,19 +930,7 @@ def simhash_dedup_candidates(
     banded = staged(
         _simhash_banded(df, text_col, id_col, band_bits, hash_fn)
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.val") == F.col("b.val"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    return _band_self_pairs(banded, "val", id_col)
 
 
 # ---- cross-split decontamination ----
@@ -1030,32 +1071,17 @@ def incremental_lsh_candidates(
     ``sidecar.LSH`` params are checked against this call's hash
     family — a mismatched family would otherwise silently yield zero
     candidates (ADVICE r8). A pre-loaded DataFrame skips the check
-    (the caller owns the family contract; prefer passing the path)."""
+    (the caller owns the family contract; prefer passing the path).
+    The join is :func:`_store_probe`."""
     if isinstance(band_store, str):
         band_store = sidecar.load(
             new_docs.sparkSession, band_store, sidecar.LSH,
             num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
         )
-    nb = lsh_band_store(
-        new_docs, text_col, id_col, num_hashes, bands, shingle_k
-    ).withColumnRenamed(id_col, "new_id")
-    sb = band_store.withColumnRenamed(id_col, "stored_id")
-    if max_store_bucket_width is not None:
-        ok = (
-            band_store.groupBy("band", "band_hash")
-            .agg(F.count(F.lit(1)).alias("_w"))
-            .filter(F.col("_w") <= max_store_bucket_width)
-            .select("band", "band_hash")
-        )
-        sb = sb.join(ok, on=["band", "band_hash"], how="left_semi")
-    return (
-        nb.join(sb, on=["band", "band_hash"])
-        # replay guard (family-wide, r12): a batch re-probing its own
-        # partially-appended store rows must not emit (x, x)
-        .filter(F.col("new_id") != F.col("stored_id"))
-        .select("new_id", "stored_id")
-        .distinct()
-    )
+    nb = lsh_band_store(new_docs, text_col, id_col, num_hashes, bands, shingle_k)
+    return _store_probe(
+        nb, band_store, "band_hash", id_col, max_store_bucket_width
+    )[0]
 
 
 def incremental_fenced_hits(
@@ -1074,25 +1100,17 @@ def incremental_fenced_hits(
     fan-out the fence exists to avoid. Route these as boilerplate /
     template matches (drop, or cluster against the bucket's
     representative) instead of pairwise near-dups. A string
-    ``band_store`` is loaded with its ``sidecar.LSH`` family checked."""
+    ``band_store`` is loaded with its ``sidecar.LSH`` family checked;
+    the hits are :func:`_store_probe`'s fenced rows."""
     if isinstance(band_store, str):
         band_store = sidecar.load(
             new_docs.sparkSession, band_store, sidecar.LSH,
             num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
         )
-    nb = lsh_band_store(
-        new_docs, text_col, id_col, num_hashes, bands, shingle_k
-    ).withColumnRenamed(id_col, "new_id")
-    wide = (
-        band_store.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("store_width"))
-        .filter(F.col("store_width") > max_store_bucket_width)
-    )
-    return (
-        nb.join(wide, on=["band", "band_hash"])
-        .select("new_id", "band", "band_hash", "store_width")
-        .distinct()
-    )
+    nb = lsh_band_store(new_docs, text_col, id_col, num_hashes, bands, shingle_k)
+    return _store_probe(
+        nb, band_store, "band_hash", id_col, max_store_bucket_width
+    )[1]
 
 
 def incremental_near_dups_confirmed(

@@ -142,28 +142,6 @@ def _bucket_model(
     )
 
 
-def dsir_bucket_llr(
-    raw: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = DEFAULT_BUCKETS,
-    bigrams: bool = True,
-) -> DataFrame:
-    """The model: per-bucket micro-nat log-likelihood ratio
-    ``llr_micro = floor(1e6 · (ln p̂_target(b) − ln p̂_raw(b)) + 0.5)``
-    with add-one smoothing over ``n_buckets`` (p̂(b) = (c_b + 1) /
-    (total + n_buckets)). Output is one row per raw-observed bucket —
-    ≤ n_buckets rows, the always-broadcastable side of the scoring
-    join. Totals are two scalars to the driver (the IVF-centroid
-    bounded-traffic precedent) taken off STAGED bucket counts, so
-    each corpus is gram-scanned once per model build (ADVICE r15)."""
-    model, _, _ = _bucket_model(
-        raw, target, text_col, id_col, n_buckets, bigrams
-    )
-    return model.select("bucket", "llr_micro")
-
-
 def dsir_log_weights(
     raw: DataFrame,
     target: DataFrame,

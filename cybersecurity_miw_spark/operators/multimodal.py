@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from cybersecurity_miw_spark import sidecar
+from cybersecurity_miw_spark.operators.dedup import _band_self_pairs, _store_probe
 
 MEDIA_SCHEMA = StructType(
     [
@@ -270,22 +271,7 @@ def phash_dedup_candidates(
             .select("band", "val")
         )
         banded = banded.join(ok, on=["band", "val"], how="left_semi")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.val") == F.col("b.val"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
+    return _band_self_pairs(banded, "val", id_col)
 
 
 def oversized_phash_buckets(
@@ -341,24 +327,16 @@ def incremental_phash_candidates(
     through its 4 int rows per asset — payload bytes are never
     rescanned. Same band family as the self-join path, so a pair is
     a candidate here iff the pooled self-join would find it
-    (golden-pinned); (x, x) self-pairs are guarded for the family's
-    replay contract. A string ``band_store`` loads with its
-    ``sidecar.PHASH`` family checked."""
+    (golden-pinned). A string ``band_store`` loads with its
+    ``sidecar.PHASH`` family checked; the join is
+    ``dedup._store_probe``."""
     if isinstance(band_store, str):
         band_store = sidecar.load(
             new_media.sparkSession, band_store, sidecar.PHASH,
             bits=bits, band_bits=band_bits,
         )
-    nb = _phash_banded(
-        new_media, bits, band_bits, payload_col, id_col
-    ).withColumnRenamed(id_col, "new_id")
-    sb = band_store.withColumnRenamed(id_col, "stored_id")
-    return (
-        nb.join(sb, on=["band", "val"])
-        .filter(F.col("new_id") != F.col("stored_id"))
-        .select("new_id", "stored_id")
-        .distinct()
-    )
+    nb = _phash_banded(new_media, bits, band_bits, payload_col, id_col)
+    return _store_probe(nb, band_store, "val", id_col)[0]
 
 
 def _fake_resize(payload: bytes, w: int, h: int) -> bytes:

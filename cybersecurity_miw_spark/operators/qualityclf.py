@@ -40,8 +40,6 @@ dsir.py store standard, feature-hashed instead of gram-hashed.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -667,9 +665,3 @@ def rebuild_quality_model(
         lr=float(params["lr"]), l2=float(params["l2"]),
         text_col=text_col, id_col=id_col,
     )
-
-
-def sigmoid_of_micro(margin_micro: int) -> float:
-    """Driver-side helper: P(target) for a stored micro-logit —
-    reporting sugar, never used in engine paths."""
-    return 1.0 / (1.0 + math.exp(-margin_micro / MICRO))

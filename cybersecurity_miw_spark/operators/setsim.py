@@ -164,25 +164,6 @@ def ppjoin_pairs(
     return _verify_pairs(sh, cand, id_col, _t_pm(threshold))
 
 
-def ppjoin_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.5,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """The candidate (id_a, id_b) pairs surviving the prefix
-    equi-join + size-ratio + positional filters — the exact set
-    :func:`ppjoin_pairs` verifies. Exposed so filter-effectiveness
-    measurements (candidate volume vs true pairs; suffix-filter
-    decisions — SCALE.md r11) read the REAL candidate stage rather
-    than a reimplementation that could drift."""
-    sh = staged(
-        with_shingles(df, text_col, shingle_k, "_sh", keep=(id_col,))
-    )
-    return _ppjoin_candidates_from_shingled(sh, id_col, _t_pm(threshold))
-
-
 def _ppjoin_candidates_from_shingled(
     sh: DataFrame, id_col: str, t_pm: int
 ) -> DataFrame:
@@ -1144,7 +1125,10 @@ def rebuild_prefix_store(
     (maintain.publish_table's temp-dir + rename dance; run in the
     same single-writer window compaction wants anyway). The stale
     sidecar is replaced, not carried — a rebuilt store with the old
-    baseline would re-trip immediately. Returns
+    baseline would re-trip immediately. The baseline is measured on
+    the checkpointed rebuild before the swap and the fresh sidecar is
+    staged inside it, so a concurrent load never takes the new rows
+    for a legacy store. Returns
     {'rows', 'baseline_cand_per_doc'}; correctness is unchanged by
     construction (any frozen order is exact), only candidate volume
     resets to the fresh-order level."""
@@ -1156,23 +1140,20 @@ def rebuild_prefix_store(
     store = prefix_store(
         corpus, freq, text_col=text_col, id_col=id_col,
         threshold=threshold, shingle_k=shingle_k,
+    ).localCheckpoint(eager=True)
+    baseline = measure_cand_per_doc(
+        corpus, store, freq, text_col=text_col, id_col=id_col,
+        threshold=threshold, shingle_k=shingle_k,
     )
-    rows = publish_table(spark, store, store_dir, keep_sidecars=False)
+    rows = publish_table(
+        spark, store, store_dir, keep_sidecars=False,
+        sidecar_texts=sidecar.staged(
+            sidecar.PREFIX, **_prefix_family(threshold, shingle_k),
+            baseline_cand_per_doc=baseline or None,
+        ),
+    )
     if freq_dir is not None:
         publish_table(spark, freq, freq_dir, keep_sidecars=False)
-    baseline = measure_cand_per_doc(
-        corpus,
-        spark.read.parquet(store_dir),
-        freq,
-        text_col=text_col,
-        id_col=id_col,
-        threshold=threshold,
-        shingle_k=shingle_k,
-    )
-    write_prefix_store_params(
-        spark, store_dir, threshold, shingle_k,
-        baseline_cand_per_doc=baseline or None,
-    )
     return {"rows": rows, "baseline_cand_per_doc": baseline}
 
 
@@ -1189,7 +1170,8 @@ def rebuild_containment_store(
 ) -> dict:
     """Containment twin of :func:`rebuild_prefix_store`: fresh
     container-side order, full-token index rebuilt and published
-    atomically, sidecar re-recorded. The baseline needs a PROBE
+    atomically with its fresh sidecar staged inside the swap. The
+    baseline needs a PROBE
     corpus (eval batches probe a containment store; the containers
     probing themselves is not the operating shape) — pass a
     representative batch as ``baseline_probe``, or omit it to leave
@@ -1202,23 +1184,20 @@ def rebuild_containment_store(
     store = containment_store(
         containers, freq, text_col=text_col, id_col=id_col,
         shingle_k=shingle_k,
-    )
-    rows = publish_table(spark, store, store_dir, keep_sidecars=False)
-    if freq_dir is not None:
-        publish_table(spark, freq, freq_dir, keep_sidecars=False)
+    ).localCheckpoint(eager=True)
     baseline = None
     if baseline_probe is not None:
         baseline = measure_containment_cand_per_doc(
-            baseline_probe,
-            spark.read.parquet(store_dir),
-            freq,
-            text_col=text_col,
-            id_col=id_col,
-            threshold=baseline_threshold,
-            shingle_k=shingle_k,
+            baseline_probe, store, freq, text_col=text_col, id_col=id_col,
+            threshold=baseline_threshold, shingle_k=shingle_k,
         )
-    sidecar.write(
-        spark, store_dir, sidecar.CONTAINMENT, shingle_k=shingle_k,
-        baseline_cand_per_doc=baseline or None,
+    rows = publish_table(
+        spark, store, store_dir, keep_sidecars=False,
+        sidecar_texts=sidecar.staged(
+            sidecar.CONTAINMENT, shingle_k=shingle_k,
+            baseline_cand_per_doc=baseline or None,
+        ),
     )
+    if freq_dir is not None:
+        publish_table(spark, freq, freq_dir, keep_sidecars=False)
     return {"rows": rows, "baseline_cand_per_doc": baseline}

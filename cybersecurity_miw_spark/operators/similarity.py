@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cybersecurity_miw_spark import sidecar
-from cybersecurity_miw_spark.operators.dedup import staged
+from cybersecurity_miw_spark.operators.dedup import _store_probe, staged
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -549,31 +549,41 @@ def incremental_semantic_pairs(
     batch self-join path (:func:`cosine_near_dup_lsh`), so a pair is
     found here iff the pooled self-join restricted to batch × history
     would find it (golden-pinned). A string ``store`` loads with its
-    ``sidecar.SEMANTIC`` family checked.
-    ``new_id != stored_id`` pairs only: a foreachBatch replay that
-    re-joins a batch against its own partially-appended store rows
-    (at-least-once sinks append before the checkpoint commits) must
-    not emit (x, x) self-pairs."""
+    ``sidecar.SEMANTIC`` family checked; the join is
+    :func:`_semantic_probe`."""
     if isinstance(store, str):
         store = sidecar.load(
             new_vecs.sparkSession, store, sidecar.SEMANTIC,
             dim=dim, n_planes=n_planes,
         )
-    nb = embedding_bucket_store(
-        new_vecs, dim, n_planes, vec_col, id_col
-    ).select(
-        F.col(id_col).alias("new_id"),
-        "bucket",
-        F.col(vec_col).cast("array<double>").alias("_vn"),
-    )
-    nb = nb.select("new_id", "bucket", "_vn", norm(F.col("_vn")).alias("_nn"))
-    sb = store.select(
-        F.col(id_col).alias("stored_id"),
-        "bucket",
-        F.col(vec_col).cast("array<double>").alias("_vs"),
-    ).select(
-        "stored_id", "bucket", "_vs", norm(F.col("_vs")).alias("_ns")
-    )
+    nb = embedding_bucket_store(new_vecs, dim, n_planes, vec_col, id_col)
+    return _semantic_probe(nb, store, threshold, vec_col, id_col)
+
+
+def _semantic_probe(
+    bucketed: DataFrame,
+    store: DataFrame,
+    threshold: float,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Probe pre-bucketed batch rows (:func:`embedding_bucket_store`
+    schema) against the persisted semantic store: the family's one
+    store join, shared by :func:`incremental_semantic_pairs` and the
+    streaming loop. Distinct (new_id, stored_id, cos_sim) at cosine ≥
+    ``threshold``, ``new_id != stored_id``: a replayed trigger that
+    re-probes a store already holding its own rows emits no
+    ``(x, x)``."""
+
+    def side(rows: DataFrame, out_id: str, v: str, n: str) -> DataFrame:
+        return rows.select(
+            F.col(id_col).alias(out_id),
+            "bucket",
+            F.col(vec_col).cast("array<double>").alias(v),
+        ).select(out_id, "bucket", v, norm(F.col(v)).alias(n))
+
+    nb = side(bucketed, "new_id", "_vn", "_nn")
+    sb = side(store, "stored_id", "_vs", "_ns")
     cos = dot(F.col("_vn"), F.col("_vs")) / (F.col("_nn") * F.col("_ns"))
     return (
         nb.join(sb, on="bucket")
@@ -2445,10 +2455,11 @@ def incremental_semantic_pairs_banded(
     fetched for candidates only. Returns
     (new_id, stored_id, cos_sim) ≥ threshold; equals the pooled
     ``cosine_near_dup_lsh(n_bands)`` restricted to batch × history
-    (golden-pinned). Self-pairs guarded (replay safety); the
-    standard ``metrics``/baseline staleness report attaches to the
-    candidate stage. A string ``index_store`` loads with its
-    ``sidecar.SEMANTIC_BANDED`` family checked."""
+    (golden-pinned). The candidate join is ``dedup._store_probe`` on
+    the ``bucket`` key (self-pairs guarded); the standard
+    ``metrics``/baseline staleness report attaches to it. A string
+    ``index_store`` loads with its ``sidecar.SEMANTIC_BANDED`` family
+    checked."""
     from cybersecurity_miw_spark.operators import setsim
 
     if isinstance(index_store, str):
@@ -2456,16 +2467,8 @@ def incremental_semantic_pairs_banded(
             new_vecs.sparkSession, index_store, sidecar.SEMANTIC_BANDED,
             dim=dim, n_planes=n_planes, n_bands=n_bands,
         )
-    nb = embedding_band_index(
-        new_vecs, dim, n_planes, n_bands, vec_col, id_col
-    ).withColumnRenamed(id_col, "new_id")
-    sb = index_store.withColumnRenamed(id_col, "stored_id")
-    cand = (
-        nb.join(sb, on=["band", "bucket"])
-        .filter(F.col("new_id") != F.col("stored_id"))
-        .select("new_id", "stored_id")
-        .distinct()
-    )
+    nb = embedding_band_index(new_vecs, dim, n_planes, n_bands, vec_col, id_col)
+    cand = _store_probe(nb, index_store, "bucket", id_col)[0]
     if metrics is not None:
         cand = cand.localCheckpoint(eager=True)
         metrics.append(

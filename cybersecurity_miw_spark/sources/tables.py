@@ -206,7 +206,3 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return app_memo(
         spark.sparkContext.applicationId, ("load_events", path), build
     )
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

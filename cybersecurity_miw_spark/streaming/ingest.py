@@ -24,14 +24,18 @@ the streaming twin of ``dedup_against_store``, golden-checked against
 it by running the same files through the batch path.
 
 :func:`streaming_near_dup_flags` is the near-dup sibling: batch LSH
-bands joined against the persisted band store, candidate pairs
+bands probed against the persisted band store, candidate pairs
 appended to a flags sink, the batch's bands appended to the store.
 
 Every loop here is a per-trigger body plugged into
 :func:`~cybersecurity_miw_spark.streaming.loop.micro_batch_loop`, which
 owns the file reader, the per-trigger cache scope and the checkpointed
 writer; loops of one family share one body and pass in only the
-family's operator functions.
+family's operator functions. The appending band-store loops (MinHash,
+semantic, SimHash, pHash) share :func:`_store_flags`, and every store
+join is the family operator's own probe, so batch and stream cannot
+drift apart. The replay contract of every store-backed loop is stated
+once, in docs/MONITORING.md ("Replay").
 """
 
 from __future__ import annotations
@@ -234,6 +238,97 @@ def streaming_dedup_ingest(
     )
 
 
+def _band0_docs(banded: DataFrame) -> int:
+    """Batch doc count of a band family's rows: every family emits
+    exactly one band-0 row per doc (empty texts and payloads
+    included), so no distinct shuffle is needed."""
+    return banded.where(F.col("band") == 0).count()
+
+
+def _store_flags(
+    spark: SparkSession,
+    input_dir: str,
+    checkpoint_dir: str,
+    flags_dir: str,
+    store_dir: str,
+    available_now: bool,
+    max_files_per_trigger: int | None,
+    metrics: list | None,
+    staleness_factor: float | None,
+    on_stale: str,
+    *,
+    fam: sidecar.Family,
+    family: dict,
+    rows,
+    within,
+    probe,
+    n_docs,
+    loop: str,
+    fenced_dir: str | None = None,
+    **source,
+) -> StreamingQuery:
+    """The appending store-flags loop of the MinHash, semantic, SimHash
+    and pHash families. Each family supplies its ``fam`` sidecar with
+    the ``family`` keys it records and four functions: ``rows(batch)``
+    (the store rows of the batch), ``within(rows)`` (the within-batch
+    ``(id_a, id_b[, score])`` self-join), ``probe(rows, store)`` (its
+    operator's store probe, returning the store pairs and the fenced
+    hits or ``None``) and ``n_docs(rows)``; ``source`` selects the
+    input (forwarded to :func:`micro_batch_loop`).
+
+    Per trigger, once each: band the batch (checkpointed), pair it
+    within itself, read the store by data presence (a store built
+    without its sidecar is probed from the first trigger), probe it,
+    write the flags (fenced hits to ``fenced_dir`` when given), count
+    the store pairs with an Observation on the probe, run
+    :func:`_monitor_store`, append the same rows to the store and
+    merge the family into its sidecar. Flags are
+    ``(new_id, stored_id[, score])``: within-batch pairs name the
+    larger id as ``new_id``."""
+    from pyspark.sql import Observation
+
+    metrics = _stale_gate(metrics, on_stale)
+    sidecar.check(spark, store_dir, fam, **family)
+
+    def body(batch_df: DataFrame, batch_id: int) -> None:
+        sess = batch_df.sparkSession
+        banded = rows(batch_df).localCheckpoint(eager=True)
+        pairs = within(banded)
+        flags = pairs.select(
+            F.col("id_b").alias("new_id"),
+            F.col("id_a").alias("stored_id"),
+            *[c for c in pairs.columns if c not in ("id_a", "id_b")],
+        )
+        store = _read_store_if_present(sess, store_dir)
+        obs = None
+        if store is not None:
+            cross, fenced = probe(banded, store)
+            if metrics is not None:
+                obs = Observation()
+                cross = cross.observe(
+                    obs, F.count(F.lit(1)).alias("n_store_pairs")
+                )
+            if fenced is not None and fenced_dir:
+                fenced.write.mode("append").parquet(fenced_dir)
+            flags = cross.unionByName(flags).distinct()
+        flags.write.mode("append").parquet(flags_dir)
+        if obs is not None:
+            _monitor_store(
+                metrics, obs.get["n_store_pairs"], n_docs(banded),
+                sess, store_dir, fam, family,
+                staleness_factor, on_stale, loop,
+            )
+        banded.write.mode("append").parquet(store_dir)
+        sidecar.merge(sess, store_dir, fam, **family)
+
+    return micro_batch_loop(
+        spark, input_dir, checkpoint_dir, body,
+        max_files_per_trigger=max_files_per_trigger,
+        available_now=available_now,
+        **source,
+    )
+
+
 def streaming_near_dup_flags(
     spark: SparkSession,
     input_dir: str,
@@ -252,163 +347,71 @@ def streaming_near_dup_flags(
     on_stale: str = "report",
 ) -> StreamingQuery:
     """The near-dup half of the continuous ingest loop: each
-    micro-batch computes its LSH bands, joins them against the
-    PERSISTED band store (history = index rows, never text), appends
-    the resulting (new_id, stored_id) candidate pairs to
-    ``flags_dir``, and appends its own bands to the store — so later
-    batches see this batch as history.
+    micro-batch computes its LSH bands ONCE, probes the PERSISTED
+    band store with them (history = index rows, never text; the probe
+    is :func:`~cybersecurity_miw_spark.operators.dedup.
+    incremental_lsh_candidates`' own), appends the (new_id, stored_id)
+    candidate pairs to ``flags_dir``, and appends its bands to the
+    store — so later batches see this batch as history.
 
-    Within-batch near-dups surface too: the batch's bands are in the
-    join's build side only after the store append, so batch-internal
-    pairs are found by unioning a batch self-join — cheaper than
-    waiting a trigger, and it keeps "every pair is flagged exactly
-    once, when its second member arrives" as the contract. Downstream
-    decides what to do with flags (drop, cluster via
+    Within-batch near-dups surface in the same trigger through the
+    batch's own bucket rosters (``dedup.pairs_from_bands``), so every
+    pair is flagged exactly once, when its second member arrives.
+    Downstream decides what to do with flags (drop, cluster via
     dup_clusters, or human review); flagging and deletion are
     deliberately decoupled, matching the batch operators.
 
     ``max_store_bucket_width`` fences history mega-templates out of
-    the per-trigger join (W pair rows per matching batch doc, EVERY
+    the store probe (W pair rows per matching batch doc, EVERY
     trigger, otherwise — the one cost that grows with history skew,
     not batch size); batch docs hitting a fenced bucket are routed to
     ``fenced_dir`` as (new_id, band, band_hash, store_width) template
     matches when that sink is given.
 
-    Per trigger the batch is banded ONCE (the signature computation is
-    the dominant narrow stage): the checkpointed bands feed the store
-    append, the within-batch self-join, the store join, and the
-    fenced-hit report. A ``sidecar.LSH`` sidecar written inside
-    the store records (num_hashes, bands, shingle_k); a restart with
-    different parameters raises instead of silently joining two
-    incompatible hash families (old-family band hashes never match
-    new-family ones — candidates would quietly drop to zero). Sidecar
-    I/O goes through the Hadoop FS API (fsutil), so the guard works
-    for hdfs:// and s3a:// stores, not just local paths (ADVICE r8);
-    the same sidecar guards the batch path
-    (:func:`~cybersecurity_miw_spark.operators.dedup.
-    incremental_lsh_candidates` given a store path).
+    A ``sidecar.LSH`` sidecar inside the store records (num_hashes,
+    bands, shingle_k); a restart with different parameters raises
+    instead of silently joining two incompatible hash families
+    (candidates would quietly drop to zero). The same sidecar guards
+    the batch path given a store path.
 
-    Pass a list as ``metrics`` to monitor store-candidate volume
-    (the degradation channel the width fence bounds per-bucket but
-    nothing watched in aggregate): each store-joined trigger appends
-    a ``setsim.staleness_report`` dict — store candidates per batch
-    doc vs the creation-time baseline, ``stale`` above
-    ``staleness_factor`` × baseline (default
-    setsim.STALENESS_DEFAULT_FACTOR). The baseline is recorded
-    automatically into the ``sidecar.LSH`` sidecar on the FIRST
-    store-joined trigger (or pre-record one with
-    ``sidecar.write(..., baseline_cand_per_doc=...)``).
-    The candidate count rides the Observation API on the store-join
-    subtree, so monitoring adds no extra job — the count is collected
-    while the flags sink writes.
+    Pass a list as ``metrics`` to monitor store-candidate volume: each
+    store-probed trigger appends a ``setsim.staleness_report`` dict —
+    store candidates per batch doc vs the baseline recorded into the
+    sidecar on the first store-probed trigger with candidates,
+    ``stale`` above ``staleness_factor`` × baseline (default
+    setsim.STALENESS_DEFAULT_FACTOR). The count rides an Observation
+    on the probe, so it is collected while the flags sink writes.
 
-    ``on_stale`` wires the monitor to a POLICY (VERDICT r14 #3):
-    ``"report"`` (default) only appends the report dict;
-    ``"raise"`` activates the monitor even without a ``metrics`` list
-    and fails the trigger with :class:`StaleStoreError` when it
-    grades stale — the query dies BEFORE the checkpoint commits, the
-    operator runs the documented one-call rebuild offline, and a
-    restart replays the tripped batch. Auto-rebuild mid-stream is
-    deliberately not offered: frozen hash families / token orders /
-    quantizers are load-bearing, so failing fast is the only honest
-    in-stream action (docs/MONITORING.md)."""
-    from cybersecurity_miw_spark.operators.dedup import (
-        DEFAULT_BANDS,
-        DEFAULT_NUM_HASHES,
-        lsh_band_store,
-        pairs_from_bands,
-    )
+    ``on_stale`` wires the monitor to a policy: ``"report"``
+    (default) only appends the report dict; ``"raise"`` activates the
+    monitor even without a ``metrics`` list and fails the trigger with
+    :class:`StaleStoreError` when it grades stale, before the
+    checkpoint commits — rebuild offline, restart, and the tripped
+    batch replays (docs/MONITORING.md).
 
-    if num_hashes is None:
-        num_hashes = DEFAULT_NUM_HASHES
-    if bands is None:
-        bands = DEFAULT_BANDS
+    Replay: the store append runs before the checkpoint commits, so a
+    recovered trigger may append duplicate flag and store rows; it
+    never flags ``(x, x)`` (docs/MONITORING.md, "Replay")."""
+    from cybersecurity_miw_spark.operators import dedup
 
+    num_hashes = dedup.DEFAULT_NUM_HASHES if num_hashes is None else num_hashes
+    bands = dedup.DEFAULT_BANDS if bands is None else bands
     family = {"num_hashes": num_hashes, "bands": bands, "shingle_k": shingle_k}
-    sidecar.check(spark, band_store_dir, sidecar.LSH, **family)
-    metrics = _stale_gate(metrics, on_stale)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        bands_new = lsh_band_store(
-            batch_df, num_hashes=num_hashes, bands=bands, shingle_k=shingle_k
-        ).localCheckpoint(eager=True)
-        store = _read_store_if_present(sess, band_store_dir)
-        within = pairs_from_bands(bands_new).select(
-            F.col("id_b").alias("new_id"), F.col("id_a").alias("stored_id")
-        )
-        obs = None
-        if store is not None:
-            sb = store.withColumnRenamed("doc_id", "stored_id")
-            widths = None
-            if max_store_bucket_width is not None:
-                # ONE history-index width aggregation per trigger
-                # serves both the guard and the fenced-hit report
-                widths = (
-                    store.groupBy("band", "band_hash")
-                    .agg(F.count(F.lit(1)).alias("_w"))
-                    .localCheckpoint(eager=True)
-                )
-                ok = widths.filter(
-                    F.col("_w") <= max_store_bucket_width
-                ).select("band", "band_hash")
-                sb = sb.join(ok, on=["band", "band_hash"], how="left_semi")
-            nb = bands_new.withColumnRenamed("doc_id", "new_id")
-            cross = (
-                nb.join(sb, on=["band", "band_hash"])
-                .select("new_id", "stored_id")
-                .distinct()
-            )
-            if metrics is not None:
-                # Observation on the store-join subtree: the count is
-                # collected as a side effect of the flags write — no
-                # second pass over the join
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                cross = cross.observe(
-                    obs, F.count(F.lit(1)).alias("n_store_candidates")
-                )
-            flags = cross.unionByName(within).distinct()
-            if widths is not None and fenced_dir:
-                wide = widths.filter(
-                    F.col("_w") > max_store_bucket_width
-                ).select(
-                    "band", "band_hash",
-                    F.col("_w").alias("store_width"),
-                )
-                (
-                    nb.join(wide, on=["band", "band_hash"])
-                    .select("new_id", "band", "band_hash", "store_width")
-                    .distinct()
-                    .write.mode("append")
-                    .parquet(fenced_dir)
-                )
-        else:
-            flags = within
-        flags.write.mode("append").parquet(flags_dir)
-        if obs is not None:
-            # batch doc count = band rows // bands. lsh_bands emits
-            # EXACTLY `bands` struct rows per doc — empty/sub-shingle
-            # texts still get the constant md5('') band hashes — so
-            # this equals the distinct-doc count for unique doc_ids
-            # without the distinct's extra shuffle per trigger
-            # (ADVICE r13 reverting the r12 distinct form, which
-            # changed cost but not the unit).
-            n_docs = bands_new.count() // max(bands, 1)
-            n_cand = obs.get["n_store_candidates"]
-            _monitor_store(
-                metrics, n_cand, n_docs,
-                sess, band_store_dir, sidecar.LSH, family,
-                staleness_factor, on_stale, "streaming_near_dup_flags",
-            )
-        bands_new.write.mode("append").parquet(band_store_dir)
-        sidecar.merge(sess, band_store_dir, sidecar.LSH, **family)
-
-    return micro_batch_loop(
-        spark, input_dir, checkpoint_dir, body, parse=parse_doc_lines,
-        max_files_per_trigger=max_files_per_trigger,
-        available_now=available_now,
+    return _store_flags(
+        spark, input_dir, checkpoint_dir, flags_dir, band_store_dir,
+        available_now, max_files_per_trigger, metrics, staleness_factor,
+        on_stale,
+        fam=sidecar.LSH,
+        family=family,
+        rows=lambda batch: dedup.lsh_band_store(batch, **family),
+        within=dedup.pairs_from_bands,
+        probe=lambda banded, store: dedup._store_probe(
+            banded, store, "band_hash", "doc_id", max_store_bucket_width
+        ),
+        n_docs=_band0_docs,
+        loop="streaming_near_dup_flags",
+        fenced_dir=fenced_dir,
+        parse=parse_doc_lines,
     )
 
 
@@ -428,109 +431,54 @@ def streaming_semantic_flags(
     on_stale: str = "report",
 ) -> StreamingQuery:
     """The SEMANTIC half of the continuous ingest loop — the
-    embedding sibling of :func:`streaming_near_dup_flags`, completing
-    the streaming side of the store-backed quadriad: each micro-batch
-    embeds its docs (hashed_embedding; swap in a real encoder
-    upstream by streaming (id, vector) rows instead), joins its
-    hyperplane buckets against the PERSISTED embedding bucket store,
-    appends (new_id, stored_id, cos_sim) pairs at cosine ≥ threshold
-    to ``flags_dir``, and appends its own (id, bucket, vector) rows
-    to the store — later batches see this batch as history.
+    embedding sibling of :func:`streaming_near_dup_flags`: each
+    micro-batch embeds its docs (hashed_embedding; swap in a real
+    encoder upstream by streaming (id, vector) rows instead) and
+    buckets them ONCE, probes the PERSISTED embedding bucket store
+    with those rows (the probe of
+    :func:`~cybersecurity_miw_spark.operators.similarity.
+    incremental_semantic_pairs`), appends (new_id, stored_id, cos_sim)
+    pairs at cosine ≥ threshold to ``flags_dir``, and appends the same
+    (id, bucket, vector) rows to the store — later batches see this
+    batch as history. Within-batch semantic pairs surface in the same
+    trigger (batch self-join through :func:`cosine_near_dup_lsh`). A
+    ``sidecar.SEMANTIC`` sidecar records (dim, n_planes): restarting
+    with a different plane family raises instead of silently joining
+    incompatible buckets to zero candidates.
 
-    Within-batch semantic pairs surface in the same trigger (batch
-    self-join through :func:`cosine_near_dup_lsh`), keeping the
-    "every pair is flagged exactly once, when its second member
-    arrives" contract. A ``sidecar.SEMANTIC`` sidecar records
-    (dim, n_planes): restarting with a different plane family raises
-    instead of silently joining incompatible buckets to zero
-    candidates.
-
-    100 TB shape: per trigger, the batch is embedded ONCE
-    (localCheckpoint), the store join is bucket-pruned (partition the
-    store by ``bucket``), and history participates through index rows
-    only — the vector rides in the store so the exact-cosine confirm
-    never rescans source text.
-
-    Replay caveat (same as the other ingest loops): the store append
-    runs before the streaming checkpoint commits, so a foreachBatch
-    retry re-joins the batch against its own partially-written store
-    rows — duplicate store rows and duplicate flag pairs are possible
-    under at-least-once recovery (dedupe downstream on
-    (new_id, stored_id)); self-pairs are guarded out inside
-    :func:`incremental_semantic_pairs`.
-
-    Pass a list as ``metrics`` for the family's ingest monitor: each
-    store-joined trigger appends a ``setsim.staleness_report`` over
-    store-pair rows per batch doc (Observation on the store-join
-    subtree — counted while the flags sink writes), baseline
-    auto-recorded into that sidecar on the first
-    store-joined trigger with pairs. A hot hyperplane bucket (the
-    occupancy channel ``suggested_planes`` bounds by schedule)
-    inflates this ratio; ``stale`` above ``staleness_factor`` ×
-    baseline (default setsim.STALENESS_DEFAULT_FACTOR). ``on_stale``:
-    the family policy hook — see :func:`streaming_near_dup_flags`
-    ("raise" fails the trigger with :class:`StaleStoreError` before
-    its checkpoint commits; rebuild offline, restart, replay)."""
-    from cybersecurity_miw_spark.operators.similarity import (
-        cosine_near_dup_lsh,
-        embedding_bucket_store,
-        incremental_semantic_pairs,
-    )
+    ``metrics`` attaches the family's ingest monitor over store-pair
+    rows per batch doc (a hot hyperplane bucket — the occupancy
+    channel ``suggested_planes`` bounds by schedule — inflates it);
+    ``metrics``, ``staleness_factor`` and ``on_stale`` work as in
+    :func:`streaming_near_dup_flags`."""
+    from cybersecurity_miw_spark.operators import similarity
     from cybersecurity_miw_spark.operators.textstats import hashed_embedding
 
-    metrics = _stale_gate(metrics, on_stale)
     family = {"dim": dim, "n_planes": n_planes}
-    sidecar.check(spark, vec_store_dir, sidecar.SEMANTIC, **family)
 
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        vecs = (
-            hashed_embedding(batch_df, dim=dim)
-            .select(F.col("doc_id").alias("vec_id"), "embedding")
-            .localCheckpoint(eager=True)
+    def rows(batch: DataFrame) -> DataFrame:
+        vecs = hashed_embedding(batch, dim=dim).select(
+            F.col("doc_id").alias("vec_id"), "embedding"
         )
-        bucketed = embedding_bucket_store(
-            vecs, dim, n_planes
-        ).localCheckpoint(eager=True)
-        within = cosine_near_dup_lsh(
-            vecs, threshold, dim, n_planes
-        ).select(
-            F.col("id_b").alias("new_id"),
-            F.col("id_a").alias("stored_id"),
-            "cos_sim",
-        )
-        store = _read_store_if_present(sess, vec_store_dir)
-        obs = None
-        if store is not None:
-            cross = incremental_semantic_pairs(
-                vecs, store, threshold, dim, n_planes
-            )
-            if metrics is not None:
-                from pyspark.sql import Observation
+        return similarity.embedding_bucket_store(vecs, dim, n_planes)
 
-                obs = Observation()
-                cross = cross.observe(
-                    obs, F.count(F.lit(1)).alias("n_store_pairs")
-                )
-            flags = cross.unionByName(within).distinct()
-        else:
-            flags = within
-        flags.write.mode("append").parquet(flags_dir)
-        if obs is not None:
-            n_docs = vecs.count()  # cached checkpoint
-            n_pairs = obs.get["n_store_pairs"]
-            _monitor_store(
-                metrics, n_pairs, n_docs,
-                sess, vec_store_dir, sidecar.SEMANTIC, family,
-                staleness_factor, on_stale, "streaming_semantic_flags",
-            )
-        bucketed.write.mode("append").parquet(vec_store_dir)
-        sidecar.merge(sess, vec_store_dir, sidecar.SEMANTIC, **family)
-
-    return micro_batch_loop(
-        spark, input_dir, checkpoint_dir, body, parse=parse_doc_lines,
-        max_files_per_trigger=max_files_per_trigger,
-        available_now=available_now,
+    return _store_flags(
+        spark, input_dir, checkpoint_dir, flags_dir, vec_store_dir,
+        available_now, max_files_per_trigger, metrics, staleness_factor,
+        on_stale,
+        fam=sidecar.SEMANTIC,
+        family=family,
+        rows=rows,
+        within=lambda banded: similarity.cosine_near_dup_lsh(
+            banded, threshold, dim, n_planes
+        ),
+        probe=lambda banded, store: (
+            similarity._semantic_probe(banded, store, threshold),
+            None,
+        ),
+        n_docs=DataFrame.count,
+        loop="streaming_semantic_flags",
+        parse=parse_doc_lines,
     )
 
 
@@ -580,12 +528,7 @@ def streaming_containment_flags(
     ``sidecar.write(..., baseline_cand_per_doc=
     measure_containment_cand_per_doc(...))``);
     ``on_stale``: the family policy hook — see
-    :func:`streaming_near_dup_flags`.
-
-    Exactly-once note: the flags append is the ONLY sink, so a
-    foreachBatch replay can duplicate flag rows (dedupe downstream on
-    the pair key) but never lose one; there is no second sink to
-    torn-write against."""
+    :func:`streaming_near_dup_flags`."""
     from cybersecurity_miw_spark.operators.setsim import (
         STALENESS_DEFAULT_FACTOR,
         incremental_containment_pairs,
@@ -678,13 +621,7 @@ def streaming_setsim_flags(
     needs no cross-batch order agreement for a self-join), keeping
     the "every pair flagged exactly once, when its second member
     arrives" family contract; drained flags equal the pooled
-    ``ppjoin_pairs`` over all ingested docs (golden).
-
-    Replay caveat (the family's standard at-least-once note): the
-    store/history appends run before the checkpoint commits, so a
-    foreachBatch retry can duplicate flag rows and store rows —
-    dedupe downstream on the pair key; (x, x) self-pairs are guarded
-    out inside the candidate join itself."""
+    ``ppjoin_pairs`` over all ingested docs (golden)."""
     from cybersecurity_miw_spark.operators.setsim import (
         STALENESS_DEFAULT_FACTOR,
         _prefix_family,
@@ -767,82 +704,6 @@ def streaming_setsim_flags(
     )
 
 
-def _hamming_band_flags(
-    spark: SparkSession,
-    input_dir: str,
-    checkpoint_dir: str,
-    flags_dir: str,
-    band_store_dir: str,
-    available_now: bool,
-    max_files_per_trigger: int | None,
-    metrics: list | None,
-    staleness_factor: float | None,
-    on_stale: str,
-    *,
-    fam: sidecar.Family,
-    family: dict,
-    opts: dict,
-    candidates,
-    store_candidates,
-    band_rows,
-    loop: str,
-    **source,
-) -> StreamingQuery:
-    """The Hamming-band flags loop shared by the SimHash (text) and
-    perceptual-hash (media) store families. Each family supplies its
-    ``fam`` sidecar with the ``family`` keys it records, and its
-    operators, all called with ``opts``: ``candidates(batch)`` (the
-    within-batch band self-join), ``store_candidates(batch, store)``
-    (the join against the persisted index) and ``band_rows(batch)``
-    (the rows the batch appends to it); ``source`` selects the input
-    (forwarded to :func:`micro_batch_loop`)."""
-    metrics = _stale_gate(metrics, on_stale)
-    sidecar.check(spark, band_store_dir, fam, **family)
-
-    def body(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=True)
-        within = candidates(batch_df, **opts).select(
-            F.col("id_b").alias("new_id"),
-            F.col("id_a").alias("stored_id"),
-        )
-        # detect the store by DATA presence (the minhash-loop probe),
-        # not the params sidecar: a store built externally without
-        # its sidecar must still be joined from the first trigger, or
-        # cross-run pairs are silently missed (ADVICE r14)
-        store = _read_store_if_present(sess, band_store_dir)
-        n_cand = None
-        if store is not None:
-            cross = store_candidates(batch_df, store, **opts)
-            if metrics is not None:
-                # candidates ARE the flags (no verify stage): one
-                # checkpoint serves both the count and the union
-                cross = cross.localCheckpoint(eager=True)
-                n_cand = cross.count()
-            flags = cross.unionByName(within).distinct()
-        else:
-            flags = within
-        flags.write.mode("append").parquet(flags_dir)
-        if n_cand is not None:
-            n_docs = batch_df.count()  # cached checkpoint
-            _monitor_store(
-                metrics, n_cand, n_docs,
-                sess, band_store_dir, fam, family,
-                staleness_factor, on_stale, loop,
-            )
-        band_rows(batch_df, **opts).write.mode("append").parquet(
-            band_store_dir
-        )
-        sidecar.merge(sess, band_store_dir, fam, **family)
-
-    return micro_batch_loop(
-        spark, input_dir, checkpoint_dir, body,
-        max_files_per_trigger=max_files_per_trigger,
-        available_now=available_now,
-        **source,
-    )
-
-
 def streaming_simhash_flags(
     spark: SparkSession,
     input_dir: str,
@@ -857,44 +718,34 @@ def streaming_simhash_flags(
     staleness_factor: float | None = None,
     on_stale: str = "report",
 ) -> StreamingQuery:
-    """SimHash near-dup flags over a continuous ingest — the last
-    batch store family to get its streaming loop (exact/MinHash/
-    semantic/exact-setsim/containment already have theirs): each
-    micro-batch computes its Hamming-band rows, joins them against
-    the PERSISTED SimHash index, appends (new_id, stored_id)
-    candidate pairs to ``flags_dir``, and appends its own band rows
+    """SimHash near-dup flags over a continuous ingest: each
+    micro-batch computes its Hamming-band rows ONCE, probes the
+    PERSISTED SimHash index with them (the probe of
+    :func:`~cybersecurity_miw_spark.operators.dedup.
+    incremental_simhash_candidates`), appends (new_id, stored_id)
+    candidate pairs to ``flags_dir``, and appends the same band rows
     to the store. Within-batch candidates surface in the same trigger
-    (batch band self-join), keeping the "every pair flagged exactly
-    once, when its second member arrives" contract; the
+    (the band self-join of ``dedup.simhash_dedup_candidates``); the
     ``sidecar.SIMHASH`` sidecar fails a restart with a different
     (band_bits, hash_fn) family fast. SimHash trades MinHash's
     shingle-set Jaccard for bit-level cosine-ish similarity at 4-5
     small int rows per doc — the cheapest of the store families per
     stored row, the usual choice when index size dominates.
-
-    ``metrics`` attaches the family's ingest monitor: store
-    candidates per batch doc vs a baseline auto-recorded on the
-    first store-joined trigger with candidates (stale above
-    ``staleness_factor`` × it); ``on_stale``: the family policy hook
-    — see :func:`streaming_near_dup_flags`. Replay caveat as the
-    other loops: appends precede the checkpoint commit, so
-    at-least-once recovery can duplicate flag/store rows (never
-    lose); self-pairs are guarded in
-    :func:`~cybersecurity_miw_spark.operators.dedup.
-    incremental_simhash_candidates`'s join."""
+    ``metrics``, ``staleness_factor`` and ``on_stale`` work as in
+    :func:`streaming_near_dup_flags`."""
     from cybersecurity_miw_spark.operators import dedup
 
     family = {"band_bits": band_bits, "hash_fn": hash_fn}
-    return _hamming_band_flags(
+    return _store_flags(
         spark, input_dir, checkpoint_dir, flags_dir, band_store_dir,
         available_now, max_files_per_trigger, metrics, staleness_factor,
         on_stale,
         fam=sidecar.SIMHASH,
         family=family,
-        opts=family,
-        candidates=dedup.simhash_dedup_candidates,
-        store_candidates=dedup.incremental_simhash_candidates,
-        band_rows=dedup.simhash_band_store,
+        rows=lambda batch: dedup.simhash_band_store(batch, **family),
+        within=lambda banded: dedup._band_self_pairs(banded, "val", "doc_id"),
+        probe=lambda banded, store: dedup._store_probe(banded, store, "val"),
+        n_docs=_band0_docs,
         loop="streaming_simhash_flags",
         parse=parse_doc_lines,
     )
@@ -917,48 +768,41 @@ def streaming_phash_flags(
     on_stale: str = "report",
 ) -> StreamingQuery:
     """Perceptual-hash (aHash) near-dup flags over a continuous BINARY
-    MEDIA ingest — the phash store family's streaming twin, completing
-    the house contract every other band store satisfies (exact /
-    MinHash / SimHash / semantic / setsim / containment,
-    VERDICT r13 #3). Each micro-batch of ``(media_id, payload)``
-    parquet fingerprints its payloads (pure JVM expressions —
-    ``operators/multimodal.py:with_phash``), joins its Hamming-band
-    rows against the PERSISTED phash index, appends
+    MEDIA ingest — the phash store family's streaming twin. Each
+    micro-batch of ``(media_id, payload)`` parquet fingerprints its
+    payloads (pure JVM expressions —
+    ``operators/multimodal.py:with_phash``) and bands them ONCE,
+    probes the PERSISTED phash index with those rows (the probe of
+    ``multimodal.incremental_phash_candidates``), appends
     ``(new_id, stored_id)`` candidate pairs to ``flags_dir``, and
-    appends its own 4-int-rows-per-asset band rows to the store —
+    appends the same 4-int-rows-per-asset band rows to the store —
     payload bytes never enter the store and history is never
     rescanned. Within-batch near-dups surface in the same trigger
-    (batch band self-join), keeping the "every pair flagged exactly
-    once, when its second member arrives" contract; the
-    ``sidecar.PHASH`` sidecar fails a restart with a different
-    (bits, band_bits) family fast, BEFORE the stream starts.
-
-    ``metrics`` attaches the family's ingest monitor: store candidates
-    per batch asset vs a baseline auto-recorded on the first
-    store-joined trigger with candidates (stale above
-    ``staleness_factor`` × it) — a re-encode burst of a stored
-    template (the media analog of the text template burst) trips it;
-    ``on_stale``: the family policy hook — see
-    :func:`streaming_near_dup_flags`. Replay caveat as the other
-    loops: appends precede the checkpoint
-    commit, so at-least-once recovery can duplicate flag/store rows
-    (never lose); (x, x) self-pairs are guarded in
-    ``incremental_phash_candidates``'s join."""
+    (batch band self-join); the ``sidecar.PHASH`` sidecar fails a
+    restart with a different (bits, band_bits) family fast, BEFORE
+    the stream starts. ``metrics``, ``staleness_factor`` and
+    ``on_stale`` work as in :func:`streaming_near_dup_flags` (a
+    re-encode burst of a stored template trips the monitor)."""
+    from cybersecurity_miw_spark.operators import dedup
     from cybersecurity_miw_spark.operators import multimodal as mm
 
     bits = mm.PHASH_DEFAULT_BITS if bits is None else bits
     band_bits = mm.PHASH_DEFAULT_BAND_BITS if band_bits is None else band_bits
     family = {"bits": bits, "band_bits": band_bits}
-    return _hamming_band_flags(
+    return _store_flags(
         spark, input_dir, checkpoint_dir, flags_dir, band_store_dir,
         available_now, max_files_per_trigger, metrics, staleness_factor,
         on_stale,
         fam=sidecar.PHASH,
         family=family,
-        opts={**family, "payload_col": payload_col, "id_col": id_col},
-        candidates=mm.phash_dedup_candidates,
-        store_candidates=mm.incremental_phash_candidates,
-        band_rows=mm.phash_band_store,
+        rows=lambda batch: mm.phash_band_store(
+            batch, **family, payload_col=payload_col, id_col=id_col
+        ),
+        within=lambda banded: dedup._band_self_pairs(banded, "val", id_col),
+        probe=lambda banded, store: dedup._store_probe(
+            banded, store, "val", id_col
+        ),
+        n_docs=_band0_docs,
         loop="streaming_phash_flags",
         schema=f"{id_col} LONG, {payload_col} BINARY",
         not_null=(id_col,),
@@ -1147,9 +991,7 @@ def streaming_dsir_scores(
     scores are appended and before the checkpoint commits — offline
     :func:`~cybersecurity_miw_spark.operators.dsir.rebuild_dsir_model`
     then a restart replays the tripped batch with fresh weights (the
-    family's remediation contract, docs/MONITORING.md). Replay caveat
-    as the other loops: at-least-once appends can duplicate score
-    rows after a crash, never lose them."""
+    family's remediation contract, docs/MONITORING.md)."""
     from cybersecurity_miw_spark.operators import dsir
 
     return _frozen_model_scores(
@@ -1196,9 +1038,7 @@ def streaming_clf_scores(
     its scores are appended and before the checkpoint commits, so
     offline :func:`~cybersecurity_miw_spark.operators.qualityclf.
     rebuild_quality_model` then a restart replays the tripped batch
-    against the fresh decision boundary (docs/MONITORING.md). Replay
-    caveat as the other loops: at-least-once appends can duplicate
-    score rows after a crash, never lose them."""
+    against the fresh decision boundary (docs/MONITORING.md)."""
     from cybersecurity_miw_spark.operators import qualityclf
 
     return _frozen_model_scores(
@@ -1245,9 +1085,7 @@ def streaming_lm_scores(
     scores are appended and before the checkpoint commits, so
     offline :func:`~cybersecurity_miw_spark.operators.ngramlm.
     rebuild_lm_model` then a restart replays the tripped batch
-    against the fresh model (docs/MONITORING.md). Replay caveat as
-    the other loops: at-least-once appends can duplicate score rows
-    after a crash, never lose them."""
+    against the fresh model (docs/MONITORING.md)."""
     from cybersecurity_miw_spark.operators import ngramlm
 
     return _frozen_model_scores(

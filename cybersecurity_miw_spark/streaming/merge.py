@@ -72,15 +72,3 @@ def stream_logs(
         available_now=available_now,
         output_mode="complete",
     )
-
-
-def merge_results_batch(
-    spark: SparkSession, dfs: list[DataFrame], ldef: LogDef
-) -> DataFrame:
-    """Batch ``-merge_results``: N input DataFrames of lines → ONE
-    aggregation. Union is free (no shuffle); the single groupBy
-    replaces the reference's cross-file state re-emission."""
-    df = dfs[0]
-    for d in dfs[1:]:
-        df = df.unionByName(d)
-    return aggregate(parse(clean_lines(df, ldef), ldef), ldef)

@@ -833,6 +833,84 @@ def test_rebuild_prefix_store_restores_baseline_after_drift(spark, tmp_path):
     assert pairs_fresh == pairs_stale  # correctness order-independent
 
 
+def _record_swapped_sidecar(monkeypatch, store_dir, family):
+    """Wrap ``fsutil.rename`` to record the ``family`` sidecar that sits
+    in the staged directory at the moment it is renamed over
+    ``store_dir``."""
+    from cybersecurity_miw_spark import fsutil
+
+    swapped_in = []
+    real_rename = fsutil.rename
+
+    def rename(spark_, src, dst):
+        if dst.rstrip("/") == store_dir.rstrip("/"):
+            swapped_in.append(sidecar.read(spark_, src, family))
+        real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fsutil, "rename", rename)
+    return swapped_in
+
+
+def test_rebuild_prefix_store_stages_sidecar_inside_the_swap(
+    spark, tmp_path, monkeypatch
+):
+    """The rebuilt store's sidecar, baseline included, must already sit
+    in the staged directory when it is renamed over the live one: a
+    sidecar written after the swap lets a concurrent load_prefix_store
+    take the new rows for a legacy store."""
+    rows = [(i, _doc(list(range(i % 5, 10 + i % 5)))) for i in range(8)]
+    corpus = spark.createDataFrame(rows, ["doc_id", "text"])
+    store_dir = str(tmp_path / "ps")
+    freq = setsim.token_freq_table(corpus)
+    setsim.prefix_store(corpus, freq, threshold=0.5).write.parquet(store_dir)
+    setsim.write_prefix_store_params(
+        spark, store_dir, 0.5, baseline_cand_per_doc=99.0
+    )
+    swapped_in = _record_swapped_sidecar(monkeypatch, store_dir, sidecar.PREFIX)
+    info = setsim.rebuild_prefix_store(
+        spark, corpus, store_dir, freq_dir=str(tmp_path / "freq"),
+        threshold=0.5,
+    )
+    assert 0 < info["baseline_cand_per_doc"] < 99.0
+    want = {
+        **setsim._prefix_family(0.5, 3),
+        "baseline_cand_per_doc": info["baseline_cand_per_doc"],
+    }
+    assert swapped_in == [want]
+    assert sidecar.read(spark, store_dir, sidecar.PREFIX) == want
+
+
+def test_rebuild_containment_store_stages_sidecar_inside_the_swap(
+    spark, tmp_path, monkeypatch
+):
+    """The containment twin of the prefix-store swap test above."""
+    rows = [(i, _doc(list(range(i % 3, 14 + i % 3)))) for i in range(12)]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    containers = docs.where(F.col("doc_id") % 2 != 0)
+    probe = docs.where(F.col("doc_id") % 2 == 0)
+    store_dir = str(tmp_path / "cs")
+    freq0 = setsim.token_freq_table(containers)
+    setsim.containment_store(containers, freq0).write.parquet(store_dir)
+    sidecar.write(
+        spark, store_dir, sidecar.CONTAINMENT, shingle_k=3,
+        baseline_cand_per_doc=99.0,
+    )
+    swapped_in = _record_swapped_sidecar(
+        monkeypatch, store_dir, sidecar.CONTAINMENT
+    )
+    info = setsim.rebuild_containment_store(
+        spark, containers, store_dir,
+        baseline_probe=probe, baseline_threshold=0.6,
+    )
+    assert 0 < info["baseline_cand_per_doc"] < 99.0
+    want = {
+        "shingle_k": 3,
+        "baseline_cand_per_doc": info["baseline_cand_per_doc"],
+    }
+    assert swapped_in == [want]
+    assert sidecar.read(spark, store_dir, sidecar.CONTAINMENT) == want
+
+
 def test_rebuild_containment_store_swaps_and_rebaselines(spark, tmp_path):
     rows = [(i, _doc(list(range(i % 3, 14 + i % 3)))) for i in range(12)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])

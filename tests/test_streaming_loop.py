@@ -64,3 +64,27 @@ def test_streaming_loops_share_one_skeleton(needle):
         if needle in line
     ]
     assert hits == ["loop.py"], hits
+
+
+@pytest.mark.parametrize("join_key", ['["band", "band_hash"]', '["band", "val"]'])
+def test_store_joins_live_in_the_family_operators(join_key):
+    """No loop under streaming/ joins batch rows to a band store
+    itself: every store join lives in its family's operator probe
+    (``dedup._store_probe``), which carries the replay guard, so a
+    loop cannot drift from the batch path."""
+    pkg = Path(streaming_pkg.__file__).parent
+    hits = [
+        path.name
+        for path in sorted(pkg.glob("*.py"))
+        if join_key in path.read_text(encoding="utf-8")
+    ]
+    assert hits == [], hits
+
+
+def test_band_store_loops_share_one_store_flags_body():
+    """The Hamming loops run on the same store-flags body as the
+    MinHash and semantic loops; their own body is gone."""
+    from cybersecurity_miw_spark.streaming import ingest
+
+    assert not hasattr(ingest, "_hamming_band_flags")
+    assert hasattr(ingest, "_store_flags")

@@ -49,7 +49,6 @@ class MiwJob:
         appname: str = "",
         store_content: bool = False,
         compressed: bool = False,
-        union_count_strategy: str = "two-phase",
         merge_results: bool = True,
         union_limit: int | None = None,
     ) -> None:
@@ -72,7 +71,6 @@ class MiwJob:
         # (log_record.cc:351-357); the Spark mapping is sink-codec
         # compression — gzip for the line sinks, snappy for columnar
         self.compressed = compressed
-        self.union_count_strategy = union_count_strategy
         # reference default is one result set per file; -merge_results
         # collapses them (miw/job.cc:134-173). Per-file mode groups on
         # an extra input_file_name() key — single Spark job either way.
@@ -178,11 +176,7 @@ class MiwJob:
         rows, ldef = discover_kv_fields(rows, self.ldef)
         self.result_ldef = ldef
         return aggregate(
-            rows,
-            ldef,
-            self.union_count_strategy,
-            self._extra_keys,
-            union_limit=self.union_limit,
+            rows, ldef, self._extra_keys, union_limit=self.union_limit
         )
 
     # -- sinks --

@@ -19,18 +19,18 @@ Mapping (SURVEY §2.4):
                   (log_record.cc:177 copies by value); we implement
                   the intended semantics)
 * A6 mean       → avg         (reference keeps (sum, n) and divides at
-                  output, log_record.cc:627-632)
+                  output, log_record.cc:627-632); a summary also
+                  keeps the hidden count ``_n_<f>`` so summaries merge
 * A7 variance   → var_samp with n=1 → 0.0 (reference formula
                   (Σx² − (Σx)²/n)/max(1, n−1) discards Bessel at n=1,
-                  log_record.cc:633-641)
+                  log_record.cc:633-641); a summary also keeps the
+                  hidden ``_n_<f>`` and mean ``_mean_<f>``
 * A8 union      → sort_array(collect_set) (reference keeps insertion
                   order, which is nondeterministic under parallel
                   merge; we sort for a stable result)
 * A9 union_count→ per-group value histogram map<value,count>
                   (log_record.cc:100-124) — tagged rows aggregated in
                   two levels beside every other aggregate, one scan
-                  (scale path), or a single-groupBy expression (the
-                  streaming merge loop)
 * A10 ratio     → post-aggregation projection num/denom, 0 when denom
                   is 0 (log_record.cc:747-823); operands are other
                   aggregated fields or the literal "logs"
@@ -39,6 +39,12 @@ Mapping (SURVEY §2.4):
                   record's value, which is scheduling-dependent; min is
                   the deterministic stand-in
 * O1 ordering   → orderBy(logs desc, id asc) (miw/mr_job.h:212-225)
+
+:func:`aggregate` is :func:`finalize` over :func:`summarize`. A
+summary is mergeable: :func:`merge_summaries` folds two of them per
+key, field by field — the reference's ``log_record::merge`` — which is
+how the streaming merge loop (streaming/merge.py) carries the summary
+from one file to the next.
 """
 
 from __future__ import annotations
@@ -74,8 +80,12 @@ def id_column(ldef: LogDef) -> Column:
 def simple_agg_exprs(ldef: LogDef, skip_union: bool = False) -> list[Column]:
     """All single-pass aggregate expressions (everything except
     union_count, which needs a second aggregation level, and ratio,
-    which is a post-projection). ``skip_union`` leaves A8 union fields
-    to the bounded two-phase path (:func:`union_limited_values`).
+    which is a post-projection). A mean or variance field also gets
+    its hidden merge partials, ``_n_<f>`` (and ``_mean_<f>`` for a
+    variance): :func:`finalize` drops them, so the optimizer prunes
+    them from a batch plan, and :func:`merge_summaries` reads them.
+    ``skip_union`` leaves A8 union fields to the bounded two-phase path
+    (:func:`union_limited_values`).
 
     Memoized per application (``derive.expr_memo``): the Columns are
     immutable aliased expressions, rebuilt identically on every compile
@@ -119,8 +129,11 @@ def _build_simple_agg_exprs(
             exprs.append(F.max(c).alias(f.name))
         elif agg == "mean":
             exprs.append(F.avg(c).alias(f.name))
+            exprs.append(F.count(c).alias(f"_n_{f.name}"))
         elif agg == "variance":
             exprs.append(F.coalesce(F.var_samp(c), F.lit(0.0)).alias(f.name))
+            exprs.append(F.count(c).alias(f"_n_{f.name}"))
+            exprs.append(F.avg(c).alias(f"_mean_{f.name}"))
         elif agg == "union":
             # string/date/url unions dedup via the _unos cache; int/
             # float/bool unions APPEND without dedup
@@ -140,42 +153,21 @@ def _build_simple_agg_exprs(
     return exprs
 
 
-def union_count_expr(field_name: str) -> Column:
-    """Single-shuffle union_count: build the histogram from a
-    collect_list with array expressions. O(n·distinct) per group, and
-    the whole group's values sit in one buffer — only for groups known
-    small; the default plan is :func:`_tagged_aggregate`. Null values
-    are skipped (collect_list drops them)."""
-    lst = F.collect_list(qcol(field_name))
-    return F.map_from_entries(
-        F.transform(
-            F.array_distinct(lst),
-            lambda x: F.struct(
-                x.alias("key"),
-                F.size(F.filter(lst, lambda y: y == x)).cast("long").alias("value"),
-            ),
-        )
-    ).alias(f"{field_name}_counts")
-
-
-def aggregate(
+def summarize(
     df: DataFrame,
     ldef: LogDef,
-    union_count_strategy: str = "two-phase",
     extra_keys: tuple[str, ...] = (),
     union_limit: int | None = None,
 ) -> DataFrame:
-    """parsed rows → one row per group with every aggregate, the ``id``
-    composite key, ``logs``, and ratio post-projections.
+    """parsed rows → one mergeable summary row per group: every
+    aggregate except the ratio post-projections, plus the hidden
+    partials of the mean and variance fields (:func:`finalize` turns
+    a summary into the result; :func:`merge_summaries` folds two).
 
     One pass over ``df``: every aggregate, union_count histograms
     included, comes out of the same scan and tokenize. Without
     union_count fields that is one groupBy; with them the rows are
     tagged and aggregated in two levels (:func:`_tagged_aggregate`).
-    ``union_count_strategy="expr"`` instead builds each histogram
-    inside the one groupBy (:func:`union_count_expr`, O(n·distinct) per
-    group) — for a caller that cannot chain two aggregations, the
-    streaming merge loop.
 
     Rows that carry the raw line (``_raw``, from
     ``parse(keep_raw=True)``) also get ``content``, the list of the
@@ -195,8 +187,6 @@ def aggregate(
     aggregation state stays O(union_limit) per group; that bounded path
     is a second branch over ``df``, joined back on the keys.
     """
-    if union_count_strategy not in ("two-phase", "expr"):
-        raise ValueError(f"unknown union_count_strategy {union_count_strategy!r}")
     keys = key_columns(ldef)
     all_keys = keys + list(extra_keys)
     ucount_fields = [
@@ -208,18 +198,15 @@ def aggregate(
         else []
     )
 
-    gcols = [qcol(k) for k in all_keys]
     aggs = simple_agg_exprs(ldef, skip_union=bool(union_fields))
     if RAW_COL in df.columns:
         aggs.append(F.collect_list(RAW_COL).alias(CONTENT_COL))
-    if ucount_fields and union_count_strategy == "two-phase":
+    if ucount_fields:
         out = _tagged_aggregate(df, all_keys, aggs, [f.name for f in ucount_fields])
         if not all_keys:
             out = _fill_empty_global(out, ldef)
     else:
-        if union_count_strategy == "expr":
-            aggs += [union_count_expr(f.name) for f in ucount_fields]
-        out = df.groupBy(*gcols).agg(*aggs)
+        out = df.groupBy(*[qcol(k) for k in all_keys]).agg(*aggs)
 
     for f in union_fields:
         vals = union_limited_values(
@@ -234,9 +221,14 @@ def aggregate(
         else:
             # bcast-bound: keyless format = exactly 1 global union row
             out = out.crossJoin(F.broadcast(vals))
+    return out
 
-    # ratio post-projection (A10): operands are aggregated field names
-    # or the literal "logs"
+
+def finalize(summary: DataFrame, ldef: LogDef) -> DataFrame:
+    """A summary → the result: the ratio post-projections (A10:
+    operands are aggregated field names or the literal "logs"), the
+    ``id`` composite key, and the hidden partials dropped."""
+    out = summary
     for f in ldef.fields:
         if f.aggregation != "ratio":
             continue
@@ -246,8 +238,109 @@ def aggregate(
             f.name,
             F.when(den == 0, F.lit(0.0)).otherwise(num / den),
         )
+    hidden = [
+        f"{prefix}{f.name}"
+        for f in ldef.fields
+        if f.aggregation in ("mean", "variance")
+        for prefix in ("_n_", "_mean_")
+    ]
+    return out.withColumn(ID_COL, id_column(ldef)).drop(*hidden)
 
-    return out.withColumn(ID_COL, id_column(ldef))
+
+def aggregate(
+    df: DataFrame,
+    ldef: LogDef,
+    extra_keys: tuple[str, ...] = (),
+    union_limit: int | None = None,
+) -> DataFrame:
+    """parsed rows → one row per group with every aggregate, the ``id``
+    composite key, ``logs``, and ratio post-projections:
+    ``finalize(summarize(...))`` (see :func:`summarize` for the
+    options)."""
+    return finalize(summarize(df, ldef, extra_keys, union_limit), ldef)
+
+
+def merge_summaries(prev: DataFrame, cur: DataFrame, ldef: LogDef) -> DataFrame:
+    """Fold two :func:`summarize` outputs of the same format into one
+    summary row per key — the reference's per-field
+    ``log_record::merge`` (miw/log_record.cc:251-324) over its re-emitted
+    previous reduce output (miw/job.cc:197-226). Counts, sums and
+    filter-contains add; max and first-value (min) re-apply; unions
+    re-union (set unions dedup, int/float/bool unions append);
+    histograms add per value; mean and variance fold their
+    ``(n, mean, m2)`` partials with Chan's pairwise formula. Ratios and
+    ``id`` are :func:`finalize`'s. Covers what the streaming merge loop
+    summarizes: no stored content, union cap or per-file key."""
+
+    def fold(values: Column, merge) -> Column:
+        # seeded with the first value: a literal empty map has no key type
+        return F.aggregate(F.slice(values, 2, F.size(values)), values[0], merge)
+
+    def add_counts(a: Column, b: Column) -> Column:
+        return F.map_zip_with(
+            a, b, lambda _, x, y: F.coalesce(x, F.lit(0)) + F.coalesce(y, F.lit(0))
+        )
+
+    def chan(a: Column, b: Column) -> Column:
+        # an empty part (n = 0, mean null) is the identity
+        n = a["n"] + b["n"]
+        d = b["mean"] - a["mean"]
+        both = F.struct(
+            n.alias("n"),
+            (a["mean"] + d * b["n"] / n).alias("mean"),
+            (a["m2"] + b["m2"] + d * d * a["n"] * b["n"] / n).alias("m2"),
+        )
+        return F.when(a["n"] == 0, b).when(b["n"] == 0, a).otherwise(both)
+
+    merged: list[Column] = [F.sum(LOGS_COL).alias(LOGS_COL)]
+    for f in ldef.fields:
+        agg, c = f.aggregation, qcol(f.name)
+        if f.key or agg == "ratio" or f.preprocessing in ("evtxcsv", "evtxcsv2"):
+            continue
+        if f.is_filter_contain or agg == "sum":
+            merged.append(F.sum(c).alias(f.name))
+        elif agg == "count":
+            merged.append(F.sum(qcol(f"{f.name}_count")).alias(f"{f.name}_count"))
+        elif agg == "max":
+            merged.append(F.max(c).alias(f.name))
+        elif agg == "union":
+            vals = F.flatten(F.collect_list(c))
+            if f.type not in ("int", "float", "bool"):
+                vals = F.array_distinct(vals)
+            merged.append(F.sort_array(vals).alias(f.name))
+        elif agg == "union_count":
+            name = f"{f.name}_counts"
+            counts = fold(F.collect_list(qcol(name)), add_counts)
+            merged.append(
+                F.map_from_entries(F.sort_array(F.map_entries(counts))).alias(name)
+            )
+        elif agg in ("mean", "variance"):
+            n = qcol(f"_n_{f.name}")
+            if agg == "mean":
+                mean, m2 = c, F.lit(0.0)
+            else:
+                mean, m2 = qcol(f"_mean_{f.name}"), c * (n - 1)
+            # cast: the fold's seed and result must agree on
+            # nullability, and the folded fields are nullable
+            part = F.struct(n.alias("n"), mean.alias("mean"), m2.alias("m2"))
+            m = fold(
+                F.collect_list(part.cast("struct<n:bigint,mean:double,m2:double>")),
+                chan,
+            )
+            merged.append(m["n"].alias(f"_n_{f.name}"))
+            if agg == "mean":
+                merged.append(m["mean"].alias(f.name))
+            else:
+                var = F.when(m["n"] > 1, m["m2"] / (m["n"] - 1)).otherwise(0.0)
+                merged += [var.alias(f.name), m["mean"].alias(f"_mean_{f.name}")]
+        else:
+            merged.append(F.min(c).alias(f.name))
+    return (
+        prev.unionByName(cur)
+        .groupBy(*[qcol(k) for k in key_columns(ldef)])
+        .agg(*merged)
+        .select(*[qcol(c) for c in cur.columns])
+    )
 
 
 def _tagged_aggregate(
@@ -269,7 +362,7 @@ def _tagged_aggregate(
     * Level 2: groupBy(keys) reads the plain aggregates off the one
       tag-0 row and collects the tag-i (value, count) pairs into each
       sorted map, skipping a null value (it cannot be a map key) as
-      :func:`union_count_expr` and the A8 unions do.
+      the A8 unions do.
 
     Both groupBys shuffle only pre-aggregated rows, and a hot group
     spreads over its distinct values at level 1.
@@ -319,16 +412,19 @@ def _tagged_aggregate(
 def _fill_empty_global(out: DataFrame, ldef: LogDef) -> DataFrame:
     """A keyless (global) roll-up yields its one row even over no input
     rows, where every ``first()`` reads null: give that row the values
-    a one-pass aggregate has over no rows — 0 for ``logs`` and counts,
-    0.0 for variance, empty arrays and maps."""
+    a one-pass aggregate has over no rows — 0 for ``logs`` and counts
+    (the hidden ``_n_<f>`` included), 0.0 for variance, empty arrays
+    and maps."""
     zero: dict[str, Column] = {LOGS_COL: F.lit(0)}
     for f in ldef.fields:
         if f.is_filter_contain:
             continue
         if f.aggregation == "count":
             zero[f"{f.name}_count"] = F.lit(0)
-        elif f.aggregation == "variance":
-            zero[f.name] = F.lit(0.0)
+        elif f.aggregation in ("mean", "variance"):
+            zero[f"_n_{f.name}"] = F.lit(0)
+            if f.aggregation == "variance":
+                zero[f.name] = F.lit(0.0)
     for sf in out.schema.fields:
         if isinstance(sf.dataType, ArrayType):
             zero[sf.name] = F.array().cast(sf.dataType)

@@ -182,7 +182,6 @@ def discover_kv_fields(
 def compile_pipeline(
     df: DataFrame,
     ldef: LogDef,
-    union_count_strategy: str = "two-phase",
     expand_kv: bool = True,
 ) -> DataFrame:
     """Full pipeline: lines → grouped/aggregated result (unordered;
@@ -190,14 +189,13 @@ def compile_pipeline(
     fields get their payload keys expanded to real columns first (the
     extended LogDef is needed for output parity — retrieve it via
     :func:`compile_pipeline_ex` when the format may extend)."""
-    out, _ = compile_pipeline_ex(df, ldef, union_count_strategy, expand_kv)
+    out, _ = compile_pipeline_ex(df, ldef, expand_kv)
     return out
 
 
 def compile_pipeline_ex(
     df: DataFrame,
     ldef: LogDef,
-    union_count_strategy: str = "two-phase",
     expand_kv: bool = True,
 ) -> tuple[DataFrame, LogDef]:
     """Like :func:`compile_pipeline` but also returns the (possibly
@@ -205,4 +203,4 @@ def compile_pipeline_ex(
     rows = parse(df, ldef)
     if expand_kv:
         rows, ldef = discover_kv_fields(rows, ldef)
-    return aggregate(rows, ldef, union_count_strategy), ldef
+    return aggregate(rows, ldef), ldef

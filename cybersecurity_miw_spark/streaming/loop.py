@@ -94,8 +94,12 @@ def micro_batch_loop(
     Source: ``input_dir`` read as text lines, or as parquet under
     ``schema`` when one is given; ``parse`` then maps the raw frame to
     the loop's streaming input (a line parser, or a parser plus a
-    streaming aggregate/stateful operator), and rows with a NULL in any
-    ``not_null`` column are dropped.
+    stateful operator, whose sink mode ``output_mode`` names), and rows
+    with a NULL in any ``not_null`` column are dropped. A loop that
+    carries a summary across triggers without Spark state (the log
+    summary of ``streaming.merge.stream_logs``) parses lines only and
+    keeps its summary versioned by batch id, so a replayed trigger
+    reads the same previous version again.
 
     Each trigger runs ``body`` inside its own cache-release scope, so
     the intermediates the body's operators pin are unpersisted when the

@@ -649,3 +649,31 @@ def test_union_count_job_scans_its_input_once(spark, store_content):
     assert "Join" not in plan
     assert "BroadcastExchange" not in plan
     assert plan.count("Exchange") <= 2
+
+
+@pytest.mark.parametrize("with_histogram", [False, True])
+def test_moment_merge_partials_pruned_from_batch_plan(spark, with_histogram):
+    """A mean or variance summary carries hidden merge partials
+    (``_n_<f>``, ``_mean_<f>``) for the streaming merge; the batch
+    result drops them, and the optimizer must prune their aggregates,
+    so the batch plan is the one it was before they existed."""
+    from cybersecurity_miw_spark.job import MiwJob
+
+    fields = [
+        f for f in _PROXY_HIST_FORMAT["fields"]
+        if with_histogram or f.get("aggregation") != "union_count"
+    ] + [
+        {"name": "bytes_mean", "pos": 6, "type": "int", "aggregation": "mean"},
+        {"name": "bytes_var", "pos": 6, "type": "int",
+         "aggregation": "variance"},
+    ]
+    path = os.path.join(os.path.dirname(__file__), "fixtures", "web_proxy.log")
+    df = MiwJob({**_PROXY_HIST_FORMAT, "fields": fields}, files=[path]).result(
+        spark
+    )
+    assert {"bytes_mean", "bytes_var"} <= set(df.columns)
+    qe = df._jdf.queryExecution()
+    assert "_n_bytes_var" in qe.analyzed().toString()
+    plan = qe.optimizedPlan().toString()
+    assert "_n_" not in plan
+    assert "_mean_" not in plan

@@ -2,9 +2,11 @@
 histograms, plain aggregates and stored content come out of one tagged
 two-level aggregation (operators/aggregate.py:_tagged_aggregate).
 
-Each case runs the batch path against the single-groupBy expression
-path (``union_count_strategy="expr"``) and against a pure-Python
-aggregation of the same generated lines.
+Each case runs the batch path against a pure-Python aggregation of the
+same generated lines and, where the streaming merge loop can express
+the case, against ``stream_logs`` landing the lines as three files,
+one trigger each (every trigger merges its summary into the stored one,
+operators/aggregate.py:merge_summaries).
 """
 
 from __future__ import annotations
@@ -17,6 +19,8 @@ from collections import Counter, defaultdict
 import pytest
 
 from cybersecurity_miw_spark.job import MiwJob
+from cybersecurity_miw_spark.plans.logdef import LogDef
+from cybersecurity_miw_spark.streaming.merge import stream_logs
 
 KEYS = ["alpha", "beta", "gamma", "delta"]
 STATUS = ["ok", "err", "error_x", "fine"]
@@ -113,12 +117,28 @@ def _rows(df) -> dict:
     return out
 
 
-def _both(spark, fmt: dict, **kw) -> tuple[dict, dict]:
-    """(batch rows, expr rows) for one job."""
-    return tuple(
-        _rows(MiwJob(fmt, union_count_strategy=s, **kw).result(spark))
-        for s in ("two-phase", "expr")
-    )
+def _batch(spark, fmt: dict, **kw) -> dict:
+    return _rows(MiwJob(fmt, **kw).result(spark))
+
+
+def _streamed(spark, tmp_path, fmt: dict, lines: list[str]) -> dict:
+    """The snapshot after landing ``lines`` as three files, one
+    ``stream_logs`` trigger each."""
+    indir, out = tmp_path / "in", str(tmp_path / "snapshot")
+    indir.mkdir()
+    cuts = [0, len(lines) // 3, 2 * len(lines) // 3, len(lines)]
+    for i in range(3):
+        part = lines[cuts[i]:cuts[i + 1]]
+        (indir / f"part{i}.log").write_text("".join(ln + "\n" for ln in part))
+        stream_logs(
+            spark, str(indir), LogDef.from_json(fmt), str(tmp_path / "ckpt"), out
+        ).awaitTermination(120)
+    return _rows(spark.read.parquet(out))
+
+
+def _both(spark, tmp_path, fmt: dict, lines: list[str]) -> tuple[dict, dict]:
+    """(batch rows, streamed rows) for one format over ``lines``."""
+    return _batch(spark, fmt, lines=lines), _streamed(spark, tmp_path, fmt, lines)
 
 
 def _assert_matches(got: dict, want: dict) -> None:
@@ -137,18 +157,19 @@ def _assert_same(a: dict, b: dict) -> None:
     _assert_matches(b, a)
 
 
-def test_every_aggregation_matches_expr_and_truth(spark):
-    batch, expr = _both(spark, _fmt([KEY] + FIELDS), lines=LINES)
-    _assert_same(batch, expr)
+def test_every_aggregation_matches_stream_and_truth(spark, tmp_path):
+    batch, streamed = _both(spark, tmp_path, _fmt([KEY] + FIELDS), LINES)
+    _assert_same(batch, streamed)
     _assert_matches(batch, _truth(LINES))
     # each histogram keeps its own key type
-    assert all(isinstance(k, int) for r in batch.values() for k in r["n_counts"])
-    assert all(isinstance(k, str) for r in batch.values() for k in r["s_counts"])
+    for rows in (batch, streamed):
+        assert all(isinstance(k, int) for r in rows.values() for k in r["n_counts"])
+        assert all(isinstance(k, str) for r in rows.values() for k in r["s_counts"])
 
 
-def test_keyless_format_is_one_global_row(spark):
-    batch, expr = _both(spark, _fmt(FIELDS), lines=LINES)
-    _assert_same(batch, expr)
+def test_keyless_format_is_one_global_row(spark, tmp_path):
+    batch, streamed = _both(spark, tmp_path, _fmt(FIELDS), LINES)
+    _assert_same(batch, streamed)
     assert list(batch) == [""]
     _assert_matches(batch, _truth(LINES, keyed=False))
 
@@ -160,10 +181,7 @@ def test_per_file_mode_groups_on_file(spark, tmp_path):
         p = tmp_path / f"part{i}.log"
         p.write_text("\n".join(part) + "\n")
         files.append(str(p))
-    batch, expr = _both(
-        spark, _fmt([KEY] + FIELDS), files=files, merge_results=False
-    )
-    _assert_same(batch, expr)
+    batch = _batch(spark, _fmt([KEY] + FIELDS), files=files, merge_results=False)
     want = {
         (f"part{i}.log", gid): row
         for i, part in enumerate(parts)
@@ -173,52 +191,44 @@ def test_per_file_mode_groups_on_file(spark, tmp_path):
 
 
 def test_union_limit_with_union_count(spark):
-    batch, expr = _both(
-        spark, _fmt([KEY] + FIELDS), lines=LINES, union_limit=2
-    )
-    _assert_same(batch, expr)
+    batch = _batch(spark, _fmt([KEY] + FIELDS), lines=LINES, union_limit=2)
     _assert_matches(batch, _truth(LINES, limit=2))
 
 
 @pytest.mark.parametrize("with_histograms", [True, False])
 def test_store_content_in_the_same_aggregation(spark, with_histograms):
     fields = FIELDS if with_histograms else FIELDS[2:]
-    batch, expr = _both(
-        spark, _fmt([KEY] + fields), lines=LINES, store_content=True
-    )
-    for rows in (batch, expr):
-        for r in rows.values():
-            r["content"] = sorted(r["content"])
-    _assert_same(batch, expr)
+    batch = _batch(spark, _fmt([KEY] + fields), lines=LINES, store_content=True)
     want = defaultdict(list)
     for ln in LINES:
         want[ln.split(",")[0]].append(ln)
-    assert {gid: r["content"] for gid, r in batch.items()} == {
+    assert {gid: sorted(r["content"]) for gid, r in batch.items()} == {
         gid: sorted(v) for gid, v in want.items()
     }
 
 
 @pytest.mark.parametrize("keyed", [True, False])
-def test_match_filter_empties_the_input(spark, keyed):
+def test_match_filter_empties_the_input(spark, tmp_path, keyed):
     nomatch = {"name": "m", "pos": 6, "type": "string",
                "match": {"match_str": "no-such-status"}}
     fields = ([KEY] if keyed else []) + FIELDS + [nomatch]
-    batch, expr = _both(spark, _fmt(fields), lines=LINES)
-    _assert_same(batch, expr)
+    batch, streamed = _both(spark, tmp_path, _fmt(fields), LINES)
+    _assert_same(batch, streamed)
     if keyed:
         assert batch == {}
     else:
         # a global aggregate over no rows is still one row
-        (row,) = batch.values()
-        assert row["logs"] == 0 and row["c_count"] == 0
-        assert row["n_counts"] == {} and row["s_counts"] == {}
-        assert row["iu"] == [] and row["su"] == []
-        assert row["v_sum"] is None and row["v_var"] == 0.0
+        for rows in (batch, streamed):
+            (row,) = rows.values()
+            assert row["logs"] == 0 and row["c_count"] == 0
+            assert row["n_counts"] == {} and row["s_counts"] == {}
+            assert row["iu"] == [] and row["su"] == []
+            assert row["v_sum"] is None and row["v_var"] == 0.0
 
 
-def test_null_union_count_value(spark):
+def test_null_union_count_value(spark, tmp_path):
     """A union_count value that parses to null (a k/v field absent
-    from the payload) cannot be a map key: both strategies skip it, as
+    from the payload) cannot be a map key: batch and stream skip it, as
     the A8 unions skip nulls, and count the line in ``logs``."""
     fmt = _fmt([
         KEY,
@@ -227,14 +237,9 @@ def test_null_union_count_value(spark):
          "aggregation": "union_count"},
     ])
     lines = ["a,p-> user=u1", "a,p-> user=u2", "a,p-> t=q", "b,p-> user=u1"]
-    for got in _both(spark, fmt, lines=lines):
+    for got in _both(spark, tmp_path, fmt, lines):
         assert {g: (r["logs"], r["user_counts"]) for g, r in got.items()} == {
             "a": (3, {"u1": 1, "u2": 1}),
             "b": (1, {"u1": 1}),
         }
 
-
-def test_unknown_union_count_strategy_rejected(spark):
-    with pytest.raises(ValueError, match="union_count_strategy"):
-        MiwJob(_fmt([KEY] + FIELDS), lines=LINES,
-               union_count_strategy="two_phase").result(spark)
